@@ -30,27 +30,11 @@ object Checkpoints {
 
   val DirConf = "spark.graft.checkpointDir"
 
-  /** Plan-inspection/test hook: when "true", [[stable]] and [[pinned]]
-    * return their input unchanged so physical plans are NOT truncated at
-    * checkpoint boundaries (a truncated plan hides its sub-pipeline from
-    * plan-shape assertions). Never set it in production pipelines —
-    * iterative plans re-grow exponentially without truncation.
-    */
-  val DisabledConf = "spark.graft.checkpoint.disabled"
-
   private val tracked =
     new java.util.concurrent.ConcurrentLinkedQueue[WeakReference[RDD[_]]]()
 
-  /** Plan-inspection mode (see [[DisabledConf]]) — public so sibling
-    * lineage-cutting helpers ([[Scans.localizeSmall]] call sites) can
-    * honor the same hook.
-    */
-  def isDisabled(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption(DisabledConf).contains("true")
-
   def stable(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    if (isDisabled(spark)) return df
     // idempotent: a plan that IS already a bare checkpoint/local relation
     // has no lineage to truncate — re-checkpointing it would only add a
     // materialization action and another block set (the double-stable
@@ -132,27 +116,5 @@ object Checkpoints {
     var n = 0
     while (it.hasNext) if (it.next().get != null) n += 1
     n
-  }
-
-  /** Checkpoint WITHOUT freeAll tracking — for memoized pipeline
-    * results that must stay valid ACROSS queries in a session (e.g. the
-    * shared LSH-cluster result q55/q59 both read). Pin only small final
-    * results: pinned blocks live until the RDD handle is GC'd (the memo
-    * holds it) or the session ends.
-    */
-  def pinned(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (isDisabled(spark)) return df
-    spark.conf.getOption(DirConf) match {
-      case Some(dir) if dir.nonEmpty =>
-        spark.sparkContext.setCheckpointDir(dir)
-        // persist-first for the same reason as stable(): an uncached
-        // reliable checkpoint recomputes the whole lineage for the write
-        val cached = df.persist()
-        val out = cached.checkpoint(eager = true)
-        cached.unpersist(blocking = false)
-        out
-      case _ => df.localCheckpoint(eager = true)
-    }
   }
 }

@@ -26,11 +26,7 @@ object Scans {
     * order-sensitive double fold.
     */
   def fanOut(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    // measurement/ops hook: `graft.scan.fanOut=off` disables the floor
-    // wholesale (the r18 8-vs-32-core cost/benefit A/B runs both ways)
-    if (spark.conf.getOption("graft.scan.fanOut").contains("off")) return df
-    val p = spark.sparkContext.defaultParallelism
+    val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
@@ -47,9 +43,6 @@ object Scans {
     */
   def localizeSmall(df: DataFrame,
                     maxLocalBytes: Long = 8L << 20): DataFrame = {
-    // honor the plan-inspection hook exactly like Checkpoints.stable:
-    // specs that disable lineage truncation must see the full pipeline
-    if (Checkpoints.isDisabled(df.sparkSession)) return df
     val spark = df.sparkSession
     val rows = df.collect()
     // Representation is decided by MEASURED bytes, not row count: a

@@ -107,10 +107,7 @@ object Dedup {
       .filter(size(col("hs")) > 0)
       // sig stays a NAMED intermediate: bandKeys references the
       // signature once per band, so inlining the minhash tree into it
-      // would duplicate that tree per band key — in plan-inspection mode
-      // (checkpoints disabled, nothing truncates) iterative consumers
-      // then multiply the duplication per round (measured: OOM while
-      // copying the un-truncated nearDupClusters plan)
+      // would duplicate that tree per band key
       .withColumn("sig", TextHash.minhashFromHashes(col("hs"), numPerms))
       .withColumn("bkeys", TextHash.bandKeys(col("sig"), bands, numPerms / bands))
       .select(col("doc_id"), col("hs"), col("bkeys"))

@@ -115,41 +115,6 @@ object SemanticDedup {
     kept.select(out: _*)
   }
 
-  /** Multi-probe variant (q96): each vector joins its `nProbe` nearest
-    * clusters for PAIR GENERATION, so duplicate pairs straddling a
-    * Voronoi boundary — structurally invisible to vanilla SemDeDup,
-    * which both [[dedup]] and the paper restrict away — become
-    * within-cluster candidates. The dedup decision is unchanged in
-    * kind: connected components of the τ-graph, keep = group-min.
-    * Every EDGE is still probe-cluster-confined (the pair join is keyed
-    * on the cluster), but a NODE sits in nProbe clusters, so components
-    * span clusters through shared vectors — exactly
-    * [[Dedup.blockBridgedComponents]]' shape: one-shuffle in-task
-    * union-find per probe cluster, then the min-label fixed-point over
-    * only the CROSS-CLUSTER quotient graph (≤ one link per multi-probe
-    * vector), never over the corpus-sized edge set (VERDICT r13
-    * What's-wrong #1). A pair sharing both probes surfaces once per
-    * shared cluster — no dedup needed: union-find is idempotent under
-    * duplicate edges and the quotient merges the two local components;
-    * labels are the component min id under both this and the global
-    * fixed-point plan. Reported cluster = the rank-1 assignment.
-    */
-  def dedupMultiProbe(corpus: DataFrame, k: Int, iters: Int, tau: Double,
-                      nProbe: Int = 2, idCol: String = "vec_id",
-                      embCol: String = "embedding"): DataFrame = {
-    val centroids = IvfSearch.trainCentroids(corpus, k, iters, idCol, embCol)
-    val multi = IvfSearch.buildIndexMultiProbe(
-      corpus.select(col(idCol), col(embCol)), centroids, embCol, nProbe)
-    val pairs = semanticPairs(multi, tau, probesCol = Some("probes"))
-      .select("cluster", "id_a", "id_b")
-    val groups = Dedup.blockBridgedComponents(pairs, blockCol = "cluster",
-      aCol = "id_a", bCol = "id_b")
-    multi.filter(col("probe_rank") === 1)
-      .join(groups.select(col("doc_id").as(idCol), col("is_canonical")), Seq(idCol), "left")
-      .select(col(idCol), col("cluster").as("ivf_cluster"),
-        coalesce(col("is_canonical"), lit(true)).as("kept"))
-  }
-
   /** Full pipeline: every corpus vector annotated with its IVF cluster
     * and whether semantic dedup keeps it (singletons and duplicate-group
     * minima survive). Deterministic end to end.

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -356,6 +356,37 @@ object SemanticIndex {
     else body(None)
   }
 
+  /** Checkpoint a batch's centroid assignment and return it with the
+    * affected-cluster set, warning when the batch reads stale. Both ride
+    * the checkpoint as observed metrics: `collect_set` of the assigned
+    * clusters (bounded by min(|assignment rows|, k), the boundedness
+    * class of the centroid collect) and the mean assigned cosine over
+    * the rows `rank1` selects, priced by a broadcast centroid join in the
+    * same materialization. The mean equals [[meanAssignedSim]] up to
+    * float summation order; the contract compares it against a 0.10
+    * tolerance, not bits. The returned frame has the kernel's exact
+    * column set and order: everything downstream, including the
+    * persisted index files, sees the unadorned assignment schema.
+    */
+  private def pricedAssignment(assignedRaw: DataFrame, centroids: DataFrame,
+                               meta: Meta, rank1: Column)
+      : (DataFrame, Set[Int]) = {
+    val sim = when(rank1, dot(col("embedding"), col("centroid")) /
+      (norm(col("embedding")) * norm(col("centroid"))))
+    val (priced, m) = graft.core.Observed(
+      assignedRaw.join(broadcast(centroids), Seq("cluster")).withColumn("__sim", sim),
+      collect_set(col("cluster")).as("cs"), sum(col("__sim")).as("s"),
+      coalesce(sum(when(rank1, 1L)), lit(0L)).as("n"))(graft.core.Checkpoints.stable)
+    val n = m.getAs[Long]("n")
+    val batchSim = if (n == 0L) Double.NaN else m.getAs[Double]("s") / n
+    if (!batchSim.isNaN && batchSim < meta.initMeanSim - StaleTolerance)
+      System.err.println(f"[semindex] STALE WARNING: batch mean assigned cosine " +
+        f"$batchSim%.4f vs init ${meta.initMeanSim}%.4f - retrain + rebuild advised " +
+        "(see SemanticIndex staleness contract)")
+    (priced.select(assignedRaw.columns.toSeq.map(col): _*),
+      m.getAs[scala.collection.Seq[Int]]("cs").toSet)
+  }
+
   private def ingestRank1(newBatch: DataFrame, root: String,
                           st: graft.storage.IndexState, meta: Meta,
                           centroids: DataFrame, append: Boolean,
@@ -363,51 +394,12 @@ object SemanticIndex {
                           lease: Option[graft.storage.SeriesLease.Handle]): DataFrame = {
     val spark = newBatch.sparkSession
     // ZERO extra driver round-trips for the affected-cluster set and the
-    // staleness datum: both ride the assignment checkpoint as observed
-    // metrics (collect_set is bounded by min(|batch|, k) — the same
-    // boundedness class as the centroid collect — and the global mean
-    // equals meanAssignedSim up to float summation order; the contract
-    // compares against a 0.10 tolerance, not bits). The broadcast
-    // centroid join that prices each row's assigned cosine is folded
-    // into the same materialization. Formerly one collect job after the
-    // checkpoint (and before r17, two separate actions).
+    // staleness datum: both ride the assignment checkpoint (see
+    // [[pricedAssignment]])
     val assignedRaw = IvfSearch.buildIndex(
       newBatch.select(col(idCol).as("vec_id"), col(embCol).as("embedding")),
       centroids, "embedding")
-    val assignedCols = assignedRaw.columns.toSeq
-    val obs = org.apache.spark.sql.Observation()
-    val assignedW = assignedRaw
-      .join(broadcast(centroids), Seq("cluster"))
-      .withColumn("__sim", dot(col("embedding"), col("centroid")) /
-        (norm(col("embedding")) * norm(col("centroid"))))
-      .observe(obs, collect_set(col("cluster")).as("cs"),
-        sum(col("__sim")).as("s"), count(lit(1)).as("n"))
-    // restore the kernel's exact column set/order: the checkpoint carries
-    // the priced rows, but everything downstream (including the persisted
-    // index files) must see the unadorned assignment schema
-    val assigned = graft.core.Checkpoints.stable(assignedW)
-      .select(assignedCols.map(col): _*)
-    val (affected: Set[Int], batchSim: Double) =
-      if (graft.core.Checkpoints.isDisabled(spark)) {
-        // plan-spec mode: nothing materializes here, so the observation
-        // never fills — fall back to the explicit bounded collect
-        val perCluster = assignedW.groupBy("cluster")
-          .agg(sum(col("__sim")).as("s"), count(lit(1)).as("n")).collect()
-        val nTot = perCluster.map(_.getLong(2)).sum
-        (perCluster.map(_.getInt(0)).toSet,
-          if (nTot == 0) Double.NaN
-          else perCluster.map(r => if (r.isNullAt(1)) 0.0 else r.getDouble(1)).sum / nTot)
-      } else {
-        val m = obs.get
-        val cs = m("cs").asInstanceOf[scala.collection.Seq[Any]]
-          .map(_.asInstanceOf[Int]).toSet
-        val n = m("n").asInstanceOf[Long]
-        (cs, if (n == 0L) Double.NaN else m("s").asInstanceOf[Double] / n)
-      }
-    if (!batchSim.isNaN && batchSim < meta.initMeanSim - StaleTolerance)
-      System.err.println(f"[semindex] STALE WARNING: batch mean assigned cosine " +
-        f"$batchSim%.4f vs init ${meta.initMeanSim}%.4f - retrain + rebuild advised " +
-        "(see SemanticIndex staleness contract)")
+    val (assigned, affected) = pricedAssignment(assignedRaw, centroids, meta, lit(true))
     val existing = readSub(spark, root, st, "index", indexSchema, Some(affected))
     val oldLabels = readSub(spark, root, st, "labels", labelSchema, Some(affected))
     // idempotence: ids already in the index are ABSORBED (first write
@@ -494,48 +486,14 @@ object SemanticIndex {
                                lease: Option[graft.storage.SeriesLease.Handle]): DataFrame = {
     val spark = newBatch.sparkSession
     // metrics ride the assignment checkpoint exactly as in
-    // [[ingestRank1]]: affected = every PROBED cluster (collect_set,
-    // bounded by min(nProbe·|batch|, k)); the staleness datum averages
-    // over rank-1 rows only (tolerance-compared, not bit-compared)
+    // [[ingestRank1]]: affected = every PROBED cluster (bounded by
+    // min(nProbe·|batch|, k)); the staleness datum averages over rank-1
+    // rows only
     val assignedRaw = IvfSearch.buildIndexMultiProbe(
       newBatch.select(col(idCol).as("vec_id"), col(embCol).as("embedding")),
       centroids, "embedding", meta.nProbe)
-    val assignedCols = assignedRaw.columns.toSeq
-    val obs = org.apache.spark.sql.Observation()
-    val rank1Sim = when(col("probe_rank") === 1,
-      dot(col("embedding"), col("centroid")) /
-        (norm(col("embedding")) * norm(col("centroid"))))
-    val assignedW = assignedRaw
-      .join(broadcast(centroids), Seq("cluster"))
-      .withColumn("__sim", rank1Sim)
-      .observe(obs, collect_set(col("cluster")).as("cs"),
-        sum(col("__sim")).as("s"),
-        coalesce(sum(when(col("probe_rank") === 1, 1L)), lit(0L)).as("n"))
-    val assigned = graft.core.Checkpoints.stable(assignedW)
-      .select(assignedCols.map(col): _*)
-    val (affected: Set[Int], batchSim: Double) =
-      if (graft.core.Checkpoints.isDisabled(spark)) {
-        // plan-spec mode fallback (see ingestRank1)
-        val perCluster = assignedW.groupBy("cluster")
-          .agg(sum(col("__sim")).as("s"),
-            coalesce(sum(when(col("probe_rank") === 1, 1L)), lit(0L)).as("n"))
-          .collect()
-        val nTot = perCluster.map(_.getLong(2)).sum
-        (perCluster.map(_.getInt(0)).toSet,
-          if (nTot == 0) Double.NaN
-          else perCluster.map(r => if (r.isNullAt(1)) 0.0 else r.getDouble(1)).sum / nTot)
-      } else {
-        val m = obs.get
-        val cs = m("cs").asInstanceOf[scala.collection.Seq[Any]]
-          .map(_.asInstanceOf[Int]).toSet
-        val n = m("n").asInstanceOf[Long]
-        val s = m("s") match { case null => 0.0; case x => x.asInstanceOf[Double] }
-        (cs, if (n == 0L) Double.NaN else s / n)
-      }
-    if (!batchSim.isNaN && batchSim < meta.initMeanSim - StaleTolerance)
-      System.err.println(f"[semindex] STALE WARNING: batch mean assigned cosine " +
-        f"$batchSim%.4f vs init ${meta.initMeanSim}%.4f - retrain + rebuild advised " +
-        "(see SemanticIndex staleness contract)")
+    val (assigned, affected) = pricedAssignment(assignedRaw, centroids, meta,
+      col("probe_rank") === 1)
     val existing = readSub(spark, root, st, "index", mpIndexSchema, Some(affected))
     val oldLabels = readSub(spark, root, st, "labels", labelSchema, Some(affected))
     // idempotence: replayed ids are ABSORBED exactly as in the rank-1

@@ -142,9 +142,8 @@ object CorpusStatsOps {
     *
     * Scale shape: clusters ≪ corpus (only docs with an LSH edge);
     * the token-count join and the per-cluster window both shuffle on
-    * ids, never on text. The cluster sub-pipeline is the SHARED q55
-    * memo (LlmOps.sharedClusters) — one LSH+clustering run per session,
-    * not one per consuming query.
+    * ids, never on text. The cluster sub-pipeline is q55's
+    * ([[LlmOps.lshClusters]]), built afresh per execution.
     */
   val clusterKeep: Q = Q(
     "q59_cluster_keep",
@@ -165,7 +164,7 @@ object CorpusStatsOps {
        |FROM ranked WHERE rn = 1
        |ORDER BY cluster""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    val clusters = LlmOps.sharedClusters(s, d)
+    val clusters = LlmOps.lshClusters(s, d)
       .select(col("doc_id"), col("cluster"))
     val toks = docs.select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("n_tokens"))

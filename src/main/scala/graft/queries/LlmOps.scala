@@ -187,38 +187,19 @@ object LlmOps {
       .orderBy("bucket")
   }
 
-  /** The q55/q59 shared sub-pipeline: LSH pairs at jaccard ≥ 0.5 →
-    * 4-round clustering, computed ONCE per (session, data dir) and kept
-    * as a PINNED checkpoint (survives `Checkpoints.freeAll` between
-    * queries — the result is tiny, ids+labels only). Without this a
-    * 64-query session runs the most expensive pipeline in the suite
-    * twice.
+  /** The q55/q59 sub-pipeline: LSH pairs at jaccard ≥ 0.5 → 4-round
+    * clustering. Each query builds its own — no result is memoized
+    * across queries.
     */
-  private val clusterMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.SparkSession, org.apache.spark.sql.DataFrame)]()
-
-  private[queries] def sharedClusters(
+  private[queries] def lshClusters(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    // evict entries whose session died (stopped context) so a harness
-    // that recreates sessions doesn't accumulate dead plans
-    clusterMemo.forEach((k, v) =>
-      if (v._1.sparkContext.isStopped) clusterMemo.remove(k, v))
-    def build() = {
-      val pairs = Dedup.minhashLsh(Tables.documents(s, d))
-        .filter(col("jaccard") >= 0.5)
-      // assertConverged: if a component ever exceeds the diameter 4
-      // rounds cover, fail loudly (both engines would otherwise agree on
-      // identically-wrong half-merged clusters). The probe costs one
-      // extra round over the tiny (id,label) set.
-      (s, graft.core.Checkpoints.pinned(
-        Dedup.nearDupClusters(pairs, rounds = 4, assertConverged = true)))
-    }
-    val key = System.identityHashCode(s) + "|" + d
-    val cached = clusterMemo.computeIfAbsent(key, _ => build())
-    // identityHashCode can collide across sessions in a long-lived JVM —
-    // trust the entry only if it is literally this session's
-    if (cached._1 eq s) cached._2
-    else { val fresh = build(); clusterMemo.put(key, fresh); fresh._2 }
+    val pairs = Dedup.minhashLsh(Tables.documents(s, d))
+      .filter(col("jaccard") >= 0.5)
+    // assertConverged: if a component ever exceeds the diameter 4
+    // rounds cover, fail loudly (both engines would otherwise agree on
+    // identically-wrong half-merged clusters). The probe costs one
+    // extra round over the tiny (id,label) set.
+    Dedup.nearDupClusters(pairs, rounds = 4, assertConverged = true)
   }
 
   /** Near-dup clustering (the dedup DECISION step): LSH pairs at
@@ -236,7 +217,7 @@ object LlmOps {
        |SELECT id AS doc_id, label AS cluster, (id = label) AS is_canonical
        |FROM l4
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    sharedClusters(s, d).orderBy("doc_id")
+    lshClusters(s, d).orderBy("doc_id")
   }
 
   /** q69's persisted band index, built ONCE per (session, data dir):

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -48,6 +49,45 @@ object SemanticOps {
   private def duckDot(a: String, b: String): String =
     s"list_aggregate(list_transform(list_zip($a, $b), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')"
 
+  /** The per-cluster dedup aggregate q95–q101 declare, over a decisions
+    * frame (`vec_id`, `kept`, and `clusterCol`): `ivf_cluster`,
+    * `n_members`, `n_kept`, `sum_kept_ids` and, when `extraKept` names
+    * one, the kept count among the rows its predicate selects. The
+    * aggregate is checkpointed in ONE materialization that also observes
+    * the premise counts `total`, `dropped` and — with `extraKept` —
+    * `extra_n` (rows the predicate selects). `checks` runs the query's
+    * own premises on that observed row first; then dedup must have
+    * dropped at least one vector and not all of them, or the call fails
+    * with "`premise` dropped d of t — no work done". How much is dropped
+    * depends on the corpus's similarity regime (sparse chains on the
+    * driver data, dense blobs on Gaussian-cluster synthetics), so the
+    * machinery premise is only that dedup DID work. Unordered.
+    */
+  private[queries] def dedupSummary(decisions: DataFrame, premise: String,
+                                    clusterCol: String = "cluster",
+                                    extraKept: Option[(String, Column)] = None,
+                                    checks: Row => Unit = _ => ()): DataFrame = {
+    val kept = col("kept")
+    val metrics = Seq(count(lit(1)).as("total"),
+      coalesce(sum(when(!kept, 1L)), lit(0L)).as("dropped")) ++
+      extraKept.map { case (_, p) => coalesce(sum(when(p, 1L)), lit(0L)).as("extra_n") }
+    val aggs = Seq(coalesce(sum(when(kept, 1L)), lit(0L)).cast("long").as("n_kept"),
+      sum(when(kept, col("vec_id"))).cast("long").as("sum_kept_ids")) ++
+      extraKept.map { case (name, p) =>
+        coalesce(sum(when(kept && p, 1L)), lit(0L)).cast("long").as(name) }
+    val (grouped, m) = graft.core.Observed(decisions, metrics: _*) { df =>
+      graft.core.Checkpoints.stable(df
+        .groupBy(col(clusterCol).cast("long").as("ivf_cluster"))
+        .agg(count(lit(1)).as("n_members"), aggs: _*))
+    }
+    checks(m)
+    val total = m.getAs[Long]("total")
+    val dropped = m.getAs[Long]("dropped")
+    require(dropped >= 1 && dropped < total,
+      s"$premise dropped $dropped of $total — no work done")
+    grouped
+  }
+
   val semanticDedup: Q = Q(
     "q95_semantic_dedup",
     s"""WITH RECURSIVE ${IvfSearch.duckIndexCtesK(KSql, Iters)},
@@ -75,38 +115,15 @@ object SemanticOps {
        |FROM idx i LEFT JOIN dropped d ON i.vec_id = d.id
        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     // ONE traversal of the dedup pipeline: the GROUPED result (≤ k rows)
-    // is checkpointed, the premise rides the same materialization as an
-    // observed metric pair (exact integer counts — identical to the
-    // former corpus-wide premise agg), and the declared orderBy runs
-    // over the tiny checkpoint
+    // is checkpointed with the premise counts observed on it, and the
+    // declared orderBy runs over the tiny checkpoint
     val corpus = Tables.embeddings(s, d)
     // corpus size from parquet footers (Tables.rowCount — exact, a
     // driver-side metadata read), not a count() action per execution
     val k = SemanticDedup.adaptiveK(Tables.rowCount(s, d, "embeddings"), TargetCluster)
-    val obs = org.apache.spark.sql.Observation()
-    val annotated = SemanticDedup.dedup(corpus, k, Iters, Tau)
-      .observe(obs, count(lit(1)).as("total"),
-        coalesce(sum(when(!col("kept"), 1L)), lit(0L)).as("dropped"))
-    val grouped = graft.core.Checkpoints.stable(annotated
-      .groupBy(col("ivf_cluster").cast("long").as("ivf_cluster"))
-      .agg(count(lit(1)).as("n_members"),
-        coalesce(sum(when(col("kept"), 1L)), lit(0L)).cast("long").as("n_kept"),
-        sum(when(col("kept"), col("vec_id"))).cast("long").as("sum_kept_ids")))
-    // plan-spec mode (checkpoint disabled) never materialized the
-    // observation — fall back to the former explicit agg
-    val (total, dropped) =
-      if (graft.core.Checkpoints.isDisabled(s)) {
-        val p = annotated.agg(count(lit(1)),
-          coalesce(sum(when(!col("kept"), 1L)), lit(0L))).head(); (p.getLong(0), p.getLong(1))
-      } else { val m = obs.get
-        (m("total").asInstanceOf[Long], m("dropped").asInstanceOf[Long]) }
-    // how much is dropped depends on the corpus's similarity regime
-    // (sparse chains on the driver data, dense blobs on Gaussian-cluster
-    // synthetics) — the machinery premise is only that dedup DID work;
-    // component convergence is guaranteed by the fixed-point iteration
-    require(dropped >= 1 && dropped < total,
-      s"q95 premise: semantic dedup dropped $dropped of $total — no work done")
-    grouped.orderBy("ivf_cluster")
+    dedupSummary(SemanticDedup.dedup(corpus, k, Iters, Tau),
+      "q95 premise: semantic dedup", clusterCol = "ivf_cluster")
+      .orderBy("ivf_cluster")
   }
 
   /** q96: MULTI-PROBE semantic dedup — the boundary-recall fix for q95's
@@ -183,57 +200,36 @@ object SemanticOps {
     // (536 M edges at sf10), so materializing it costs more than its
     // single streaming traversal below — map-side contraction inside
     // blockBridgedComponents collapses it to node-count rows in one pass
-    val crossObs = org.apache.spark.sql.Observation()
     val pairs = SemanticDedup.semanticPairs(multi, Tau, probesCol = Some("probes"))
       .select("cluster", "id_a", "id_b", "crosses")
-      // the value premise rides the pair traversal as an observed metric
-      // instead of a second (limit-1) execution of the pair join: a pair
-      // whose RANK-1 clusters differ is exactly the candidate
-      // single-probe SemDeDup (q95) cannot generate
-      .observe(crossObs, coalesce(sum(when(col("crosses"), 1L)), lit(0L)).as("n_cross"))
     val rank1 = multi.filter(col("probe_rank") === 1).select(col("vec_id"), col("cluster"))
 
     // one-shuffle union-find per probe cluster (map-side contracted to
     // node-count rows), then the quotient solve over ONLY the
     // cross-cluster links — never the corpus-sized edge set (VERDICT
     // r13 What's-wrong #1). Building it materializes the pair pipeline
-    // (its phase-1 labels are checkpointed inside), which fills crossObs.
-    val groups = Dedup.blockBridgedComponents(pairs, blockCol = "cluster",
-      aCol = "id_a", bCol = "id_b")
-    val cross = if (graft.core.Checkpoints.isDisabled(s))
-        pairs.filter(col("crosses")).limit(1).count() // plan-spec mode
-      else crossObs.get("n_cross").asInstanceOf[Long]
-    require(cross >= 1,
+    // (its phase-1 labels are checkpointed inside), so the value premise
+    // rides the pair traversal as an observed metric instead of a second
+    // (limit-1) execution of the pair join: a pair whose RANK-1 clusters
+    // differ is exactly the candidate single-probe SemDeDup (q95) cannot
+    // generate
+    val (groups, cross) = graft.core.Observed(pairs,
+      coalesce(sum(when(col("crosses"), 1L)), lit(0L)).as("n_cross")) {
+      Dedup.blockBridgedComponents(_, blockCol = "cluster", aCol = "id_a", bCol = "id_b")
+    }
+    require(cross.getAs[Long]("n_cross") >= 1,
       s"q96 premise: no candidate pair crosses rank-1 clusters — " +
         "multi-probe found nothing beyond q95's reach")
 
-    val obs = org.apache.spark.sql.Observation()
-    val annotated = rank1
+    val grouped = dedupSummary(rank1
       .join(groups.select(col("doc_id").as("vec_id"), col("is_canonical")), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster"),
-        coalesce(col("is_canonical"), lit(true)).as("kept"))
-      .observe(obs, count(lit(1)).as("total"),
-        coalesce(sum(when(!col("kept"), 1L)), lit(0L)).as("dropped"))
-    val grouped = graft.core.Checkpoints.stable(annotated
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n_members"),
-        coalesce(sum(when(col("kept"), 1L)), lit(0L)).cast("long").as("n_kept"),
-        sum(when(col("kept"), col("vec_id"))).cast("long").as("sum_kept_ids")))
-    val (total, dropped) =
-      if (graft.core.Checkpoints.isDisabled(s)) {
-        val p = annotated.agg(count(lit(1)),
-          coalesce(sum(when(!col("kept"), 1L)), lit(0L))).head(); (p.getLong(0), p.getLong(1))
-      } else { val m = obs.get
-        (m("total").asInstanceOf[Long], m("dropped").asInstanceOf[Long]) }
-    require(dropped >= 1 && dropped < total,
-      s"q96 premise: dedup dropped $dropped of $total — no work done")
-
+        coalesce(col("is_canonical"), lit(true)).as("kept")), "q96 premise: dedup")
     val probe2 = multi.filter(col("probe_rank") === 2)
-      .groupBy("cluster").agg(count(lit(1)).as("__np2"))
+      .groupBy(col("cluster").cast("long").as("ivf_cluster")).agg(count(lit(1)).as("__np2"))
     grouped
-      .join(probe2, Seq("cluster"), "left")
-      .select(col("cluster").cast("long").as("ivf_cluster"),
-        col("n_members"), col("n_kept"), col("sum_kept_ids"),
+      .join(probe2, Seq("ivf_cluster"), "left")
+      .select(col("ivf_cluster"), col("n_members"), col("n_kept"), col("sum_kept_ids"),
         coalesce(col("__np2"), lit(0L)).cast("long").as("n_probe2"))
       .orderBy("ivf_cluster")
   }
@@ -244,6 +240,10 @@ object SemanticOps {
   private val KSqlTrain =
     s"(SELECT GREATEST(8, CAST(CEIL(COUNT(*) / $TargetCluster.0) AS BIGINT)) " +
       "FROM embeddings WHERE vec_id % 4 <> 0)"
+
+  // q97/q98's extra kept count: the new batch is the vec_id % 4 == 0 slice
+  private val NewKept: Option[(String, Column)] =
+    Some("n_new_kept" -> (col("vec_id") % 4 === 0))
 
   /** q97's persisted semantic index, built ONCE per (session, data dir):
     * [[SemanticIndex.init]] freezes centroids trained on the "existing
@@ -332,36 +332,12 @@ object SemanticOps {
     val upd = graft.core.Checkpoints.stable(
       SemanticIndex.ingest(batch, root, append = false))
     val aff = upd.select("cluster").distinct()
-    val obs = org.apache.spark.sql.Observation()
-    val full = SemanticIndex.decisions(s, root)
+    // premises ride the ONE materialization of the composed corpus
+    dedupSummary(SemanticIndex.decisions(s, root)
       .join(aff, Seq("cluster"), "left_anti")
-      .unionByName(upd)
-      // premises ride the ONE materialization of the composed corpus
-      // (observed metrics on the grouped checkpoint below) — formerly a
-      // separate corpus-wide agg action
-      .observe(obs, count(lit(1)).as("total"),
-        coalesce(sum(when(!col("kept"), 1L)), lit(0L)).as("dropped"),
-        coalesce(sum(when(col("vec_id") % 4 === 0, 1L)), lit(0L)).as("batch_n"))
-    val grouped = graft.core.Checkpoints.stable(full
-      .groupBy(col("cluster").cast("long").as("ivf_cluster"))
-      .agg(count(lit(1)).as("n_members"),
-        coalesce(sum(when(col("kept"), 1L)), lit(0L)).cast("long").as("n_kept"),
-        sum(when(col("kept"), col("vec_id"))).cast("long").as("sum_kept_ids"),
-        coalesce(sum(when(col("kept") && col("vec_id") % 4 === 0, 1L)), lit(0L))
-          .cast("long").as("n_new_kept")))
-    val (total, dropped, batchN) =
-      if (graft.core.Checkpoints.isDisabled(s)) { // plan-spec mode
-        val p = full.agg(count(lit(1)),
-          coalesce(sum(when(!col("kept"), 1L)), lit(0L)),
-          coalesce(sum(when(col("vec_id") % 4 === 0, 1L)), lit(0L))).head()
-        (p.getLong(0), p.getLong(1), p.getLong(2))
-      } else { val m = obs.get
-        (m("total").asInstanceOf[Long], m("dropped").asInstanceOf[Long],
-          m("batch_n").asInstanceOf[Long]) }
-    require(batchN >= 1, "q97 premise: the new batch is empty")
-    require(dropped >= 1 && dropped < total,
-      s"q97 premise: dedup dropped $dropped of $total — no work done")
-    grouped.orderBy("ivf_cluster")
+      .unionByName(upd), "q97 premise: dedup", extraKept = NewKept,
+      checks = m => require(m.getAs[Long]("extra_n") >= 1, "q97 premise: the new batch is empty"))
+      .orderBy("ivf_cluster")
   }
 
   /** q98's persisted MULTI-PROBE semantic index (n_probe=2), built ONCE
@@ -462,32 +438,10 @@ object SemanticOps {
     require(bridges >= 1,
       "q98 premise: no cross-cluster bridge in the label state — " +
         "multi-probe ingest found nothing beyond q97's reach")
-    val obs = org.apache.spark.sql.Observation()
-    val full = SemanticIndex.decisionsMerged(s, root, dryLabels, batch)
-      // premises ride the ONE materialization (the grouped checkpoint)
-      .observe(obs, count(lit(1)).as("total"),
-        coalesce(sum(when(!col("kept"), 1L)), lit(0L)).as("dropped"),
-        coalesce(sum(when(col("vec_id") % 4 === 0, 1L)), lit(0L)).as("batch_n"))
-    val grouped = graft.core.Checkpoints.stable(full
-      .groupBy(col("cluster").cast("long").as("ivf_cluster"))
-      .agg(count(lit(1)).as("n_members"),
-        coalesce(sum(when(col("kept"), 1L)), lit(0L)).cast("long").as("n_kept"),
-        sum(when(col("kept"), col("vec_id"))).cast("long").as("sum_kept_ids"),
-        coalesce(sum(when(col("kept") && col("vec_id") % 4 === 0, 1L)), lit(0L))
-          .cast("long").as("n_new_kept")))
-    val (total, dropped, batchN) =
-      if (graft.core.Checkpoints.isDisabled(s)) { // plan-spec mode
-        val p = full.agg(count(lit(1)),
-          coalesce(sum(when(!col("kept"), 1L)), lit(0L)),
-          coalesce(sum(when(col("vec_id") % 4 === 0, 1L)), lit(0L))).head()
-        (p.getLong(0), p.getLong(1), p.getLong(2))
-      } else { val m = obs.get
-        (m("total").asInstanceOf[Long], m("dropped").asInstanceOf[Long],
-          m("batch_n").asInstanceOf[Long]) }
-    require(batchN >= 1, "q98 premise: the new batch is empty")
-    require(dropped >= 1 && dropped < total,
-      s"q98 premise: dedup dropped $dropped of $total — no work done")
-    grouped.orderBy("ivf_cluster")
+    dedupSummary(SemanticIndex.decisionsMerged(s, root, dryLabels, batch),
+      "q98 premise: dedup", extraKept = NewKept,
+      checks = m => require(m.getAs[Long]("extra_n") >= 1, "q98 premise: the new batch is empty"))
+      .orderBy("ivf_cluster")
   }
 
   // Corpus-adaptive K for the RETRAINED index (q99): retrain defaults
@@ -592,31 +546,11 @@ object SemanticOps {
        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     val root = retrainedSemRoot(s, d)
     val off = Tables.embeddings(s, d).agg(max("vec_id")).head().getLong(0)
-    val obs = org.apache.spark.sql.Observation()
-    val full = SemanticIndex.decisions(s, root)
-      .observe(obs, count(lit(1)).as("total"),
-        coalesce(sum(when(!col("kept"), 1L)), lit(0L)).as("dropped"),
-        coalesce(sum(when(col("vec_id") > off, 1L)), lit(0L)).as("ood_n"))
-    val grouped = graft.core.Checkpoints.stable(full
-      .groupBy(col("cluster").cast("long").as("ivf_cluster"))
-      .agg(count(lit(1)).as("n_members"),
-        coalesce(sum(when(col("kept"), 1L)), lit(0L)).cast("long").as("n_kept"),
-        sum(when(col("kept"), col("vec_id"))).cast("long").as("sum_kept_ids"),
-        coalesce(sum(when(col("kept") && col("vec_id") > off, 1L)), lit(0L))
-          .cast("long").as("n_ood_kept")))
-    val (total, dropped, oodN) =
-      if (graft.core.Checkpoints.isDisabled(s)) { // plan-spec mode
-        val p = full.agg(count(lit(1)),
-          coalesce(sum(when(!col("kept"), 1L)), lit(0L)),
-          coalesce(sum(when(col("vec_id") > off, 1L)), lit(0L))).head()
-        (p.getLong(0), p.getLong(1), p.getLong(2))
-      } else { val m = obs.get
-        (m("total").asInstanceOf[Long], m("dropped").asInstanceOf[Long],
-          m("ood_n").asInstanceOf[Long]) }
-    require(oodN >= 1, "q99 premise: the drifted regime is absent from the index")
-    require(dropped >= 1 && dropped < total,
-      s"q99 premise: dedup dropped $dropped of $total — no work done")
-    grouped.orderBy("ivf_cluster")
+    dedupSummary(SemanticIndex.decisions(s, root), "q99 premise: dedup",
+      extraKept = Some("n_ood_kept" -> (col("vec_id") > off)),
+      checks = m => require(m.getAs[Long]("extra_n") >= 1,
+        "q99 premise: the drifted regime is absent from the index"))
+      .orderBy("ivf_cluster")
   }
 
   /** q100's STREAMED semantic index, built ONCE per (session, data dir):
@@ -718,21 +652,6 @@ object SemanticOps {
        |FROM idx i LEFT JOIN dropped d ON i.vec_id = d.id
        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     val root = streamedSemRoot(s, d)
-    val obs = org.apache.spark.sql.Observation()
-    val full = SemanticIndex.decisions(s, s"$root/idx")
-      .observe(obs, count(lit(1)).as("total"),
-        coalesce(sum(when(!col("kept"), 1L)), lit(0L)).as("dropped"))
-    val grouped = graft.core.Checkpoints.stable(full
-      .groupBy(col("cluster").cast("long").as("ivf_cluster"))
-      .agg(count(lit(1)).as("n_members"),
-        coalesce(sum(when(col("kept"), 1L)), lit(0L)).cast("long").as("n_kept"),
-        sum(when(col("kept"), col("vec_id"))).cast("long").as("sum_kept_ids")))
-    val (total, dropped) =
-      if (graft.core.Checkpoints.isDisabled(s)) {
-        val p = full.agg(count(lit(1)),
-          coalesce(sum(when(!col("kept"), 1L)), lit(0L))).head(); (p.getLong(0), p.getLong(1))
-      } else { val m = obs.get
-        (m("total").asInstanceOf[Long], m("dropped").asInstanceOf[Long]) }
     // every vector exactly once: a lost micro-batch or a double-committed
     // replay is loud here before the hash gate even runs. The expected
     // count is the fixture-recorded capped-corpus count (expect.txt —
@@ -740,11 +659,13 @@ object SemanticOps {
     // `total` is the per-execution OBSERVED total of the streamed index.
     val expectN = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(root, "expect.txt")), "UTF-8").trim.toLong
-    require(total == expectN,
-      s"q100 premise: streamed index holds $total vectors, not the capped corpus ($expectN)")
-    require(dropped >= 1 && dropped < total,
-      s"q100 premise: dedup dropped $dropped of $total — no work done")
-    grouped.orderBy("ivf_cluster")
+    dedupSummary(SemanticIndex.decisions(s, s"$root/idx"), "q100 premise: dedup",
+      checks = { m =>
+        val total = m.getAs[Long]("total")
+        require(total == expectN,
+          s"q100 premise: streamed index holds $total vectors, not the capped corpus ($expectN)")
+      })
+      .orderBy("ivf_cluster")
   }
 
   /** q101's time-travel fixture, built ONCE per (session, data dir):
@@ -827,21 +748,6 @@ object SemanticOps {
       java.nio.file.Paths.get(root, "pin.txt")), "UTF-8").trim
       .split(" ").map(_.toLong)
     val idx = s"$root/idx"
-    val obs = org.apache.spark.sql.Observation()
-    val pinned = SemanticIndex.decisionsAsOf(s, idx, pin)
-      .observe(obs, count(lit(1)).as("total"),
-        coalesce(sum(when(!col("kept"), 1L)), lit(0L)).as("dropped"))
-    val grouped = graft.core.Checkpoints.stable(pinned
-      .groupBy(col("cluster").cast("long").as("ivf_cluster"))
-      .agg(count(lit(1)).as("n_members"),
-        coalesce(sum(when(col("kept"), 1L)), lit(0L)).cast("long").as("n_kept"),
-        sum(when(col("kept"), col("vec_id"))).cast("long").as("sum_kept_ids")))
-    val (total, dropped) =
-      if (graft.core.Checkpoints.isDisabled(s)) {
-        val p = pinned.agg(count(lit(1)),
-          coalesce(sum(when(!col("kept"), 1L)), lit(0L))).head(); (p.getLong(0), p.getLong(1))
-      } else { val m = obs.get
-        (m("total").asInstanceOf[Long], m("dropped").asInstanceOf[Long]) }
     // the premise IS the feature: the pinned view holds exactly the
     // prefix corpus while the LIVE index has since ingested the rest
     // and been retrained. Expected counts come from the fixture record
@@ -850,13 +756,15 @@ object SemanticOps {
     // still runs per execution: `total` rides the result traversal as
     // an observed metric, and the live-index count is a real read of
     // the current manifest state.
-    require(total == prefixN,
-      s"q101 premise: pinned view holds $total vectors, not the prefix corpus ($prefixN)")
-    require(SemanticIndex.decisions(s, idx).count() == corpusN,
-      "q101 premise: the live index must have moved past the pin")
-    require(dropped >= 1 && dropped < total,
-      s"q101 premise: dedup dropped $dropped of $total — no work done")
-    grouped.orderBy("ivf_cluster")
+    dedupSummary(SemanticIndex.decisionsAsOf(s, idx, pin), "q101 premise: dedup",
+      checks = { m =>
+        val total = m.getAs[Long]("total")
+        require(total == prefixN,
+          s"q101 premise: pinned view holds $total vectors, not the prefix corpus ($prefixN)")
+        require(SemanticIndex.decisions(s, idx).count() == corpusN,
+          "q101 premise: the live index must have moved past the pin")
+      })
+      .orderBy("ivf_cluster")
   }
 
   /** q102: ANN SERVING from the persisted incremental index — the
@@ -901,15 +809,10 @@ object SemanticOps {
        |WHERE rnk <= 3
        |ORDER BY q_id, rnk""".stripMargin) { (s, d) =>
     val root = persistedSemRoot(s, d)
-    val obs = org.apache.spark.sql.Observation()
-    val out = SemanticIndex.searchTopK(s, root,
+    val (got, m) = graft.core.Observed(SemanticIndex.searchTopK(s, root,
       Tables.embeddings(s, d).filter(col("vec_id") < 5), k = 3, nProbe = 3)
-      .select("q_id", "n_id", "rnk")
-      .observe(obs, count(lit(1)).as("n"))
-    val got = graft.core.Checkpoints.stable(out)
-    val n = if (graft.core.Checkpoints.isDisabled(s)) got.count() // plan-spec mode
-      else obs.get("n").asInstanceOf[Long]
-    require(n >= 5,
+      .select("q_id", "n_id", "rnk"), count(lit(1)).as("n"))(graft.core.Checkpoints.stable)
+    require(m.getAs[Long]("n") >= 5,
       "q102 premise: every query must rank neighbors from the probed cells")
     got.orderBy("q_id", "rnk")
   }

@@ -169,9 +169,9 @@ class IncrementalLshSpec extends SparkSpec {
     Dedup.initLshIndex(spark, root)
     Dedup.minhashLshIncremental(docs.filter(col("doc_id") % 2 === 0), root).count()
     val pin = Dedup.lshIndexSeq(root)
-    def pinned() = Dedup.lshIndexBands(spark, root, asOf = Some(pin))
+    def readPin() = Dedup.lshIndexBands(spark, root, asOf = Some(pin))
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
-    val want = pinned()
+    val want = readPin()
     assert(want.nonEmpty, "test premise: the pinned snapshot holds band rows")
     // the live index moves on: more ingest, then a compaction that
     // rewrites files — neither may disturb the pinned view (compaction
@@ -180,12 +180,12 @@ class IncrementalLshSpec extends SparkSpec {
     Dedup.minhashLshIncremental(docs.filter(col("doc_id") % 2 === 1), root).count()
     Dedup.compactLshIndex(spark, root, targetFiles = 1)
     assert(Dedup.lshIndexSeq(root) > pin, "test premise: the live index must have moved")
-    assert(pinned() == want, "the pinned read changed under later commits")
+    assert(readPin() == want, "the pinned read changed under later commits")
     assert(Dedup.lshIndexBands(spark, root).count() > want.size,
       "test premise: the live view must see the second batch")
     // vacuum is THE operation that kills history: the pin dies loudly
     Dedup.vacuumLshIndex(spark, root)
-    intercept[Exception](pinned())
+    intercept[Exception](readPin())
     docs.unpersist()
   }
 }

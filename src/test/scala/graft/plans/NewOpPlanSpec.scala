@@ -1,15 +1,51 @@
 package graft.plans
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.SparkSpec
 
 /** Physical-plan shape assertions for the round-3 operators — the
   * scale claims in their docstrings, checked against the real plans.
+  *
+  * Eager checkpoints truncate a plan at each lineage cut, so a result's
+  * executed plan hides the sub-pipelines behind it. Those are checked
+  * from the run itself: every checkpoint fires
+  * `onSuccess("localCheckpoint", qe)` with the checkpointed
+  * sub-pipeline's full executed plan (and `localizeSmall` fires
+  * "collect"), so [[subPlans]] captures each sub-execution a pipeline
+  * runs while it is built.
   */
 class NewOpPlanSpec extends SparkSpec {
 
-  private def plan(q: String): String =
+  /** Run `build` and return its result with the (funcName, executed
+    * plan) of every query execution it ran. The bus is drained before
+    * registering, so an earlier execution's late event is never
+    * attributed here, and again before reading.
+    */
+  private def subPlans[T](build: => T): (T, Seq[(String, String)]) = {
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        got.add(funcName -> qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = build
+      ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
+      (out, got.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private def declared(q: String): org.apache.spark.sql.DataFrame =
     graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
-      .queryExecution.executedPlan.toString
+
+  private def plan(q: String): String = declared(q).queryExecution.executedPlan.toString
 
   test("q52 contamination: benchmark gram set broadcasts; corpus never shuffle-joined") {
     val p = plan("q52_contamination")
@@ -32,40 +68,39 @@ class NewOpPlanSpec extends SparkSpec {
   test("no declared query plans a cartesian product (the textbook 100x scale-killer)") {
     // BroadcastNestedLoopJoin with a bounded broadcast side (q16 bands,
     // q41 query set) is fine at scale; CartesianProductExec never is.
-    // NOTE: eager checkpoints truncate plans, so this covers the declared
-    // plan surface; the checkpoint-heavy sub-pipelines are re-checked
-    // un-truncated below.
-    graft.SparkEntry.queries.foreach { case (name, fn) =>
-      val p = fn(spark, "/root/testdata/sf0.001")
-        .queryExecution.executedPlan.toString
-      assert(!p.contains("CartesianProduct"),
-        s"$name plans a cartesian product:\n${p.take(2000)}")
+    // Checked on each declared plan AND every sub-execution the query
+    // runs while it is built (checkpointed sub-pipelines, fixtures)
+    var checkpoints = 0
+    graft.SparkEntry.queries.keys.foreach { name =>
+      val (df, subs) = subPlans(declared(name))
+      checkpoints += subs.count(_._1 == "localCheckpoint")
+      (("declared", df.queryExecution.executedPlan.toString) +: subs).foreach { case (f, p) =>
+        assert(!p.contains("CartesianProduct"),
+          s"$name plans a cartesian product in its $f plan:\n${p.take(2000)}")
+      }
     }
+    assert(checkpoints > 0, "no checkpointed sub-execution was captured")
   }
 
   test("checkpoint-heavy pipelines are cartesian-free in their FULL un-truncated plans") {
-    // spark.graft.checkpoint.disabled keeps stable()/pinned() from
-    // truncating lineage, so the assertions see every join the pipeline
-    // plans — a cross join hidden behind an eager checkpoint would pass
-    // the declared-query test above but fail here
+    // a cross join hidden behind an eager checkpoint is invisible in the
+    // result's plan but not in the checkpoint's own sub-execution
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    spark.conf.set(graft.core.Checkpoints.DisabledConf, "true")
-    try {
-      val pipelines = Map(
-        "minhashLsh" -> graft.llm.Dedup.minhashLsh(docs),
-        "nearDupClusters" -> graft.llm.Dedup.nearDupClusters(
-          graft.llm.Dedup.minhashLsh(docs).filter(org.apache.spark.sql.functions.col("jaccard") >= 0.5)),
-        "simhashPairs" -> graft.llm.Dedup.simhashPairs(docs),
-        "ivfTrain" -> graft.llm.IvfSearch.trainCentroids(emb, k = 8, iters = 1))
-      pipelines.foreach { case (name, df) =>
-        val p = df.queryExecution.executedPlan.toString
+    val pipelines = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "minhashLsh" -> (() => graft.llm.Dedup.minhashLsh(docs)),
+      "nearDupClusters" -> (() => graft.llm.Dedup.nearDupClusters(
+        graft.llm.Dedup.minhashLsh(docs).filter(org.apache.spark.sql.functions.col("jaccard") >= 0.5))),
+      "simhashPairs" -> (() => graft.llm.Dedup.simhashPairs(docs)),
+      "ivfTrain" -> (() => graft.llm.IvfSearch.trainCentroids(emb, k = 8, iters = 1)))
+    pipelines.foreach { case (name, build) =>
+      val (df, subs) = subPlans(build())
+      assert(subs.nonEmpty, s"$name: no sub-execution captured — the check would be vacuous")
+      (("result", df.queryExecution.executedPlan.toString) +: subs).foreach { case (f, p) =>
         assert(!p.contains("CartesianProduct"),
-          s"$name hides a cartesian product behind its checkpoints:\n${p.take(2000)}")
-        assert(!p.contains("Scan ExistingRDD"),
-          s"$name: checkpoint disable hook did not take effect")
+          s"$name hides a cartesian product in its $f plan:\n${p.take(2000)}")
       }
-    } finally spark.conf.unset(graft.core.Checkpoints.DisabledConf)
+    }
   }
 
   test("q43 production near-dup: LSH bucket equi-join, not a nested-loop pair scan") {
