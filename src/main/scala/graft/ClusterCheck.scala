@@ -67,7 +67,8 @@ object ClusterCheck {
     "q93_incremental_bloom_dedup", "q94_stats_skipping",
     "q95_semantic_dedup",
     // q96: the TopNCosine broadcast kernel (multi-probe assignment)
-    // crossing JVM boundaries, plus the cross-cluster fixed-point
+    // crossing JVM boundaries, plus the cross-cluster quotient solve
+    // (driver union-find, distributed fixed-point past its bound)
     "q96_semantic_multiprobe",
     // q97: the incremental-assign path — ArgmaxCosine against a LOADED
     // (not just-trained) centroid frame broadcast to separate JVMs, the

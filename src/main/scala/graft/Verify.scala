@@ -7,7 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing query names: dump only those (spot-checks at big
-    // SFs where the full 68-dump is prohibitive). No names = all.
+    // SFs where dumping every declared query is prohibitive). No names = all.
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

@@ -50,9 +50,6 @@ object SqlFunctions {
     ("float_vec_dot",
       "float_vec_dot(a, b) - double-accumulated dot product of two float arrays",
       args => FloatVecDot(args(0), args(1))),
-    ("byte_vec_dot",
-      "byte_vec_dot(a, b) - exact long dot product of two int8-quantized arrays",
-      args => ByteVecDot(args(0), args(1))),
     ("json_get",
       "json_get(json, key) - top-level JSON field as string (get_json_object minus the per-row parser)",
       args => JsonGetExpr(args.head, args(1) match {

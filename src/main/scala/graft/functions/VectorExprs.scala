@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.graftglue.Bridge
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Codegen'd dot product over two `array<float>` columns, accumulating
   * in double left-to-right — numerically identical to
@@ -57,58 +57,6 @@ case class FloatVecDot(left: Expression, right: Expression)
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  $acc += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Codegen'd dot product over two `array<tinyint>` (int8-quantized)
-  * columns, accumulating EXACTLY in long — the memory-bandwidth path
-  * for similarity search (4× smaller vectors than float32). |v| ≤ 127
-  * and practical dims keep Σ|a·b| ≤ 127²·dim ≪ 2⁶³, so the sum never
-  * wraps.
-  */
-case class ByteVecDot(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(ByteType, _), ArrayType(ByteType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires two array<tinyint> inputs, got " +
-            s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-    }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "byte_vec_dot"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      acc += x.getByte(i).toLong * y.getByte(i).toLong
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ((long) $a.getByte($i)) * ((long) $b.getByte($i));
          |}
          |${ev.value} = $acc;
        """.stripMargin
@@ -292,9 +240,6 @@ object VectorFunctions {
   /** cos(a, b) = fdot / (fnorm·fnorm). */
   def fcosine(a: Column, b: Column): Column = fdot(a, b) / (fnorm(a) * fnorm(b))
 
-  /** Σ aᵢ·bᵢ over int8-quantized vectors, exact in long. */
-  def bdot(a: Column, b: Column): Column = c(ByteVecDot(e(a), e(b)))
-
   /** Coarse-quantizer assignment against a broadcast (ids, centroids,
     * norms) triple — ids must be ascending, norms pre-guarded (0 → 1.0).
     */
@@ -307,13 +252,4 @@ object VectorFunctions {
                  cents: Broadcast[(Array[Int], Array[Array[Float]], Array[Double])],
                  n: Int): Column =
     c(TopNCosine(e(emb), cents, n))
-
-  /** Approximate cosine in the quantized domain (per-vector max-abs
-    * scales cancel between numerator and norms).
-    */
-  def bcosine(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions.sqrt
-    bdot(a, b).cast("double") /
-      (sqrt(bdot(a, a).cast("double")) * sqrt(bdot(b, b).cast("double")))
-  }
 }

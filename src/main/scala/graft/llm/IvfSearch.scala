@@ -199,46 +199,6 @@ object IvfSearch {
       .filter(col("rnk") <= k)
   }
 
-  /** Index with int8-quantized vectors INSTEAD of float32 (the float
-    * column is dropped): written partitioned by cluster, a probe scans
-    * nProbe partitions at 1/4 the bytes — the IVF + scalar-quantization
-    * combination that serves most production ANN traffic.
-    */
-  def buildQuantizedIndex(corpus: DataFrame, centroids: DataFrame,
-                          embCol: String = "embedding"): DataFrame =
-    buildIndex(corpus, centroids, embCol)
-      .withColumn("q8", SimilaritySearch.quantizeInt8(col(embCol)))
-      .drop(embCol)
-
-  /** Top-k over a quantized index: probes are still chosen against the
-    * float centroids (tiny, broadcast), candidates rank by exact-integer
-    * int8 cosine (per-vector scales cancel). The float [[topK]] is the
-    * recall oracle.
-    */
-  def topKQuantized(index8: DataFrame, centroids: DataFrame, queries: DataFrame,
-                    k: Int, nProbe: Int = 2, idCol: String = "vec_id",
-                    embCol: String = "embedding"): DataFrame = {
-    import graft.functions.VectorFunctions.bcosine
-    val wq = Window.partitionBy(col("q_id")).orderBy(col("__sim").desc, col("cluster"))
-    val probes = queries
-      .select(col(idCol).as("q_id"), col(embCol).as("q_emb"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("__sim", fdot(col("q_emb"), col("centroid")) /
-        (fnorm(col("q_emb")) * fnorm(col("centroid"))))
-      .withColumn("__rn", row_number().over(wq))
-      .filter(col("__rn") <= nProbe)
-      .select(col("q_id"),
-        SimilaritySearch.quantizeInt8(col("q_emb")).as("q8_q"), col("cluster"))
-
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id"))
-    index8.join(broadcast(probes), Seq("cluster"))
-      .filter(col(idCol) =!= col("q_id"))
-      .select(col("q_id"), col(idCol).as("n_id"),
-        bcosine(col("q8_q"), col("q8")).as("sim"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-  }
-
   /** A reopened IVF index: tiny centroids + the cluster-partitioned
     * corpus scan (probe prunes to nProbe of the partition dirs).
     */

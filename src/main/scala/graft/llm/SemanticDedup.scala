@@ -137,8 +137,8 @@ object SemanticDedup {
     // canonical rule, no round parameter to keep in sync.
     val groups = Dedup.blockConfinedComponents(pairs, blockCol = "cluster",
       aCol = "id_a", bCol = "id_b")
-    index.join(
-      groups.select(col("doc_id").as(idCol), col("is_canonical")), Seq(idCol), "left")
+    index.join(groups.select(col("doc_id").as(idCol),
+        (col("doc_id") === col("root")).as("is_canonical")), Seq(idCol), "left")
       .select(col(idCol), col("cluster").as("ivf_cluster"),
         coalesce(col("is_canonical"), lit(true)).as("kept"))
   }

@@ -52,7 +52,7 @@ import graft.storage.{IndexFile, IndexManifest}
   * reads only the batch's affected clusters' files (manifest-pruned),
   * and label maintenance contracts each affected cluster's EXISTING
   * structure to its (node → root) star edges — prior τ-edges are never
-  * replayed — before one [[Dedup.blockConfinedComponentsKeyed]] pass
+  * replayed — before one [[Dedup.blockConfinedComponents]] pass
   * over (new edges ∪ star edges). Star contraction preserves
   * connectivity and the union-by-min-root rule keeps every component's
   * label = its min member id, so after ingesting batches b1..bn the
@@ -418,7 +418,7 @@ object SemanticIndex {
       .unionByName(oldLabels.select(col("cluster"),
         col("doc_id").as("id_a"), col("root").as("id_b")))
     val newLabels = graft.core.Checkpoints.stable(
-      Dedup.blockConfinedComponentsKeyed(edges, blockCol = "cluster",
+      Dedup.blockConfinedComponents(edges, blockCol = "cluster",
         aCol = "id_a", bCol = "id_b")
         .select(col("block").cast("int").as("cluster"), col("doc_id"), col("root")))
 
@@ -507,7 +507,7 @@ object SemanticIndex {
       .unionByName(oldLabels.select(col("cluster"),
         col("doc_id").as("id_a"), col("root").as("id_b")))
     val newLabels = graft.core.Checkpoints.stable(
-      Dedup.blockConfinedComponentsKeyed(edges, blockCol = "cluster",
+      Dedup.blockConfinedComponents(edges, blockCol = "cluster",
         aCol = "id_a", bCol = "id_b")
         .select(col("block").cast("int").as("cluster"), col("doc_id"), col("root")))
 
@@ -577,8 +577,7 @@ object SemanticIndex {
     */
   private def composeDecisions(rank1: DataFrame, labels: DataFrame): DataFrame =
     rank1.select(col("vec_id"), col("cluster"))
-      .join(Dedup.bridgeLocalRoots(
-          labels.select(col("doc_id"), col("root")), rootCol = "root")
+      .join(Dedup.bridgeLocalRoots(labels)
           .select(col("doc_id").as("vec_id"), col("is_canonical")),
         Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster"),
@@ -765,7 +764,7 @@ object SemanticIndex {
         else newPairs(assigned, assigned.limit(0), newTau))
           .select(col("cluster"), col("id_a"), col("id_b"))
       val newLabels = graft.core.Checkpoints.stable(
-        Dedup.blockConfinedComponentsKeyed(edges, blockCol = "cluster",
+        Dedup.blockConfinedComponents(edges, blockCol = "cluster",
           aCol = "id_a", bCol = "id_b")
           .select(col("block").cast("int").as("cluster"), col("doc_id"), col("root")))
 

@@ -59,7 +59,7 @@ object SimilaritySearch {
       .reduce(_ + _)
 
   /** Enforces the "query set must be broadcast-small" contract that
-    * [[topK]]/[[topKQuantized]]/[[topKLsh]] document: a bounded probe
+    * [[topK]]/[[topKLsh]] document: a bounded probe
     * (limit max+1, so the check never scans more than max+1 rows) fails
     * fast with an actionable error instead of OOMing the driver on a
     * corpus-sized query set. Bound is `graft.ann.maxBroadcastQueries`
@@ -88,38 +88,6 @@ object SimilaritySearch {
       .filter(col(idCol) =!= col("q_id"))
       .select(col("q_id"), col(idCol).as("n_id"),
         cosine(col("q_emb"), col(embCol)).as("sim"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id"))
-    sims.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
-  }
-
-  /** Int8 quantization of an embedding column (q56's recipe: per-vector
-    * max-abs scale to [−127, 127], round half up) as `array<tinyint>` —
-    * 4× less memory bandwidth than float32.
-    */
-  def quantizeInt8(emb: Column): Column = {
-    val maxAbs = aggregate(emb, lit(0.0), (acc, v) => greatest(acc, abs(v.cast("double"))))
-    val scale = when(maxAbs > 0, lit(127.0) / maxAbs).otherwise(lit(1.0))
-    transform(emb, v => floor(v.cast("double") * scale + 0.5).cast("byte"))
-  }
-
-  /** Brute-force top-k in the int8-quantized domain: same plan shape as
-    * [[topK]] (broadcast queries, corpus never shuffles) but the
-    * candidate scan reads 1/4 the bytes and the inner loop is an exact
-    * integer dot (ByteVecDot). Per-vector scales cancel in the cosine,
-    * so no scale column is carried. The float [[topK]] is the recall
-    * oracle; ranking differs only where quantization noise reorders
-    * near-ties.
-    */
-  def topKQuantized(corpus: DataFrame, queries: DataFrame, k: Int,
-                    idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    import graft.functions.VectorFunctions.bcosine
-    requireBroadcastSmall(queries, "SimilaritySearch.topKQuantized")
-    val qc = corpus.select(col(idCol), quantizeInt8(col(embCol)).as("q8"))
-    val qq = queries.select(col(idCol).as("q_id"), quantizeInt8(col(embCol)).as("q8_q"))
-    val sims = qc.crossJoin(broadcast(qq))
-      .filter(col(idCol) =!= col("q_id"))
-      .select(col("q_id"), col(idCol).as("n_id"),
-        bcosine(col("q8_q"), col("q8")).as("sim"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id"))
     sims.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
   }

@@ -187,27 +187,28 @@ object LlmOps {
       .orderBy("bucket")
   }
 
-  /** The q55/q59 sub-pipeline: LSH pairs at jaccard ≥ 0.5 → 4-round
-    * clustering. Each query builds its own — no result is memoized
-    * across queries.
+  /** The q55/q59 sub-pipeline: LSH pairs at jaccard ≥ 0.5 → clustering
+    * converged within 4 rounds. Each query builds its own — no result
+    * is memoized across queries.
     */
   private[queries] def lshClusters(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val pairs = Dedup.minhashLsh(Tables.documents(s, d))
       .filter(col("jaccard") >= 0.5)
-    // assertConverged: if a component ever exceeds the diameter 4
-    // rounds cover, fail loudly (both engines would otherwise agree on
-    // identically-wrong half-merged clusters). The probe costs one
-    // extra round over the tiny (id,label) set.
-    Dedup.nearDupClusters(pairs, rounds = 4, assertConverged = true)
+    // maxRounds = 4, the oracle's duckClusterCtes(4) depth: if a
+    // component ever exceeds the diameter 4 rounds cover, fail loudly
+    // (both engines would otherwise agree on identically-wrong
+    // half-merged clusters). The probe costs at most one extra round
+    // over the tiny (id,label) set.
+    Dedup.nearDupClusters(pairs, maxRounds = 4)
   }
 
   /** Near-dup clustering (the dedup DECISION step): LSH pairs at
-    * jaccard ≥ 0.5 → connected components by 4 fixed min-label +
-    * pointer-jump rounds (covers diameter-8 chains) → canonical doc per
-    * cluster. The fixed round count makes Spark and the generated DuckDB
-    * CTE chain bit-identical even on a not-yet-converged pathological
-    * chain.
+    * jaccard ≥ 0.5 → connected components by min-label + pointer-jump
+    * rounds, converged within 4 (covers diameter-8 chains) → canonical
+    * doc per cluster. The oracle's CTE chain runs exactly 4 rounds, so
+    * both engines hold the same fixed point; a deeper chain fails by
+    * name instead of differing.
     */
   val nearDupClusters: Q = Q(
     "q55_neardup_clusters",

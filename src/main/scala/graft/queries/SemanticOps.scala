@@ -133,16 +133,16 @@ object SemanticOps {
     * vector joins its 2 nearest clusters for pair generation (identical
     * ranking rule both engines: score DESC, cluster ASC), edges are
     * generated once each (canonical shared cluster), and components run
-    * to full convergence via
-    * [[graft.llm.Dedup.blockBridgedComponents]]: in-task union-find per
-    * probe cluster (one shuffle — edges are cluster-confined by the
-    * join key, map-side contracted to node-count rows), then the
-    * cross-cluster quotient graph solved by a bounded driver union-find
-    * (distributed fixed-point past the bound). The declared result adds `n_probe2` (how many
-    * vectors chose this cluster second), pinning the probe ranking
-    * itself into the hash. Premise per execution: at least one
-    * candidate pair crosses rank-1 clusters — the pairs q95 cannot see,
-    * i.e. the reason this query exists.
+    * to full convergence: [[graft.llm.Dedup.blockConfinedComponents]]
+    * runs an in-task union-find per probe cluster (one shuffle — edges
+    * are cluster-confined by the join key, map-side contracted to
+    * node-count rows), then [[graft.llm.Dedup.bridgeLocalRoots]] solves
+    * the cross-cluster quotient graph with a bounded driver union-find
+    * (distributed fixed-point past the bound). The declared result adds
+    * `n_probe2` (how many vectors chose this cluster second), pinning
+    * the probe ranking itself into the hash. Premise per execution: at
+    * least one candidate pair crosses rank-1 clusters — the pairs q95
+    * cannot see, i.e. the reason this query exists.
     */
   val semanticDedupMultiProbe: Q = Q(
     "q96_semantic_multiprobe",
@@ -199,7 +199,7 @@ object SemanticOps {
     // NOT checkpointed: the τ-graph is edge-heavy in the dense regime
     // (536 M edges at sf10), so materializing it costs more than its
     // single streaming traversal below — map-side contraction inside
-    // blockBridgedComponents collapses it to node-count rows in one pass
+    // blockConfinedComponents collapses it to node-count rows in one pass
     val pairs = SemanticDedup.semanticPairs(multi, Tau, probesCol = Some("probes"))
       .select("cluster", "id_a", "id_b", "crosses")
     val rank1 = multi.filter(col("probe_rank") === 1).select(col("vec_id"), col("cluster"))
@@ -215,7 +215,8 @@ object SemanticOps {
     // generate
     val (groups, cross) = graft.core.Observed(pairs,
       coalesce(sum(when(col("crosses"), 1L)), lit(0L)).as("n_cross")) {
-      Dedup.blockBridgedComponents(_, blockCol = "cluster", aCol = "id_a", bCol = "id_b")
+      p => Dedup.bridgeLocalRoots(
+        Dedup.blockConfinedComponents(p, blockCol = "cluster", aCol = "id_a", bCol = "id_b"))
     }
     require(cross.getAs[Long]("n_cross") >= 1,
       s"q96 premise: no candidate pair crosses rank-1 clusters — " +

@@ -62,13 +62,6 @@ class SqlFunctionsSpec extends SparkSpec {
         .head().getDouble(0)
       assert(d1 == d2 && d1 == (1.0 * 0.5 - 2.0 + 6.0))
 
-      // int8 kernel from SQL text: exact integer result
-      val b1 = s2.sql(
-        """SELECT byte_vec_dot(CAST(array(1, -2, 3) AS array<tinyint>),
-          |                    CAST(array(4, 5, -6) AS array<tinyint>)) AS d""".stripMargin)
-        .head().getLong(0)
-      assert(b1 == -24L)
-
       // tuning args must be literals: a column reference is rejected
       val err = intercept[Exception] {
         s2.sql("SELECT lang_id(body, sim) FROM (SELECT body, 0.5 AS sim FROM docs_sql)").collect()

@@ -41,22 +41,6 @@ class IvfSpec extends SparkSpec {
       s"probe of 2/$nClusters clusters opened $files of $total files")
   }
 
-  test("quantized IVF index: float column dropped, recall tracks the float probe") {
-    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001").cache()
-    val queries = emb.filter(col("vec_id") < 10)
-    val centroids = IvfSearch.trainCentroids(emb, k = 8, iters = 1)
-    val idx8 = IvfSearch.buildQuantizedIndex(emb, centroids)
-    assert(!idx8.columns.contains("embedding"), "float vectors must not be carried")
-    assert(idx8.schema("q8").dataType.simpleString == "array<tinyint>")
-    val floatHits = IvfSearch.topK(IvfSearch.buildIndex(emb, centroids),
-      centroids, queries, k = 3, nProbe = 3)
-      .select("q_id", "n_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val quantHits = IvfSearch.topKQuantized(idx8, centroids, queries, k = 3, nProbe = 3)
-      .select("q_id", "n_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val agree = (floatHits intersect quantHits).size.toDouble / floatHits.size
-    assert(agree >= 0.8, s"int8 probe diverges from float probe: $agree")
-  }
-
   test("IVF ANN recall vs brute force; probes scan only a corpus fraction") {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001").cache()
     val queries = emb.filter(col("vec_id") < 10)

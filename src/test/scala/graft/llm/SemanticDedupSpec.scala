@@ -85,12 +85,18 @@ class SemanticDedupSpec extends SparkSpec {
       (c.toLong, (c * 1000 + rnd.nextInt(40)).toLong, (c * 1000 + rnd.nextInt(40)).toLong)
     }.filter { case (_, a, b) => a != b }
     val df = edges.toDF("cluster", "id_a", "id_b")
-    val got = Dedup.blockConfinedComponents(df, "cluster", aCol = "id_a", bCol = "id_b")
+    val want = Dedup.nearDupClusters(df, aCol = "id_a", bCol = "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val want = Dedup.nearDupClustersFixedPoint(df, aCol = "id_a", bCol = "id_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(got == want, s"only-in-got=${(got -- want).take(5)} only-in-want=${(want -- got).take(5)}")
-    assert(got.nonEmpty && got.exists(!_._3), "fixture must contain at least one dropped node")
+    assert(want.nonEmpty && want.exists(!_._3), "fixture must contain at least one dropped node")
+    // repartition(7) splits every block over several input partitions,
+    // so the map-side contraction must merge partial per-partition roots
+    for ((in, name) <- Seq(df -> "as built", df.repartition(7) -> "repartition(7)")) {
+      val got = Dedup.blockConfinedComponents(in, "cluster", aCol = "id_a", bCol = "id_b")
+        .select(col("doc_id"), col("root"), col("doc_id") === col("root"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+      assert(got == want,
+        s"$name: only-in-got=${(got -- want).take(5)} only-in-want=${(want -- got).take(5)}")
+    }
   }
 
   test("blockBridgedComponents is bit-identical to the global fixed-point when nodes span blocks") {
@@ -126,26 +132,32 @@ class SemanticDedupSpec extends SparkSpec {
     val planted = Seq((10L, 100L, 101L), (11L, 101L, 102L),
       (12L, 102L, 103L), (13L, 103L, 104L))
     val df = (random ++ planted).toDF("cluster", "id_a", "id_b")
-    val got = Dedup.blockBridgedComponents(df, "cluster", aCol = "id_a", bCol = "id_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val want = Dedup.nearDupClustersFixedPoint(
+    val want = Dedup.nearDupClusters(
       df.select("id_a", "id_b").distinct(), aCol = "id_a", bCol = "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(got == want, s"only-in-got=${(got -- want).take(5)} only-in-want=${(want -- got).take(5)}")
-    assert(got.contains((104L, 100L, false)), "planted 4-block chain must collapse to min id 100")
+    assert(want.contains((104L, 100L, false)), "planted 4-block chain must collapse to min id 100")
+    def bridged(in: org.apache.spark.sql.DataFrame, bridgeCollectMax: Int) =
+      Dedup.bridgeLocalRoots(
+        Dedup.blockConfinedComponents(in, "cluster", aCol = "id_a", bCol = "id_b"),
+        bridgeCollectMax = bridgeCollectMax)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    // repartition(7) splits every block over several input partitions,
+    // so the map-side contraction must merge partial per-partition roots
+    for ((in, name) <- Seq(df -> "as built", df.repartition(7) -> "repartition(7)")) {
+      val got = bridged(in, 1 << 22)
+      assert(got == want,
+        s"$name: only-in-got=${(got -- want).take(5)} only-in-want=${(want -- got).take(5)}")
+    }
     // bridgeCollectMax=0 forces the distributed fixed-point fallback —
     // both quotient solvers must be bit-identical
-    val gotDist = Dedup.blockBridgedComponents(df, "cluster",
-      aCol = "id_a", bCol = "id_b", bridgeCollectMax = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(gotDist == want, "distributed quotient fallback diverged from the local solve")
+    assert(bridged(df, 0) == want, "distributed quotient fallback diverged from the local solve")
   }
 
   test("blockBridgedComponents: empty edge set yields empty output (no NPE in the local quotient solve)") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long, Long)].toDF("cluster", "id_a", "id_b")
-    assert(Dedup.blockBridgedComponents(empty, "cluster",
-      aCol = "id_a", bCol = "id_b").count() == 0L)
+    assert(Dedup.bridgeLocalRoots(Dedup.blockConfinedComponents(empty, "cluster",
+      aCol = "id_a", bCol = "id_b")).count() == 0L)
   }
 
   test("canonical multi-probe pair rule: each pair exactly once, identical pair set to the duplicated form") {
@@ -234,7 +246,7 @@ class SemanticDedupSpec extends SparkSpec {
     val tau = 0.99
     val sGroups = Dedup.blockConfinedComponents(
       SemanticDedup.semanticPairs(idx, tau), blockCol = "cluster", aCol = "id_a", bCol = "id_b")
-    val sDropped = sGroups.filter(!col("is_canonical"))
+    val sDropped = sGroups.filter(col("doc_id") =!= col("root"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(!sDropped.contains(50L) && !sDropped.contains(51L),
       s"single-probe must keep BOTH boundary dups (the blind spot), dropped=$sDropped")
@@ -242,7 +254,7 @@ class SemanticDedupSpec extends SparkSpec {
     // multi-probe over the SAME centroids: the pair surfaces, larger id dropped
     val multi = IvfSearch.buildIndexMultiProbe(corpus, cents, nProbe = 2)
     val mPairs = SemanticDedup.semanticPairs(multi, tau).select("id_a", "id_b").distinct()
-    val mDropped = Dedup.nearDupClustersFixedPoint(mPairs, aCol = "id_a", bCol = "id_b")
+    val mDropped = Dedup.nearDupClusters(mPairs, aCol = "id_a", bCol = "id_b")
       .filter(!col("is_canonical")).select("doc_id").collect().map(_.getLong(0)).toSet
     assert(mDropped.contains(51L) && !mDropped.contains(50L),
       s"multi-probe must drop exactly the larger boundary dup, dropped=$mDropped")

@@ -39,7 +39,8 @@ class SemanticIndexSpec extends SparkSpec {
     val groups = Dedup.blockConfinedComponents(pairs, blockCol = "cluster",
       aCol = "id_a", bCol = "id_b")
     val decisions = index
-      .join(groups.select(col("doc_id").as("vec_id"), col("is_canonical")),
+      .join(groups.select(col("doc_id").as("vec_id"),
+          (col("doc_id") === col("root")).as("is_canonical")),
         Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster"),
         coalesce(col("is_canonical"), lit(true)).as("kept"))
@@ -300,8 +301,8 @@ class SemanticIndexSpec extends SparkSpec {
     val centroids = IvfSearch.trainCentroids(train, k, iters = 1)
     val multi = IvfSearch.buildIndexMultiProbe(corpus, centroids, "embedding", nProbe = 2)
     val pairs = SemanticDedup.semanticPairs(multi, Tau, probesCol = Some("probes"))
-    val groups = Dedup.blockBridgedComponents(pairs, blockCol = "cluster",
-      aCol = "id_a", bCol = "id_b")
+    val groups = Dedup.bridgeLocalRoots(Dedup.blockConfinedComponents(pairs,
+      blockCol = "cluster", aCol = "id_a", bCol = "id_b"))
     val expected = decisionSet(multi.filter(col("probe_rank") === 1)
       .join(groups.select(col("doc_id").as("vec_id"), col("is_canonical")),
         Seq("vec_id"), "left")

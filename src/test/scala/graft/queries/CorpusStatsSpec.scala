@@ -53,7 +53,7 @@ class CorpusStatsSpec extends SparkSpec {
     // every kept doc's token count is the max in its cluster: re-derive
     val docs = graft.Tables.documents(spark, sf)
     val pairs = graft.llm.Dedup.minhashLsh(docs).filter(col("jaccard") >= 0.5)
-    val clusters = graft.llm.Dedup.nearDupClusters(pairs, rounds = 4)
+    val clusters = graft.llm.Dedup.nearDupClusters(pairs, maxRounds = 4)
     val maxTok = clusters
       .join(docs.select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tokens")), Seq("doc_id"))

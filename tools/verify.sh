@@ -19,6 +19,6 @@ done
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$JAR:/opt/spark/jars/*" graft.Verify "$SF" "$OUT" 2>/tmp/verify_err.log \
-  || { tail -30 /tmp/verify_err.log; exit 1; }
+  "$@" || { tail -30 /tmp/verify_err.log; exit 1; }
 grep -E '^\[verify\]' /tmp/verify_err.log || true
 python3 tools/check.py "$SF" "$OUT" "$@"
