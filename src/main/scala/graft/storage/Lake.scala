@@ -1,6 +1,6 @@
 package graft.storage
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Symbols
@@ -16,7 +16,18 @@ final case class SeriesKey(exchange: String, market: String, symbol: String,
     Symbols.sanitize(symbol), `type`, period)
 }
 
-/** Post-write integrity report (`writer.py:108-132`). */
+/** Post-write integrity report (`writer.py:108-132`), computed from the
+  * whole series as it is on disk after the write.
+  *
+  * @param rows       rows in the series
+  * @param timeFrom   smallest `ts` in the series (0 when empty)
+  * @param timeTo     largest `ts` in the series (0 when empty)
+  * @param monotonic  every `ts` in the series is non-null and unique;
+  *                   with the writer's one ts-sorted file per month this
+  *                   is a strictly increasing read order
+  * @param partitions (year, month) directories this write rewrote
+  *                   (0 when the series is empty)
+  */
 final case class WriteReport(rows: Long, timeFrom: Long, timeTo: Long,
                              monotonic: Boolean, partitions: Long)
 
@@ -36,6 +47,8 @@ final case class WriteReport(rows: Long, timeFrom: Long, timeTo: Long,
   *  - keep-last dedup is a window over (series, ts) ordered by an explicit
   *    `_batch` sequence — well-defined under shuffling (SURVEY §7.4 #2),
   *    where the reference relied on Polars concat order (`writer.py:86-92`);
+  *    it shares the write's single exchange on (year, month), so one
+  *    shuffle serves both the upsert and the one-file-per-month layout;
   *  - data is sorted by ts within each written file so Parquet row-group
   *    min/max stats stay tight for ts-range pushdown (`writer.py:92`).
   */
@@ -113,25 +126,24 @@ private[storage] object LakeIO {
     s"$root/exchange=${k.exchange}/market=${k.market}/symbol=${k.symbol}" +
       s"/type=${k.`type`}/period=${k.period}"
 
-  /** Does this tree hold any committed data file (non-hidden *.parquet)?
-    * Distinguishes writer-crash debris (only `_temporary`/dot staging
-    * files — safe to treat as an empty series) from a real series whose
-    * read failed for a reason that must propagate.
+  /** The committed data files under `dir`: non-hidden `*.parquet` with
+    * no hidden (`_`/`.` staging) directory between them and `dir`.
+    * Writer-crash debris (only `_temporary`/dot staging files) yields
+    * nothing, so a tree without data files is an empty series, while a
+    * real series whose read failed must propagate the failure.
     */
-  private def hasDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                           dir: org.apache.hadoop.fs.Path): Boolean = {
+  def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                dir: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.Path] = {
     val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath).filter { f =>
       val name = f.getName
       // a file under a hidden (staging) directory is debris, not data
       val hiddenAncestor = Iterator.iterate(f.getParent)(_.getParent)
         .takeWhile(p => p != null && p.toString.length >= dir.toString.length)
         .exists(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-      if (!name.startsWith("_") && !name.startsWith(".") &&
-        name.endsWith(".parquet") && !hiddenAncestor) return true
+      !name.startsWith("_") && !name.startsWith(".") &&
+        name.endsWith(".parquet") && !hiddenAncestor
     }
-    false
   }
 
   /** Open ONE series, scoped to its own directory tree: `basePath`
@@ -179,9 +191,21 @@ private[storage] object LakeIO {
         // it to "empty series" would let the next merge-write treat real
         // data as a first write — rethrow whenever data files exist
         case e: org.apache.spark.sql.AnalysisException =>
-          if (hasDataFiles(fs, hPath)) throw e else None
+          if (dataFiles(fs, hPath).hasNext) throw e else None
       }
     }
+  }
+
+  /** Only the `ts` column of one series, read with an explicit schema:
+    * no mergeSchema footer job, and no other column leaves the files.
+    * None if the series has no directory.
+    */
+  def readSeriesTs(spark: SparkSession, root: String, k: SeriesKey): Option[DataFrame] = {
+    val dir = seriesDir(root, k)
+    val hPath = new org.apache.hadoop.fs.Path(dir)
+    if (!hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hPath)) None
+    else Some(ioSession(spark).read.schema("ts BIGINT").option("basePath", root)
+      .parquet(dir).select("ts"))
   }
 }
 
@@ -237,8 +261,12 @@ final class LakeWriter(spark: SparkSession, root: String,
 
     // Months touched by this batch — drives both the existing-data scan
     // and (via dynamic overwrite) which directories get rewritten.
-    val touched = incoming.select(col("year"), col("month")).distinct().collect()
-      .map(r => (r.getInt(0), r.getInt(1))).toSet
+    // Deduplicated per partition and then on the driver: one job, and
+    // at most (input partitions × distinct months) rows collected
+    val touched = incoming.select(col("year"), col("month"))
+      .mapPartitions(_.map(r => (r.getInt(0), r.getInt(1))).toSet.iterator)(
+        Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt))
+      .collect().toSet
 
     val existing = readSeries(k) match {
       case Some(cur) =>
@@ -258,24 +286,28 @@ final class LakeWriter(spark: SparkSession, root: String,
       case None => incoming
     }
 
-    val keyCols = Seq(col("exchange"), col("market"), col("symbol"),
-      col("type"), col("period"), col("ts"))
     // "last" = highest batch; ties WITHIN a batch (same ts twice in one
     // ingest) break on row-content hash — arbitrary but deterministic
     // under any shuffling/rerun (a shuffled row_number tie is not)
     val dataCols = unioned.columns.filterNot(c => c == "_batch").map(col)
-    val w = Window.partitionBy(keyCols: _*)
+    val w = Window.partitionBy(partCols.map(col) :+ col("ts"): _*)
       .orderBy(col("_batch").desc, xxhash64(dataCols: _*).desc)
-    val merged = unioned
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "_batch")
 
     // the merge scan above assumed exclusion — re-verify it still holds
     // before the overwrite that would lose the race if it doesn't
     lease.assertOwned()
-    merged
-      .repartition(partCols.map(col): _*)
+    // ONE exchange serves both the keep-last window and the file layout:
+    // every row of a write belongs to this one series, so hashing on
+    // (year, month) satisfies the window's clustering and puts each
+    // month in one task, hence one file. Hash on (year, month) only:
+    // on a first write the series columns fold to literals, a hash on
+    // them no longer satisfies the window, and the planner adds a second
+    // exchange on (year, month, ts) that splits a month over files
+    unioned
+      .repartition(col("year"), col("month"))
+      .withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1)
+      .drop("_rn", "_batch")
       // partition cols lead the sort so FileFormatWriter's required
       // ordering is already satisfied — otherwise it inserts its own
       // sort on partCols only and the ts order inside files is lost
@@ -301,7 +333,7 @@ final class LakeWriter(spark: SparkSession, root: String,
       FileStatsIndex.prune(spark, dir, idx)
     }
 
-    verifySeries(k, touched)
+    verifySeries(k, touched.size.toLong)
   }
 
   /** Tick write path: identical semantics, open schema with required ts
@@ -317,35 +349,61 @@ final class LakeWriter(spark: SparkSession, root: String,
     // LakeIO.readSeriesScoped)
     LakeIO.readSeriesScoped(spark, root, k).map(_.drop(partCols: _*))
 
-  /** Post-write verify (`writer.py:108-132`): series bounds + count via
-    * one plain aggregation (no window, no global sort), plus strict
-    * monotonicity = within-month ordering checked ONLY on the months
-    * this write touched (each month sorts independently — O(touched),
-    * not O(table)) + global ts uniqueness (count == distinct count;
-    * unique ts + per-month order ⇒ strictly increasing read order).
+  /** Post-write verify (`writer.py:108-132`) over the WHOLE series as
+    * it is on disk: row count, ts bounds, and `monotonic` = every `ts`
+    * non-null and unique across the series. With the writer's one
+    * ts-sorted file per month, unique ts is exactly a strictly
+    * increasing read order.
+    *
+    * Reads only `ts`, with an explicit schema (no footer job), hashes
+    * it so equal values share a partition, sorts each partition and
+    * scans it once for adjacent equal values: two jobs, sort memory
+    * bounded by spilling, and per-partition summaries collected on the
+    * driver.
     */
-  private def verifySeries(k: SeriesKey, touched: Set[(Int, Int)]): WriteReport =
-    readSeries(k) match {
-      case None => WriteReport(0L, 0L, 0L, monotonic = true, 0L)
-      case Some(df) =>
-        val bounds = df.agg(count(lit(1)).as("n"), min("ts").as("from"),
-          max("ts").as("to"), countDistinct(col("ts")).as("nd")).head()
-        if (bounds.getLong(0) == 0L) WriteReport(0L, 0L, 0L, monotonic = true, 0L)
+  private def verifySeries(k: SeriesKey, partitions: Long): WriteReport = {
+    val parts = LakeIO.readSeriesTs(spark, root, k).toSeq.flatMap(ts =>
+      ts.repartition(col("ts")).sortWithinPartitions(col("ts"))
+        .mapPartitions(LakeWriter.summarizeSorted)(LakeWriter.SummaryEncoder)
+        .collect())
+    val rows = parts.map(_._1).sum
+    if (rows == 0L) WriteReport(0L, 0L, 0L, monotonic = true, 0L)
+    else WriteReport(rows, parts.map(_._2).min, parts.map(_._3).max,
+      monotonic = parts.forall(_._4), partitions)
+  }
+}
+
+private object LakeWriter {
+  /** (rows, min ts, max ts, no null and no repeated ts) of one partition. */
+  type Summary = (Long, Long, Long, Boolean)
+
+  val SummaryEncoder: Encoder[Summary] = Encoders.tuple(
+    Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaBoolean)
+
+  /** One pass over a ts-sorted partition (nulls first); an empty
+    * partition yields no summary, an all-null one has no bounds
+    * (Long.MaxValue, Long.MinValue).
+    */
+  def summarizeSorted(it: Iterator[Row]): Iterator[Summary] =
+    if (!it.hasNext) Iterator.empty
+    else {
+      var n = 0L
+      var lo = Long.MaxValue
+      var hi = Long.MinValue
+      var clean = true
+      var seen = false
+      while (it.hasNext) {
+        val r = it.next()
+        n += 1
+        if (r.isNullAt(0)) clean = false
         else {
-          // same UTC derivation as the writer — a tz-offset grouping here
-          // would check monotonicity on a subtly different month subset
-          val d = graft.core.MonthKeys.utcDate(col("ts"))
-          val monthPred = touched.map { case (y, m) => year(d) === y && month(d) === m }
-            .reduceOption(_ || _).getOrElse(lit(true))
-          val w = Window.partitionBy(year(d), month(d)).orderBy(col("ts"))
-          val nonmono = df.filter(monthPred)
-            .select(col("ts"), lag(col("ts"), 1).over(w).as("prev"))
-            .filter(col("prev").isNotNull && col("ts") <= col("prev"))
-            .count()
-          WriteReport(bounds.getLong(0), bounds.getLong(1), bounds.getLong(2),
-            monotonic = nonmono == 0L && bounds.getLong(0) == bounds.getLong(3),
-            touched.size.toLong)
+          val t = r.getLong(0)
+          if (!seen) { lo = t; seen = true }
+          else if (t == hi) clean = false
+          hi = t
         }
+      }
+      Iterator((n, lo, hi, clean))
     }
 }
 

@@ -34,24 +34,21 @@ final class LakeMaintenance(spark: SparkSession, root: String) {
                                   lease: SeriesLease.Handle): Long = {
     val k = key.sanitized
 
-    // scoped to the series' own directory (LakeIO.readSeriesScoped):
-    // listing + mergeSchema footer reads are O(series), not O(lake),
-    // and a sibling writer rewriting ANOTHER series can't race this
-    // scan. mergeSchema stays on — a schema sampled from one month's
-    // file would silently drop columns other months carry
-    val df = LakeIO.readSeriesScoped(spark, root, k) match {
-      case Some(d) => d
-      case None => return 0L
-    }
-    // which (year, month) dirs have too many files?
-    val byPartition = df
-      .select(col("year"), col("month"), input_file_name().as("f"))
-      .groupBy("year", "month")
-      .agg(countDistinct(col("f")).as("nf"))
-      .filter(col("nf") > maxFiles)
-      .select("year", "month")
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1)))
+    // which (year, month) dirs have too many files? Counted from a
+    // driver listing of the series' own directory (no Spark job), with
+    // the same committed-data-file rule the merge read uses
+    val dir = new org.apache.hadoop.fs.Path(LakeIO.seriesDir(root, k))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) return 0L
+    val byPartition = LakeIO.dataFiles(fs, dir).flatMap { f =>
+      val month = f.getParent
+      val year = month.getParent
+      for {
+        y <- partitionValue(year, "year")
+        m <- partitionValue(month, "month")
+      } yield (y, m)
+    }.toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+      .filter(_._2 > maxFiles).keys.toSeq
 
     if (byPartition.isEmpty) return 0L
 
@@ -59,12 +56,19 @@ final class LakeMaintenance(spark: SparkSession, root: String) {
       .map { case (y, m) => col("year") === y && col("month") === m }
       .reduce(_ || _)
 
+    // scoped to the series' own directory (LakeIO.readSeriesScoped):
+    // listing + mergeSchema footer reads are O(series), not O(lake),
+    // and a sibling writer rewriting ANOTHER series can't race this
+    // scan. mergeSchema stays on — a schema sampled from one month's
+    // file would silently drop columns other months carry
+    val scan = LakeIO.readSeriesScoped(spark, root, k) match {
+      case Some(d) => d.filter(monthPred)
+        .localCheckpoint(true) // the write overwrites what this scan reads
+      case None => return 0L
+    }
     // rewrite only the fragmented dirs (dynamic partition overwrite);
     // the scan assumed exclusion — re-verify before the commit that
     // would lose a racing write if the lease was stolen
-    val scan = LakeIO.readSeriesScoped(spark, root, k).get
-      .filter(monthPred)
-      .localCheckpoint(true) // the write overwrites what this scan reads
     lease.assertOwned()
     scan
       .repartition(partCols.map(col): _*)
@@ -92,6 +96,11 @@ final class LakeMaintenance(spark: SparkSession, root: String) {
 
     byPartition.length.toLong
   }
+
+  /** The int value of a Hive-style `name=value` directory, if it is one. */
+  private def partitionValue(p: org.apache.hadoop.fs.Path, name: String): Option[Int] =
+    Option(p).map(_.getName).filter(_.startsWith(name + "="))
+      .flatMap(_.drop(name.length + 1).toIntOption)
 
   /** Physically delete a series' data directory (the reference's
     * `delete` removes files AND manifest rows, `cli.py:83-135`) —

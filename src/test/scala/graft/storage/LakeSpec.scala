@@ -1,6 +1,8 @@
 package graft.storage
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Mirrors the reference's integration use cases 1/2/8
@@ -153,5 +155,100 @@ class LakeSpec extends SparkSpec {
     val got = new LakeReader(spark, root)
       .readRange("EX", "SYM", "raw", data.head.ts, data.last.ts).count()
     assert(got == 20)
+  }
+
+  private val HourMs = 3600000L
+  private val Jan31 = 1675123200000L // 2023-01-31T00:00Z
+
+  /** Data files per (year, month) directory of a series. */
+  private def filesPerMonth(root: String, key: SeriesKey): Map[(Int, Int), Int] =
+    graft.core.PathWalk.walk(java.nio.file.Paths.get(LakeIO.seriesDir(root, key.sanitized))) {
+      _.filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+      }.map { p =>
+        def v(d: java.nio.file.Path) = d.getFileName.toString.split("=")(1).toInt
+        (v(p.getParent.getParent), v(p.getParent))
+      }.toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+    }
+
+  /** `body`'s result and the Spark jobs it started on this thread,
+    * scoped by a job group and counted once the bus has drained.
+    */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"lakespec-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    ListenerBusAccess.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "LakeSpec job count")
+    try {
+      val out = body
+      ListenerBusAccess.waitUntilEmpty(sc)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("post-write verify reads the whole series: a duplicate in an untouched month is caught") {
+    val root = tmpDir("lake-verify")
+    val key = SeriesKey("EX", "SPOT", "SYM", "raw", "1h")
+    val writer = new LakeWriter(spark, root)
+    // clean series: Jan 31 + Feb 1, then a merge-write into February
+    val first = genCandles(48, startMs = Jan31, periodMs = HourMs)
+    assert(writer.writeOhlc(candleDf(first), key) ==
+      WriteReport(48L, first.head.ts, first.last.ts, monotonic = true, 2L))
+    val feb = genCandles(12, startMs = first(42).ts, periodMs = HourMs, seed = 7)
+    assert(writer.writeOhlc(candleDf(feb), key) ==
+      WriteReport(54L, first.head.ts, feb.last.ts, monotonic = true, 1L))
+
+    // a foreign file in the January dir repeats January's first ts
+    val staged = tmpDir("foreign")
+    candleDf(Seq(first.head.copy(volume = 1.0))).coalesce(1).write.mode("overwrite").parquet(staged)
+    val part = graft.core.PathWalk.list(java.nio.file.Paths.get(staged)) {
+      _.find(_.getFileName.toString.endsWith(".parquet")).get
+    }
+    java.nio.file.Files.copy(part, java.nio.file.Paths.get(
+      LakeIO.seriesDir(root, key.sanitized), "year=2023", "month=1", "part-foreign.snappy.parquet"))
+
+    // a merge-write that touches only March still sees it
+    val mar = genCandles(5, startMs = 1677628800000L, periodMs = HourMs, seed = 9)
+    assert(writer.writeOhlc(candleDf(mar), key) ==
+      WriteReport(54L + 1L + 5L, first.head.ts, mar.last.ts, monotonic = false, 1L))
+  }
+
+  test("merge-write leaves one data file per touched month, in a pinned number of Spark jobs") {
+    val root = tmpDir("lake-files")
+    val key = SeriesKey("EX", "SPOT", "SYM", "raw", "1h")
+    val writer = new LakeWriter(spark, root)
+    // the layout is checked with every shuffle partition kept: AQE would
+    // coalesce this small input into one partition and hide a month
+    // split over several tasks, hence several files. A first write runs
+    // in its input's session and has no existing rows, so the series
+    // columns fold to literals; the input is a materialized frame, since
+    // a LocalRelation would absorb them as plain columns
+    val uncoalesced = spark.newSession()
+    uncoalesced.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val first = genCandles(48, startMs = Jan31, periodMs = HourMs)
+    writer.writeOhlc(uncoalesced.createDataFrame(first).localCheckpoint(), key)
+    assert(filesPerMonth(root, key) == Map((2023, 1) -> 1, (2023, 2) -> 1))
+    val feb = genCandles(12, startMs = first(42).ts, periodMs = HourMs, seed = 7)
+    writer.writeOhlc(candleDf(feb), key)
+    assert(filesPerMonth(root, key) == Map((2023, 1) -> 1, (2023, 2) -> 1))
+
+    // touched months 1, footer 1, existing-month checkpoint 1, write 2
+    // (one exchange), verify 2
+    val feb2 = genCandles(12, startMs = feb(6).ts, periodMs = HourMs, seed = 8)
+    val (rep, jobs) = withJobCount(writer.writeOhlc(candleDf(feb2), key))
+    assert(rep == WriteReport(60L, first.head.ts, feb2.last.ts, monotonic = true, 1L))
+    assert(filesPerMonth(root, key) == Map((2023, 1) -> 1, (2023, 2) -> 1))
+    assert(jobs == 7, s"merge-write ran $jobs Spark jobs, pinned at 7")
   }
 }

@@ -2,7 +2,7 @@
 # Build + run Verify at a scale factor + diff against DuckDB oracle.
 # Usage: tools/verify.sh [sfdir] [query-name ...]
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 shift 2>/dev/null || true
 OUT=/tmp/verify_out
@@ -16,7 +16,7 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens=java.base/$p=ALL-UNNAMED"
 done
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} java $ADD_OPENS -Xmx8g \
+SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)} java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$JAR:/opt/spark/jars/*" graft.Verify "$SF" "$OUT" 2>/tmp/verify_err.log \
   "$@" || { tail -30 /tmp/verify_err.log; exit 1; }
