@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Scan-parallelism helpers. */
 object Scans {
@@ -35,32 +36,39 @@ object Scans {
     * broadcasts) to the driver and re-plan it as a local relation.
     * Compared to a localCheckpoint this cuts lineage the same way but:
     * every later `.collect()` short-circuits to zero Spark jobs (the
-    * IVF kernels' broadcast build), joins/broadcasts embed the values
-    * directly, and no block-manager state is left to reap. Values are
-    * identical — collect changes representation, not content. Callers
-    * MUST bound the size; this is the broadcastCentroids boundedness
-    * class, not a general-purpose cache.
+    * IVF kernels' broadcast build), and no block-manager state is left
+    * to reap. A join that broadcasts the relation is NOT free: under
+    * AQE the broadcast is its own query stage and runs one Spark job,
+    * so a caller after zero jobs reads the collected rows on the driver
+    * instead of joining against them. Values are identical — collect
+    * changes representation, not content. Callers MUST bound the size;
+    * this is the broadcastCentroids boundedness class, not a
+    * general-purpose cache.
     */
   def localizeSmall(df: DataFrame,
-                    maxLocalBytes: Long = 8L << 20): DataFrame = {
-    val spark = df.sparkSession
-    val rows = df.collect()
-    // Representation is decided by MEASURED bytes, not row count: a
-    // LocalRelation's values are re-serialized into every plan copy
+                    maxLocalBytes: Long = 8L << 20): DataFrame =
+    localRows(df.sparkSession, df.collect(), df.schema, maxLocalBytes)
+
+  /** Driver-held `rows` as a frame, by [[localizeSmall]]'s byte rule:
+    * a local relation when their MEASURED size is under
+    * `maxLocalBytes`, a parallelized RDD-backed frame otherwise.
+    */
+  def localRows(spark: SparkSession, rows: Array[Row], schema: StructType,
+                maxLocalBytes: Long = 8L << 20): DataFrame =
+    // A LocalRelation's values are re-serialized into every plan copy
     // that references it (and shipped with every task closure built
     // over it), so embedding is only cheap under a few MB. Past the
-    // bound the collected rows become a parallelized RDD-backed frame
-    // instead — the lineage cut and the values are identical, the plan
-    // holds an RDD reference instead of the payload, and nothing is
-    // recomputed. The caller still owns the collect-safety bound (rows
-    // small enough to hold on the driver at all).
+    // bound the rows become a parallelized RDD-backed frame instead —
+    // the lineage cut and the values are identical, the plan holds an
+    // RDD reference instead of the payload, and nothing is recomputed.
+    // The caller still owns the collect-safety bound (rows small enough
+    // to hold on the driver at all).
     if (org.apache.spark.util.SizeEstimator.estimate(rows) <= maxLocalBytes)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     else
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows.toSeq,
           math.max(1, math.min(rows.length,
             spark.sparkContext.defaultParallelism))),
-        df.schema)
-  }
+        schema)
 }

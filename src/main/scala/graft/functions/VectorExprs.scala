@@ -4,7 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.graftglue.Bridge
@@ -227,6 +227,51 @@ case class TopNCosine(child: Expression,
     copy(child = newChild)
 }
 
+/** Cosine of one `array<float>` row against the centroid with id
+  * `cluster` in the kernels' (ids, centroids, norms) broadcast: the
+  * assigned-quality datum of an index assignment, priced from the same
+  * broadcast the assignment kernel reads instead of a join against the
+  * centroid table. [[FloatVecDot]] arithmetic over the row; the
+  * centroid norm is the broadcast's (a zero norm pre-guarded to 1.0).
+  * A cluster id the broadcast does not hold yields null.
+  */
+case class CentroidCosine(left: Expression, right: Expression,
+                          cents: Broadcast[(Array[Int], Array[Array[Float]], Array[Double])])
+  extends BinaryExpression with CodegenFallback {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(FloatType, _), IntegerType) => TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires (array<float>, int) inputs, got ${l.simpleString} / ${r.simpleString}")
+    }
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def prettyName: String = "centroid_cosine"
+
+  override protected def nullSafeEval(a: Any, c: Any): Any = {
+    val (ids, cs, norms) = cents.value
+    val ki = java.util.Arrays.binarySearch(ids, c.asInstanceOf[Int])
+    if (ki < 0) return null
+    val x = a.asInstanceOf[ArrayData]
+    val v = cs(ki)
+    val n = math.min(x.numElements(), v.length)
+    var dot = 0.0
+    var xx = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x.getFloat(i).toDouble
+      dot += xi * v(i).toDouble
+      xx += xi * xi
+      i += 1
+    }
+    dot / (math.sqrt(xx) * norms(ki))
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
 object VectorFunctions {
   private def c(e: Expression): Column = Bridge.column(e)
   private def e(col: Column): Expression = Bridge.expression(col)
@@ -252,4 +297,9 @@ object VectorFunctions {
                  cents: Broadcast[(Array[Int], Array[Array[Float]], Array[Double])],
                  n: Int): Column =
     c(TopNCosine(e(emb), cents, n))
+
+  /** Cosine of `emb` against the broadcast centroid `cluster` names. */
+  def centroidCosine(emb: Column, cluster: Column,
+                     cents: Broadcast[(Array[Int], Array[Array[Float]], Array[Double])]): Column =
+    c(CentroidCosine(e(emb), e(cluster), cents))
 }

@@ -50,6 +50,7 @@ object Dedup {
                  textCol: String = "text"): DataFrame = {
     requireBandParams(numPerms, bands)
     val hb = lshHashBands(docs, shingleLen, numPerms, bands, idCol, textCol, fan = true)
+      .pipe(graft.core.Checkpoints.stable)
     val hashSets = lshHashSets(hb)
     val sigs = lshBandRows(hb)
 
@@ -94,9 +95,10 @@ object Dedup {
     * engines); checkpointed so band joins and verify joins reuse one
     * materialization instead of recomputing shingling+md5.
     */
-  /** ONE materialization of (doc_id, shingle-hash set, band-key array):
-    * shingling + md5 + the numPerms-perm signature + banding all run in
-    * a single fused pass and checkpoint together — the former
+  /** The plan of ONE materialization of (doc_id, shingle-hash set,
+    * band-key array), which each caller checkpoints: shingling + md5 +
+    * the numPerms-perm signature + banding all run in a single fused
+    * pass and checkpoint together — the former
     * hashSets-then-bandRows shape paid TWO sequential materialization
     * actions per pipeline (and kept two block sets alive) for the same
     * data. [[lshHashSets]]/[[lshBandRows]] are views over this: the
@@ -113,7 +115,7 @@ object Dedup {
     */
   private def lshHashBands(docs: DataFrame, shingleLen: Int, numPerms: Int,
                            bands: Int, idCol: String, textCol: String,
-                           fan: Boolean = false): DataFrame =
+                           fan: Boolean): DataFrame =
     (if (fan) graft.core.Scans.fanOut(docs) else docs)
       .select(col(idCol).as("doc_id"),
         graft.functions.ShingleHash64(col(textCol), shingleLen).as("hs"))
@@ -124,7 +126,6 @@ object Dedup {
       .withColumn("sig", TextHash.minhashFromHashes(col("hs"), numPerms))
       .withColumn("bkeys", TextHash.bandKeys(col("sig"), bands, numPerms / bands))
       .select(col("doc_id"), col("hs"), col("bkeys"))
-      .pipe(graft.core.Checkpoints.stable)
 
   /** The (doc_id, hs) view of [[lshHashBands]]. */
   private def lshHashSets(hashBands: DataFrame): DataFrame =
@@ -319,7 +320,11 @@ object Dedup {
       if (!append) newDocs
       else newDocs.join(
         idxHashes.select(col("doc_id").as(idCol)), Seq(idCol), "left_anti")
-    val newHb = lshHashBands(freshDocs, shingleLen, numPerms, bands, idCol, textCol)
+    // the batch's row count rides the checkpoint as an observed metric:
+    // the commit's emptiness test costs no Spark job of its own
+    val (newHb, hm) = graft.core.Observed(
+      lshHashBands(freshDocs, shingleLen, numPerms, bands, idCol, textCol, fan = false),
+      count(lit(1)).as("n"))(graft.core.Checkpoints.stable)
     val newHashes = lshHashSets(newHb)
     val newBands = lshBandRows(newHb)
       .select(col("band").cast("int").as("band"), col("key"), col("doc_id"))
@@ -350,10 +355,9 @@ object Dedup {
     val result = candA.select(col("doc_a"), col("doc_b"), (inter / uni).as("jaccard"))
 
     // a fully-replayed (or shingle-empty) batch commits nothing: replay
-    // is a true no-op, not a version bump — newHashes is checkpointed,
-    // so the emptiness probe is O(1) (a flat write of an empty frame
-    // would otherwise stage a schema-only file and publish it)
-    if (append && !newHashes.isEmpty) {
+    // is a true no-op, not a version bump (a flat write of an empty
+    // frame would otherwise stage a schema-only file and publish it)
+    if (append && hm.getAs[Long]("n") > 0L) {
       val adds = writeLshFlat(newBands, root, "bands") ++
         writeLshFlat(newHashes, root, "hashes")
       lease.foreach(_.assertOwned()) // loud failure on a stolen lease

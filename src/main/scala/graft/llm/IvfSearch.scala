@@ -42,6 +42,12 @@ object IvfSearch {
     */
   val QuantScale: Double = 1048576.0
 
+  /** The assignment kernels' centroid broadcast: (ids ascending,
+    * centroids, norms with a zero norm guarded to 1.0).
+    */
+  private[llm] type Kernel =
+    org.apache.spark.broadcast.Broadcast[(Array[Int], Array[Array[Float]], Array[Double])]
+
   /** argmax-cosine cluster id for each vector: centroids are collected
     * (k × dim floats — small relative to the corpus by construction),
     * BROADCAST once, and assignment is a MAP-ONLY projection through
@@ -56,9 +62,8 @@ object IvfSearch {
     * few dozen centroids (measured ~3 µs/dot at k=196 — BASELINE.md
     * round-13; 26× wall on the q95 machinery at sf10).
     */
-  private def broadcastCentroids(spark: org.apache.spark.sql.SparkSession,
-                                 centroids: DataFrame)
-  : org.apache.spark.broadcast.Broadcast[(Array[Int], Array[Array[Float]], Array[Double])] = {
+  private[llm] def broadcastCentroids(spark: org.apache.spark.sql.SparkSession,
+                                      centroids: DataFrame): Kernel = {
     val cents: Array[(Int, Array[Float], Double)] = centroids
       .collect()
       .map { r =>
@@ -71,10 +76,12 @@ object IvfSearch {
   }
 
   private def assign(df: DataFrame, centroids: DataFrame,
-                     embCol: String): DataFrame = {
-    val bc = broadcastCentroids(df.sparkSession, centroids)
+                     embCol: String): DataFrame =
+    assignWith(df, broadcastCentroids(df.sparkSession, centroids), embCol)
+
+  /** [[buildIndex]] against an already-built centroid broadcast. */
+  private[llm] def assignWith(df: DataFrame, bc: Kernel, embCol: String): DataFrame =
     df.withColumn("cluster", graft.functions.VectorFunctions.argmaxCosine(col(embCol), bc))
-  }
 
   /** Multi-probe assignment: one row per (vector, probe) with `cluster`
     * and 1-based `probe_rank` — rank 1 is [[buildIndex]]'s assignment,
@@ -93,12 +100,17 @@ object IvfSearch {
     * overwrite would corrupt the caller's data) — enforced by require.
     */
   def buildIndexMultiProbe(corpus: DataFrame, centroids: DataFrame,
-                           embCol: String = "embedding", nProbe: Int = 2): DataFrame = {
+                           embCol: String = "embedding", nProbe: Int = 2): DataFrame =
+    assignMultiProbeWith(corpus, broadcastCentroids(corpus.sparkSession, centroids),
+      embCol, nProbe)
+
+  /** [[buildIndexMultiProbe]] against an already-built centroid broadcast. */
+  private[llm] def assignMultiProbeWith(corpus: DataFrame, bc: Kernel, embCol: String,
+                                        nProbe: Int): DataFrame = {
     Seq("probes", "cluster", "probe_rank").foreach { reserved =>
       require(!corpus.columns.contains(reserved),
         s"buildIndexMultiProbe reserves output column '$reserved'; rename or drop it on the input")
     }
-    val bc = broadcastCentroids(corpus.sparkSession, centroids)
     corpus
       .withColumn("probes",
         graft.functions.VectorFunctions.topnCosine(col(embCol), bc, nProbe))

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import scala.jdk.CollectionConverters._
+
 import graft.queries.Embeddings.{dot, norm}
 import graft.storage.{IndexFile, IndexManifest}
 
@@ -109,6 +112,10 @@ object SemanticIndex {
   private def indexSchemaOf(meta: Meta): StructType =
     if (meta.nProbe > 1) mpIndexSchema else indexSchema
 
+  private val centroidSchema = StructType(Seq(
+    StructField("cluster", IntegerType),
+    StructField("centroid", ArrayType(FloatType))))
+
   private val labelSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("root", LongType),
@@ -132,16 +139,17 @@ object SemanticIndex {
     s"""{"tau":$tau,"iters":$iters,"k":$k,"init_mean_sim":$initSim,""" +
       s""""target_cluster_size":$targetClusterSize,"n_probe":$nProbe}"""
 
-  /** Mean max-cosine of `df` against its assigned centroid — the
-    * assignment-quality datum the staleness contract compares. Empty
-    * input returns NaN (callers treat an empty batch as trivially
-    * fresh).
+  /** Mean max-cosine of `df` (vec_id, embedding) against the centroid
+    * the assignment kernel assigns it — the assignment-quality datum
+    * the staleness contract compares — priced from the kernel's own
+    * broadcast ([[graft.functions.CentroidCosine]], the arithmetic
+    * ingest's [[pricedAssignment]] uses). Empty input returns NaN
+    * (callers treat an empty batch as trivially fresh).
     */
-  private def meanAssignedSim(assigned: DataFrame, centroids: DataFrame): Double = {
-    val r = assigned
-      .join(broadcast(centroids), Seq("cluster"))
-      .agg(avg(dot(col("embedding"), col("centroid")) /
-        (norm(col("embedding")) * norm(col("centroid")))).as("m"))
+  private def meanAssignedSim(df: DataFrame, kernel: IvfSearch.Kernel): Double = {
+    val r = IvfSearch.assignWith(df, kernel, "embedding")
+      .agg(avg(graft.functions.VectorFunctions.centroidCosine(
+        col("embedding"), col("cluster"), kernel)).as("m"))
       .head()
     if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
   }
@@ -205,12 +213,78 @@ object SemanticIndex {
       .parquet(files: _*)
   }
 
+  /** The frozen quantizer, read ONCE per call: the explicit schema
+    * skips parquet footer inference (a Spark job of its own), and the
+    * k rows come back localized ([[graft.core.Scans.localizeSmall]]),
+    * so the assignment kernel's broadcast build and the serving probes
+    * read them with zero further jobs.
+    */
   private def readCentroids(spark: SparkSession, root: String,
                             st: graft.storage.IndexState): DataFrame = {
     val files = st.files.filter(_.sub == "centroids").map(f => s"$root/${f.path}")
     require(files.nonEmpty, s"index at $root has no live centroid files")
-    spark.read.option("recursiveFileLookup", "true").parquet(files: _*)
+    graft.core.Scans.localizeSmall(spark.read.schema(centroidSchema).parquet(files: _*))
   }
+
+  /** Rows per cluster of the pinned state's live `sub` files in
+    * `clusters`, from the row counts in those files' parquet footers:
+    * driver-side metadata reads, one per file, no Spark job. The
+    * manifest's byte sizes cannot stand in for them — compression
+    * makes bytes a lower bound of nothing, and a duplicate-heavy (hot)
+    * cluster compresses best. The footer is decoded directly:
+    * `ParquetFileReader.open` builds a whole reader per file, measured
+    * at ~13 ms a file against well under 1 ms here.
+    */
+  private def liveRows(root: String, st: graft.storage.IndexState,
+                       sub: String, clusters: Set[Int]): Map[Int, Long] =
+    st.files.filter(f => f.sub == sub && clusters(f.cluster))
+      .groupMapReduce(_.cluster) { f =>
+        // the parquet tail: [footer][4-byte little-endian footer length]["PAR1"]
+        val in = new java.io.RandomAccessFile(s"${localRoot(root)}/${f.path}", "r")
+        try {
+          in.seek(in.length() - 8)
+          val footer = new Array[Byte](Integer.reverseBytes(in.readInt()))
+          in.seek(in.length() - 8 - footer.length)
+          in.readFully(footer)
+          org.apache.parquet.format.Util
+            .readFileMetaData(new java.io.ByteArrayInputStream(footer)).getNum_rows
+        } finally in.close()
+      }(_ + _)
+
+  /** Rows per `cluster` of a frame, as an observed metric (the map has
+    * one entry per distinct cluster, so it is bounded by k, the
+    * boundedness class of the affected-cluster set).
+    */
+  private val clusterRows = udaf(
+    new org.apache.spark.sql.expressions.Aggregator[Int, Map[Int, Long], Map[Int, Long]] {
+      def zero: Map[Int, Long] = Map.empty
+      def reduce(b: Map[Int, Long], c: Int): Map[Int, Long] = b.updated(c, b.getOrElse(c, 0L) + 1L)
+      def merge(a: Map[Int, Long], b: Map[Int, Long]): Map[Int, Long] = plus(a, b)
+      def finish(b: Map[Int, Long]): Map[Int, Long] = b
+      def bufferEncoder: org.apache.spark.sql.Encoder[Map[Int, Long]] =
+        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[Int, Long]]()
+      def outputEncoder: org.apache.spark.sql.Encoder[Map[Int, Long]] = bufferEncoder
+    }, org.apache.spark.sql.Encoders.scalaInt)
+
+  private def observedRows(m: org.apache.spark.sql.Row): Map[Int, Long] =
+    m.getAs[scala.collection.Map[Int, Long]]("rows").toMap
+
+  /** The pair join's `cluster` → block-count column: ceil(rows /
+    * blockSize) blocks, capped at `maxBlocks`, for every cluster over
+    * `blockSize` rows; any other cluster is one block. Only split
+    * clusters enter the plan (a map literal of them), so the common
+    * all-one-block case plans a plain `lit(1)`.
+    */
+  private def blockCount(rows: Map[Int, Long], blockSize: Int, maxBlocks: Int): Column = {
+    val split = rows.collect { case (c, n) if n > blockSize =>
+      c -> math.min(maxBlocks.toLong, (n + blockSize - 1) / blockSize).toInt
+    }
+    if (split.isEmpty) lit(1)
+    else coalesce(try_element_at(typedLit(split), col("cluster")), lit(1))
+  }
+
+  private def plus(a: Map[Int, Long], b: Map[Int, Long]): Map[Int, Long] =
+    b.foldLeft(a) { case (acc, (c, n)) => acc.updated(c, acc.getOrElse(c, 0L) + n) }
 
   // ---- public surface ----
 
@@ -234,8 +308,7 @@ object SemanticIndex {
     val train = trainCorpus.select(col(idCol).as("vec_id"), col(embCol).as("embedding"))
     val k = SemanticDedup.adaptiveK(train.count(), targetClusterSize)
     val centroids = IvfSearch.trainCentroids(train, k, iters)
-    val initSim = meanAssignedSim(
-      IvfSearch.buildIndex(train, centroids), centroids)
+    val initSim = meanAssignedSim(train, IvfSearch.broadcastCentroids(spark, centroids))
     val centFiles = writeFlat(centroids.coalesce(1), root, "centroids")
     IndexManifest.commit(root, adds = centFiles,
       metaJson = Some(metaJsonOf(tau, iters, k, initSim, targetClusterSize, nProbe)),
@@ -284,24 +357,29 @@ object SemanticIndex {
     * Exactness of the once-each rule: an existing b-row lives in
     * exactly one block and the a-side is new-only, so new-vs-existing
     * surfaces once; new-vs-new surfaces in both orientations and the
-    * `is_new && id_a < id_b` filter keeps one.
+    * `is_new && id_a < id_b` filter keeps one. The rule holds for ANY
+    * per-cluster block count ≥ 1, so the counts are driver-side inputs,
+    * not a Spark aggregate: `clusterRows` is rows per cluster over
+    * existing ∪ assigned (ingest reads it from footers and an observed
+    * metric), a cluster over `blockSize` rows splits into
+    * ceil(rows / blockSize) blocks (at most `maxBlocks`), and a cluster
+    * absent from the map is one block. Wrong counts cost balance, never
+    * pairs.
     */
   def newPairs(assigned: DataFrame, existing: DataFrame, tau: Double,
+               clusterRows: Map[Int, Long] = Map.empty,
                blockSize: Int = 1024, maxBlocks: Int = 16): DataFrame = {
     def prep(df: DataFrame, isNew: Boolean) =
       df.select(col("cluster"), col("vec_id").as("id"),
         col("embedding").as("emb"), norm(col("embedding")).as("nrm"),
         lit(isNew).as("is_new"))
-    val allSide = prep(existing, isNew = false).unionByName(prep(assigned, isNew = true))
-    val counts = allSide.groupBy("cluster").agg(count(lit(1)).as("cluster_n"))
-    val withK = counts.withColumn("nblk",
-      least(lit(maxBlocks), ceil(col("cluster_n") / blockSize)).cast("int"))
-    val b = allSide.join(withK, Seq("cluster"))
-      .withColumn("blk", pmod(col("id"), col("nblk")).cast("int"))
+    val nblk = blockCount(clusterRows, blockSize, maxBlocks)
+    val b = prep(existing, isNew = false).unionByName(prep(assigned, isNew = true))
+      .withColumn("blk", pmod(col("id"), nblk).cast("int"))
       .select(col("cluster"), col("blk"), col("id").as("id_b"),
         col("emb").as("emb_b"), col("nrm").as("nrm_b"), col("is_new"))
-    val a = prep(assigned, isNew = true).join(withK, Seq("cluster"))
-      .withColumn("blk", explode(sequence(lit(0), col("nblk") - 1)))
+    val a = prep(assigned, isNew = true)
+      .withColumn("blk", explode(sequence(lit(0), nblk - 1)))
       .select(col("cluster"), col("blk"), col("id").as("id_a"),
         col("emb").as("emb_a"), col("nrm").as("nrm_a"))
     a.join(b, Seq("cluster", "blk"))
@@ -335,6 +413,16 @@ object SemanticIndex {
     * (invisible; [[vacuum]] reaps them) and the retry re-derives the
     * batch. An id must still mean the same vector everywhere — distinct
     * vectors sharing an id silently collapse to the first.
+    *
+    * Job budget of a committing rank-1 ingest (pinned in
+    * SemanticIndexSpec): 9 Spark jobs — the centroid read 1, the
+    * assignment checkpoint 1, the fresh checkpoint 2 (its existing-id
+    * broadcast), the labels checkpoint 3 (batch-side broadcast,
+    * component exchange), the two writes 2 — plus 3 to count the
+    * returned decisions (labels broadcast, one exchange). The staleness
+    * datum, the affected set, the emptiness test and the pair join's
+    * block counts ride those materializations or come from the
+    * manifest's files, and cost no job of their own.
     */
   def ingest(newBatch: DataFrame, root: String, append: Boolean = true,
              idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
@@ -346,10 +434,12 @@ object SemanticIndex {
       // st.seq turns any serialization failure into a loud abort
       val st = IndexManifest.state(root)
       val meta = parseMeta(st.metaJson)
-      val centroids = readCentroids(spark, root, st)
+      // one centroid read feeds the assignment kernel AND the staleness
+      // price: both read this broadcast
+      val kernel = IvfSearch.broadcastCentroids(spark, readCentroids(spark, root, st))
       if (meta.nProbe > 1)
-        ingestMultiProbe(newBatch, root, st, meta, centroids, append, idCol, embCol, lease)
-      else ingestRank1(newBatch, root, st, meta, centroids, append, idCol, embCol, lease)
+        ingestMultiProbe(newBatch, root, st, meta, kernel, append, idCol, embCol, lease)
+      else ingestRank1(newBatch, root, st, meta, kernel, append, idCol, embCol, lease)
     }
     if (append)
       graft.storage.SeriesLease.withDirLeaseHandle(root)(h => body(Some(h)))
@@ -361,21 +451,22 @@ object SemanticIndex {
     * the checkpoint as observed metrics: `collect_set` of the assigned
     * clusters (bounded by min(|assignment rows|, k), the boundedness
     * class of the centroid collect) and the mean assigned cosine over
-    * the rows `rank1` selects, priced by a broadcast centroid join in the
-    * same materialization. The mean equals [[meanAssignedSim]] up to
-    * float summation order; the contract compares it against a 0.10
-    * tolerance, not bits. The returned frame has the kernel's exact
-    * column set and order: everything downstream, including the
-    * persisted index files, sees the unadorned assignment schema.
+    * the rows `rank1` selects, priced from the assignment kernel's own
+    * centroid broadcast ([[graft.functions.CentroidCosine]]) — no
+    * centroid join, so no broadcast stage. The mean equals
+    * [[meanAssignedSim]] up to float summation order; the contract
+    * compares it against a 0.10 tolerance, not bits. The checkpoint is
+    * of the kernel's exact column set and order: everything downstream,
+    * including the persisted index files, sees the unadorned assignment
+    * schema.
     */
-  private def pricedAssignment(assignedRaw: DataFrame, centroids: DataFrame,
+  private def pricedAssignment(assignedRaw: DataFrame, kernel: IvfSearch.Kernel,
                                meta: Meta, rank1: Column)
       : (DataFrame, Set[Int]) = {
-    val sim = when(rank1, dot(col("embedding"), col("centroid")) /
-      (norm(col("embedding")) * norm(col("centroid"))))
-    val (priced, m) = graft.core.Observed(
-      assignedRaw.join(broadcast(centroids), Seq("cluster")).withColumn("__sim", sim),
-      collect_set(col("cluster")).as("cs"), sum(col("__sim")).as("s"),
+    val sim = when(rank1, graft.functions.VectorFunctions.centroidCosine(
+      col("embedding"), col("cluster"), kernel))
+    val (priced, m) = graft.core.Observed(assignedRaw,
+      collect_set(col("cluster")).as("cs"), sum(sim).as("s"),
       coalesce(sum(when(rank1, 1L)), lit(0L)).as("n"))(graft.core.Checkpoints.stable)
     val n = m.getAs[Long]("n")
     val batchSim = if (n == 0L) Double.NaN else m.getAs[Double]("s") / n
@@ -383,49 +474,66 @@ object SemanticIndex {
       System.err.println(f"[semindex] STALE WARNING: batch mean assigned cosine " +
         f"$batchSim%.4f vs init ${meta.initMeanSim}%.4f - retrain + rebuild advised " +
         "(see SemanticIndex staleness contract)")
-    (priced.select(assignedRaw.columns.toSeq.map(col): _*),
-      m.getAs[scala.collection.Seq[Int]]("cs").toSet)
+    (priced, m.getAs[scala.collection.Seq[Int]]("cs").toSet)
+  }
+
+  /** Checkpoint the batch rows not yet in the index (the idempotence
+    * anti-join: ids already committed are ABSORBED, first write wins —
+    * assignment is deterministic under the frozen centroids, so a
+    * replayed id lands in the same cluster and this anti-join sees it)
+    * and return them with the pair join's per-cluster row counts over
+    * existing ∪ fresh: the fresh side's ride the checkpoint as an
+    * observed metric, the existing side's come from the live files'
+    * footers ([[liveRows]]). An empty count map means nothing is fresh.
+    */
+  private def freshRows(assigned: DataFrame, existing: DataFrame, root: String,
+                        st: graft.storage.IndexState, affected: Set[Int])
+      : (DataFrame, Map[Int, Long], Map[Int, Long]) = {
+    val (fresh, m) = graft.core.Observed(
+      assigned.join(existing.select("vec_id"), Seq("vec_id"), "left_anti"),
+      clusterRows(col("cluster")).as("rows"))(graft.core.Checkpoints.stable)
+    val freshN = observedRows(m)
+    (fresh, freshN, plus(liveRows(root, st, "index", affected), freshN))
   }
 
   private def ingestRank1(newBatch: DataFrame, root: String,
                           st: graft.storage.IndexState, meta: Meta,
-                          centroids: DataFrame, append: Boolean,
+                          kernel: IvfSearch.Kernel, append: Boolean,
                           idCol: String, embCol: String,
                           lease: Option[graft.storage.SeriesLease.Handle]): DataFrame = {
     val spark = newBatch.sparkSession
     // ZERO extra driver round-trips for the affected-cluster set and the
     // staleness datum: both ride the assignment checkpoint (see
     // [[pricedAssignment]])
-    val assignedRaw = IvfSearch.buildIndex(
+    val assignedRaw = IvfSearch.assignWith(
       newBatch.select(col(idCol).as("vec_id"), col(embCol).as("embedding")),
-      centroids, "embedding")
-    val (assigned, affected) = pricedAssignment(assignedRaw, centroids, meta, lit(true))
+      kernel, "embedding")
+    val (assigned, affected) = pricedAssignment(assignedRaw, kernel, meta, lit(true))
     val existing = readSub(spark, root, st, "index", indexSchema, Some(affected))
     val oldLabels = readSub(spark, root, st, "labels", labelSchema, Some(affected))
-    // idempotence: ids already in the index are ABSORBED (first write
-    // wins) — assignment is deterministic under the frozen centroids,
-    // so a replayed id lands in the same cluster and this anti-join
-    // sees it. At-least-once delivery (a streaming foreachBatch replay,
-    // a batch retry after a crash) therefore commits each vector
-    // exactly once.
-    val fresh = graft.core.Checkpoints.stable(
-      assigned.join(existing.select("vec_id"), Seq("vec_id"), "left_anti"))
+    // at-least-once delivery (a streaming foreachBatch replay, a batch
+    // retry after a crash) commits each vector exactly once: see
+    // [[freshRows]]
+    val (fresh, freshN, rows) = freshRows(assigned, existing, root, st, affected)
 
-    val edges = newPairs(fresh, existing, meta.tau)
+    val edges = newPairs(fresh, existing, meta.tau, rows)
       .select(col("cluster"), col("id_a"), col("id_b"))
       // star edges contract each affected cluster's existing structure:
       // connectivity-equivalent to its full historical edge set
       .unionByName(oldLabels.select(col("cluster"),
         col("doc_id").as("id_a"), col("root").as("id_b")))
-    val newLabels = graft.core.Checkpoints.stable(
+    // the label count rides the checkpoint: it sizes the decisions join
+    // below from a number the driver holds, not from plan statistics
+    val (newLabels, lm) = graft.core.Observed(
       Dedup.blockConfinedComponents(edges, blockCol = "cluster",
         aCol = "id_a", bCol = "id_b")
-        .select(col("block").cast("int").as("cluster"), col("doc_id"), col("root")))
+        .select(col("block").cast("int").as("cluster"), col("doc_id"), col("root")),
+      count(lit(1)).as("n"))(graft.core.Checkpoints.stable)
 
     // a fully-replayed batch (every id absorbed) introduces no edges, so
     // labels are re-derived identical — publish NOTHING: replay is a
     // true no-op, not a version bump rewriting unchanged label files
-    if (append && !fresh.isEmpty) {
+    if (append && freshN.nonEmpty) {
       val idxFiles = writeClustered(fresh, root, "index")
       val lblFiles = writeClustered(newLabels, root, "labels")
       // the label swap: ONLY the affected clusters' live label files are
@@ -441,9 +549,16 @@ object SemanticIndex {
         removes = removes, expectedSeq = st.seq)
     }
 
+    // a checkpoint's plan statistics are its origin plan's, which price
+    // the pair join as a cross product, so the planner would shuffle both
+    // sides; the observed count says whether the labels fit the
+    // session's broadcast threshold (3 fixed-width columns: 32 B per
+    // unsafe row)
+    val labels = newLabels.select(col("cluster"), col("doc_id").as("vec_id"), col("root"))
+    val fits = lm.getAs[Long]("n") * 32L <=
+      org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
     existing.select("cluster", "vec_id").unionByName(fresh.select("cluster", "vec_id"))
-      .join(newLabels.select(col("cluster"), col("doc_id").as("vec_id"), col("root")),
-        Seq("cluster", "vec_id"), "left")
+      .join(if (fits) broadcast(labels) else labels, Seq("cluster", "vec_id"), "left")
       .select(col("vec_id"), col("cluster"),
         (col("root").isNull || col("root") === col("vec_id")).as("kept"))
   }
@@ -481,7 +596,7 @@ object SemanticIndex {
     */
   private def ingestMultiProbe(newBatch: DataFrame, root: String,
                                st: graft.storage.IndexState, meta: Meta,
-                               centroids: DataFrame, append: Boolean,
+                               kernel: IvfSearch.Kernel, append: Boolean,
                                idCol: String, embCol: String,
                                lease: Option[graft.storage.SeriesLease.Handle]): DataFrame = {
     val spark = newBatch.sparkSession
@@ -489,20 +604,19 @@ object SemanticIndex {
     // [[ingestRank1]]: affected = every PROBED cluster (bounded by
     // min(nProbe·|batch|, k)); the staleness datum averages over rank-1
     // rows only
-    val assignedRaw = IvfSearch.buildIndexMultiProbe(
+    val assignedRaw = IvfSearch.assignMultiProbeWith(
       newBatch.select(col(idCol).as("vec_id"), col(embCol).as("embedding")),
-      centroids, "embedding", meta.nProbe)
-    val (assigned, affected) = pricedAssignment(assignedRaw, centroids, meta,
+      kernel, "embedding", meta.nProbe)
+    val (assigned, affected) = pricedAssignment(assignedRaw, kernel, meta,
       col("probe_rank") === 1)
     val existing = readSub(spark, root, st, "index", mpIndexSchema, Some(affected))
     val oldLabels = readSub(spark, root, st, "labels", labelSchema, Some(affected))
     // idempotence: replayed ids are ABSORBED exactly as in the rank-1
     // path (probes are deterministic under frozen centroids, so every
     // probe row of a committed id matches an existing row's vec_id)
-    val fresh = graft.core.Checkpoints.stable(
-      assigned.join(existing.select("vec_id"), Seq("vec_id"), "left_anti"))
+    val (fresh, freshN, rows) = freshRows(assigned, existing, root, st, affected)
 
-    val edges = newPairsMultiProbe(fresh, existing, meta.tau)
+    val edges = newPairsMultiProbe(fresh, existing, meta.tau, rows)
       .select(col("cluster"), col("id_a"), col("id_b"))
       .unionByName(oldLabels.select(col("cluster"),
         col("doc_id").as("id_a"), col("root").as("id_b")))
@@ -511,7 +625,7 @@ object SemanticIndex {
         aCol = "id_a", bCol = "id_b")
         .select(col("block").cast("int").as("cluster"), col("doc_id"), col("root")))
 
-    if (append && !fresh.isEmpty) {
+    if (append && freshN.nonEmpty) {
       val idxFiles = writeClustered(fresh, root, "index")
       val lblFiles = writeClustered(newLabels, root, "labels")
       val removes = st.files.filter(f => f.sub == "labels" && affected(f.cluster))
@@ -539,25 +653,24 @@ object SemanticIndex {
     * every shared cluster is a probe of the NEW vector, hence affected,
     * hence generated — so the union over batches is the monolithic
     * multi-probe pair set, each edge discovered in the batch where its
-    * second member arrives.
+    * second member arrives. `clusterRows` counts probe rows per cluster
+    * and sets the block split exactly as in [[newPairs]].
     */
   def newPairsMultiProbe(assigned: DataFrame, existing: DataFrame, tau: Double,
+                         clusterRows: Map[Int, Long] = Map.empty,
                          blockSize: Int = 1024, maxBlocks: Int = 16): DataFrame = {
     def prep(df: DataFrame, isNew: Boolean) =
       df.select(col("cluster"), col("vec_id").as("id"),
         col("embedding").as("emb"), norm(col("embedding")).as("nrm"),
         col("probes"), lit(isNew).as("is_new"))
-    val allSide = prep(existing, isNew = false).unionByName(prep(assigned, isNew = true))
-    val counts = allSide.groupBy("cluster").agg(count(lit(1)).as("cluster_n"))
-    val withK = counts.withColumn("nblk",
-      least(lit(maxBlocks), ceil(col("cluster_n") / blockSize)).cast("int"))
-    val b = allSide.join(withK, Seq("cluster"))
-      .withColumn("blk", pmod(col("id"), col("nblk")).cast("int"))
+    val nblk = blockCount(clusterRows, blockSize, maxBlocks)
+    val b = prep(existing, isNew = false).unionByName(prep(assigned, isNew = true))
+      .withColumn("blk", pmod(col("id"), nblk).cast("int"))
       .select(col("cluster"), col("blk"), col("id").as("id_b"),
         col("emb").as("emb_b"), col("nrm").as("nrm_b"),
         col("probes").as("probes_b"), col("is_new"))
-    val a = prep(assigned, isNew = true).join(withK, Seq("cluster"))
-      .withColumn("blk", explode(sequence(lit(0), col("nblk") - 1)))
+    val a = prep(assigned, isNew = true)
+      .withColumn("blk", explode(sequence(lit(0), nblk - 1)))
       .select(col("cluster"), col("blk"), col("id").as("id_a"),
         col("emb").as("emb_a"), col("nrm").as("nrm_a"),
         col("probes").as("probes_a"))
@@ -748,20 +861,22 @@ object SemanticIndex {
         .getOrElse(corpus)
       val k = SemanticDedup.adaptiveK(train.count(), newTcs)
       val centroids = IvfSearch.trainCentroids(train, k, newIters)
-      val initSim = meanAssignedSim(IvfSearch.buildIndex(train, centroids), centroids)
+      val initSim = meanAssignedSim(train, IvfSearch.broadcastCentroids(spark, centroids))
 
       // the monolithic rebuild — exactly init + one bulk ingest against
       // an empty index (same kernels, empty existing side, no old
       // stars), so a retrained index is bit-equal to a fresh one built
       // from the same rows (spec: staleness-retrain loop)
-      val assigned = graft.core.Checkpoints.stable(
+      val (assigned, am) = graft.core.Observed(
         if (oldMeta.nProbe > 1)
           IvfSearch.buildIndexMultiProbe(corpus, centroids, "embedding", oldMeta.nProbe)
-        else IvfSearch.buildIndex(corpus, centroids, "embedding"))
+        else IvfSearch.buildIndex(corpus, centroids, "embedding"),
+        clusterRows(col("cluster")).as("rows"))(graft.core.Checkpoints.stable)
+      val rows = observedRows(am)
       val edges =
         (if (oldMeta.nProbe > 1)
-          newPairsMultiProbe(assigned, assigned.limit(0), newTau)
-        else newPairs(assigned, assigned.limit(0), newTau))
+          newPairsMultiProbe(assigned, assigned.limit(0), newTau, rows)
+        else newPairs(assigned, assigned.limit(0), newTau, rows))
           .select(col("cluster"), col("id_a"), col("id_b"))
       val newLabels = graft.core.Checkpoints.stable(
         Dedup.blockConfinedComponents(edges, blockCol = "cluster",
@@ -818,10 +933,9 @@ object SemanticIndex {
     val spark = newBatch.sparkSession
     val st = IndexManifest.state(root)
     val meta = parseMeta(st.metaJson)
-    val centroids = readCentroids(spark, root, st)
-    val sim = meanAssignedSim(IvfSearch.buildIndex(
+    val sim = meanAssignedSim(
       newBatch.select(col(idCol).as("vec_id"), col(embCol).as("embedding")),
-      centroids, "embedding"), centroids)
+      IvfSearch.broadcastCentroids(spark, readCentroids(spark, root, st)))
     !sim.isNaN && sim < meta.initMeanSim - tolerance
   }
 
@@ -873,24 +987,35 @@ object SemanticIndex {
 
   /** Top-k ANN SERVING against the persisted index — the search half of
     * the build-once/serve-forever contract the incremental ingest keeps
-    * current ([[IvfSearch.topK]]'s plan shape, but the corpus side is
+    * current ([[IvfSearch.topK]]'s arithmetic, but the corpus side is
     * this index's live manifest state instead of a caller-held
-    * DataFrame). Returns (q_id, n_id, sim, rnk), rnk 1..k per query.
+    * DataFrame). Returns (q_id, n_id, sim, rnk), rnk 1..k per query;
+    * query ids are unique within a batch.
     *
-    * Scale shape: probe selection is the query batch × broadcast
-    * centroids (tiny); the index read is MANIFEST-PRUNED to the batch's
-    * probed clusters before any file opens — a small serving batch over
-    * a 2 B-vector index reads |probed| ≈ min(|queries|·nProbe, k)
-    * clusters' files, never the corpus. The probed-cluster collect is
-    * bounded by k ints (the centroid count, ~corpus/targetClusterSize —
-    * the same documented bound as every affected-cluster set here).
+    * Probes are q102's rule: a query's nProbe clusters by cosine
+    * against the frozen centroids, ordered (sim DESC, cluster ASC). The
+    * index read is MANIFEST-PRUNED to the batch's probed clusters
+    * before any file opens — a small serving batch over a 2 B-vector
+    * index reads |probed| ≈ min(|queries|·nProbe, k) clusters' files,
+    * never the corpus.
+    *
+    * Serving runs on the driver: the query batch is collected (q102
+    * and every serving client send a handful of queries), the
+    * centroids are read once, probes and the probed set are computed
+    * on the driver, the probed cells are scored in ONE Spark job whose
+    * tasks keep a per-query top-k, and the driver merges those partial
+    * top-k lists. The result is handed back as a local relation under
+    * the [[graft.core.Scans.localRows]] byte rule, a parallelized frame
+    * past it. Budget: 1 job for the centroid read, 1 for the scoring
+    * scan, plus 1 to collect a query batch that is not already a local
+    * relation.
     *
     * On a MULTI-PROBE index (meta.nProbe > 1) each vector's row is
     * replicated across its probe clusters, so scanning the query's
     * probed cells also surfaces near-boundary vectors filed there at
-    * probe_rank ≥ 2 — multi-probe store + multi-probe query; duplicates
-    * collapse via dropDuplicates(q_id, n_id) (replicas are identical in
-    * sim, so the ranking is deterministic).
+    * probe_rank ≥ 2 — multi-probe store + multi-probe query; replicas
+    * collapse to one (q_id, n_id) candidate (they are identical in sim,
+    * so the ranking is deterministic).
     *
     * `asOf` pins a published seq: search the index exactly as a reader
     * at that version saw it (valid until [[vacuum]]).
@@ -900,44 +1025,95 @@ object SemanticIndex {
                  idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
-    import org.apache.spark.sql.expressions.Window
     val st = IndexManifest.state(root, asOf)
     val meta = parseMeta(st.metaJson)
-    val cents = readCentroids(spark, root, st)
-    val wq = Window.partitionBy(col("q_id")).orderBy(col("__sim").desc, col("cluster"))
-    // localizeSmall: the probe table is bounded by |queries|·nProbe rows
-    // (the batch is broadcast below regardless, so driver residence is
-    // already the contract) — localized, the probed-cluster collect and
-    // the candidate join read ONE materialization instead of running the
-    // query-scan × centroid window twice per serve
-    val probes = graft.core.Scans.localizeSmall(queries
-      .select(col(idCol).as("q_id"), col(embCol).as("q_emb"))
-      .crossJoin(broadcast(cents))
-      .withColumn("__sim", dot(col("q_emb"), col("centroid")) /
-        (norm(col("q_emb")) * norm(col("centroid"))))
-      .withColumn("__rn", row_number().over(wq))
-      .filter(col("__rn") <= nProbe)
-      .select(col("q_id"), col("q_emb"), col("cluster")))
+    val cs = readCentroids(spark, root, st).collect().map { r =>
+      val v = r.getSeq[Float](1).toArray
+      (r.getInt(0), v, math.sqrt(fdot(v, v)))
+    }
+    val probes = queries.select(col(idCol).cast("long"), col(embCol)).collect().map { r =>
+      val q = r.getSeq[Float](1).toArray
+      val qn = math.sqrt(fdot(q, q))
+      val byCos = cs.map { case (c, v, vn) => (fdot(q, v) / (qn * vn), c) }
+        .sortWith { (x, y) =>
+          val o = SQLOrderingUtil.compareDoubles(y._1, x._1)
+          o < 0 || (o == 0 && x._2 < y._2)
+        }
+      (r.getLong(0), q, qn, byCos.take(nProbe).map(_._2))
+    }
+    val byCluster = probes.flatMap { case (id, q, qn, ps) => ps.map(_ -> (id, q, qn)) }
+      .groupMap(_._1)(_._2)
     // the batch's probed-cluster set (≤ k ints) prunes the manifest
-    // BEFORE any data file is listed or opened (zero Spark jobs on the
-    // localized relation)
-    val probed = probes.select(col("cluster")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val rows = readSub(spark, root, st, "index", indexSchemaOf(meta), Some(probed))
+    // BEFORE any data file is listed or opened
+    val rows = readSub(spark, root, st, "index", indexSchemaOf(meta), Some(byCluster.keySet))
       .select(col("vec_id"), col("embedding"), col("cluster"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id"))
-    val cand = rows.join(broadcast(probes), Seq("cluster"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        (dot(col("q_emb"), col("embedding")) /
-          (norm(col("q_emb")) * norm(col("embedding")))).as("sim"))
-    // (q_id, n_id) duplicates exist ONLY on a multi-probe index (each
-    // vector's row replicated across its probe clusters); on a rank-1
-    // index every vec_id lives in exactly one cluster, so the pairs are
-    // unique by construction and the dedup would be a pure extra
-    // shuffle + aggregate
-    val uniq = if (meta.nProbe > 1) cand.dropDuplicates("q_id", "n_id") else cand
-    uniq.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    graft.core.Scans.localRows(spark, scoreTopK(rows, byCluster, k), StructType(Seq(
+      StructField("q_id", LongType), StructField("n_id", LongType),
+      StructField("sim", DoubleType), StructField("rnk", LongType, nullable = false))))
+  }
+
+  /** Σ aᵢ·bᵢ in double, left to right: [[graft.functions.FloatVecDot]]'s
+    * arithmetic on the driver and in tasks, so sims and ranks are
+    * bit-identical to the planned `dot`/`norm` form.
+    */
+  private def fdot(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+    acc
+  }
+
+  /** (sim DESC, n_id ASC) under SQL double ordering — the serving
+    * window's order. Equal (sim, n_id) keys are one candidate, which is
+    * what collapses multi-probe replicas.
+    */
+  private object RankOrder extends java.util.Comparator[(Double, Long)] with Serializable {
+    def compare(x: (Double, Long), y: (Double, Long)): Int = {
+      val o = SQLOrderingUtil.compareDoubles(y._1, x._1)
+      if (o != 0) o else java.lang.Long.compare(x._2, y._2)
+    }
+  }
+
+  /** Keep `c` in `top` if it ranks among the best `k` (duplicates of a
+    * held candidate are dropped).
+    */
+  private def offer(top: java.util.TreeSet[(Double, Long)], c: (Double, Long), k: Int): Unit =
+    if (top.size < k) top.add(c)
+    else if (RankOrder.compare(c, top.last) < 0 && top.add(c)) top.pollLast()
+
+  /** Score `rows` (vec_id, embedding, cluster) against the queries each
+    * cluster is probed by, keeping a per-query top-k per task, and merge
+    * the partial lists on the driver into (q_id, n_id, sim, rnk) rows.
+    */
+  private def scoreTopK(rows: DataFrame,
+                        byCluster: Map[Int, Array[(Long, Array[Float], Double)]],
+                        k: Int): Array[org.apache.spark.sql.Row] = {
+    val bq = rows.sparkSession.sparkContext.broadcast(byCluster)
+    val partial = rows.queryExecution.toRdd.mapPartitions { it =>
+      val tops = scala.collection.mutable.HashMap.empty[Long, java.util.TreeSet[(Double, Long)]]
+      it.foreach { r =>
+        bq.value.get(r.getInt(2)).foreach { qs =>
+          val id = r.getLong(0)
+          val e = r.getArray(1).toFloatArray()
+          val en = math.sqrt(fdot(e, e))
+          qs.foreach { case (qId, q, qn) =>
+            if (qId != id)
+              offer(tops.getOrElseUpdate(qId, new java.util.TreeSet(RankOrder)),
+                (fdot(q, e) / (qn * en), id), k)
+          }
+        }
+      }
+      tops.iterator.flatMap { case (q, top) =>
+        top.iterator.asScala.map { case (sim, n) => (q, sim, n) } }
+    }.collect()
+    bq.destroy()
+    partial.groupMap(_._1)(x => (x._2, x._3)).toArray.sortBy(_._1).flatMap { case (q, cs) =>
+      val top = new java.util.TreeSet(RankOrder)
+      cs.foreach(offer(top, _, k))
+      top.iterator.asScala.zipWithIndex.map { case ((sim, n), i) =>
+        org.apache.spark.sql.Row(q, n, sim, (i + 1).toLong)
+      }
+    }
   }
 }

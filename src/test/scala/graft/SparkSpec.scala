@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,6 +17,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  /** `body`'s result and the Spark jobs it started on this thread,
+    * scoped by a job group and counted once the bus has drained.
+    */
+  def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobcount-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    ListenerBusAccess.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "spec job count")
+    try {
+      val out = body
+      ListenerBusAccess.waitUntilEmpty(sc)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   /** Seeded random-walk OHLCV: invariant-friendly, not golden-valued. */
   def genCandles(length: Int = 100,

@@ -188,4 +188,20 @@ class IncrementalLshSpec extends SparkSpec {
     intercept[Exception](readPin())
     docs.unpersist()
   }
+
+  test("a committing ingest runs in a pinned number of Spark jobs") {
+    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.01")
+    val root = tmpDir("lsh_idx_jobs")
+    Dedup.initLshIndex(spark, root)
+    Dedup.minhashLshIncremental(docs.filter(col("doc_id") % 2 === 0), root).count()
+    val seq = graft.storage.IndexManifest.currentSeq(root)
+    val (pairs, jobs) = withJobCount(
+      Dedup.minhashLshIncremental(docs.filter(col("doc_id") % 2 === 1), root)
+        .select("doc_a", "doc_b").collect())
+    assert(pairs.nonEmpty, "test premise: the second batch must find pairs")
+    assert(graft.storage.IndexManifest.currentSeq(root) == seq + 1)
+    // signature checkpoint 2 (existing-id broadcast), writes 2, the
+    // candidate collect 5; the emptiness test rides the checkpoint
+    assert(jobs == 9, s"committing LSH ingest ran $jobs Spark jobs, pinned at 9")
+  }
 }

@@ -3,6 +3,7 @@ package graft.llm
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The persisted-semantic-index contract (the q69 band-index invariants
   * re-proven for embeddings): ingesting a partition of the corpus batch
@@ -28,14 +29,42 @@ class SemanticIndexSpec extends SparkSpec {
     df.select(col("cluster").cast("int"), col("id_a"), col("id_b"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
 
+  /** `body`'s result and the rows emitted by each pair-join block
+    * explode (`explode(sequence(0, nblk - 1))`) in the query executions
+    * it runs, checkpoints included.
+    */
+  private def blockRows[T](body: => T): (T, Seq[Long]) = {
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit =
+        plans.collect(qe.executedPlan) {
+          case g: org.apache.spark.sql.execution.GenerateExec
+              if g.generator.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Sequence]) =>
+            g.metrics("numOutputRows").value
+        }.foreach(got.add)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
+      (out, got.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   /** Frozen-centroid full rebuild — the comparator every incremental
     * sequence must match (same train slice, same τ).
     */
-  private def rebuild(train: DataFrame, all: DataFrame): (DataFrame, DataFrame) = {
+  private def rebuild(train: DataFrame, all: DataFrame,
+                      tau: Double = Tau): (DataFrame, DataFrame) = {
     val k = SemanticDedup.adaptiveK(train.count())
     val centroids = IvfSearch.trainCentroids(train, k, iters = 1)
     val index = IvfSearch.buildIndex(all, centroids, "embedding")
-    val pairs = SemanticDedup.semanticPairs(index, Tau)
+    val pairs = SemanticDedup.semanticPairs(index, tau)
     val groups = Dedup.blockConfinedComponents(pairs, blockCol = "cluster",
       aCol = "id_a", bCol = "id_b")
     val decisions = index
@@ -667,5 +696,87 @@ class SemanticIndexSpec extends SparkSpec {
     assert(topkSet(SemanticIndex.searchTopK(spark, root, queries, 4, nProbe = 2))
       != atPin,
       "test premise: the live search should see the second half's vectors")
+  }
+
+  test("rank-1 ingest and searchTopK run in a pinned number of Spark jobs") {
+    val root = tmpDir("sem_idx_jobs")
+    SemanticIndex.init(spark, root, corpus.filter(col("vec_id") % 4 =!= 0), Tau)
+    SemanticIndex.ingest(corpus.filter(col("vec_id") % 2 === 0), root).count()
+    val batch = corpus.filter(col("vec_id") % 4 === 1)
+    val (decided, ingestJobs) = withJobCount(SemanticIndex.ingest(batch, root).count())
+    assert(decided >= batch.count())
+    // the serving batch arrives as a client sends it: a small local frame
+    val queries = spark.createDataFrame(
+      java.util.Arrays.asList(corpus.filter(col("vec_id") < 20).collect(): _*), corpus.schema)
+    val (served, searchJobs) = withJobCount(
+      SemanticIndex.searchTopK(spark, root, queries, 5).select("q_id", "n_id").collect())
+    assert(served.nonEmpty)
+    // ingest: centroid read 1, assignment checkpoint 1, fresh
+    // checkpoint 2 (existing-id broadcast), labels checkpoint 3 (batch
+    // broadcast, component exchange), writes 2; the count: 3 (labels
+    // broadcast, one exchange). Serve: centroid read 1, scoring scan 1
+    assert(ingestJobs == 12, s"rank-1 ingest + count ran $ingestJobs Spark jobs, pinned at 12")
+    assert(searchJobs == 2, s"searchTopK ran $searchJobs Spark jobs, pinned at 2")
+  }
+
+  test("a hot cluster over blockSize rows splits into blocks; its edges are exactly the τ-pairs") {
+    import spark.implicits._
+    // the two-centroid quantizer of the multi-probe boundary fixture,
+    // then 1100 + 100 vectors inside group A's cone: one cluster over
+    // the 1024-row block size
+    val buckets = (0L until 64L).toDF("id")
+      .withColumn("b", pmod(TextHash.md5Long(col("id").cast("string")), lit(8L)))
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+      .groupBy(_._2).view.mapValues(_.map(_._1).sorted).toMap
+      .filter(_._2.length >= 4).toSeq.sortBy(_._1).take(2)
+    val train = (buckets(0)._2.take(4).zipWithIndex.map { case (id, i) => id -> planeVec(i * 0.01) } ++
+      buckets(1)._2.take(4).zipWithIndex.map { case (id, i) => id -> planeVec(math.Pi + i * 0.01) })
+      .toSeq.toDF("vec_id", "embedding")
+    val tau = 0.9999
+    def hot(lo: Long, n: Int) =
+      (lo until lo + n).map(id => id -> planeVec((id % 997) * 1e-4)).toDF("vec_id", "embedding")
+    val b1 = hot(1000L, 1100)
+    val b2 = hot(3000L, 100)
+
+    val root = tmpDir("sem_idx_hot")
+    SemanticIndex.init(spark, root, train, tau)
+    SemanticIndex.ingest(b1, root).count()
+    val hotCluster = SemanticIndex.decisions(spark, root).select("cluster").distinct()
+      .collect().map(_.getInt(0))
+    assert(hotCluster.length == 1, "fixture premise: the batch lands in one cluster")
+    val c = hotCluster.head
+    // the block count the ingest derives from the footers of the live
+    // files (1100 rows) and the batch's observed rows (100) shows in its
+    // own pair join: 1200 > 1024, so the batch side explodes over 2 blocks
+    val (_, ingested) = blockRows(SemanticIndex.ingest(b2, root).count())
+    assert(ingested == Seq(200L), s"the ingest's pair join must split the cluster in 2: $ingested")
+    val (rebuilt, _) = rebuild(train, b1.unionByName(b2), tau)
+    val expected = decisionSet(rebuilt)
+    assert(expected.count(!_._3) > 100, "fixture premise: the hot cluster is full of duplicates")
+    assert(decisionSet(SemanticIndex.decisions(spark, root)) == expected,
+      "hot-cluster ingest diverged from the frozen-centroid rebuild")
+
+    // the pair join itself: the batch side replicates across both
+    // blocks, and the edges are exactly the brute-force τ-pairs
+    val cents = SemanticIndex.centroids(spark, root)
+    val existing = IvfSearch.buildIndex(b1, cents, "embedding")
+    val assigned = IvfSearch.buildIndex(b2, cents, "embedding")
+    val pairs = SemanticIndex.newPairs(assigned, existing, tau, Map(c -> 1200L))
+      .select("cluster", "id_a", "id_b")
+    val (got, generated) = blockRows(pairSet(pairs))
+    assert(generated == Seq(200L), s"the 100-row batch side must explode into 2 blocks: $generated")
+    val dot = graft.queries.Embeddings.dot _
+    val norm = graft.queries.Embeddings.norm _
+    val all = existing.withColumn("is_new", lit(false))
+      .unionByName(assigned.withColumn("is_new", lit(true)))
+    val exact = pairSet(assigned.select(col("vec_id").as("a"), col("embedding").as("ea"))
+      .crossJoin(all.select(col("cluster"), col("vec_id").as("b"), col("embedding").as("eb"),
+        col("is_new")))
+      .filter(col("a") =!= col("b") && (!col("is_new") || col("a") < col("b")))
+      .filter(dot(col("ea"), col("eb")) / (norm(col("ea")) * norm(col("eb"))) >= tau)
+      .select(col("cluster"), least(col("a"), col("b")).as("id_a"),
+        greatest(col("a"), col("b")).as("id_b")))
+    assert(exact.nonEmpty, "fixture premise: the batch has τ-pairs")
+    assert(got == exact, s"blocked pair join ${got.size} != exact τ-pairs ${exact.size}")
   }
 }

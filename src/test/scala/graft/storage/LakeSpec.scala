@@ -1,8 +1,6 @@
 package graft.storage
 
 import graft.SparkSpec
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Mirrors the reference's integration use cases 1/2/8
@@ -171,31 +169,6 @@ class LakeSpec extends SparkSpec {
         (v(p.getParent.getParent), v(p.getParent))
       }.toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
     }
-
-  /** `body`'s result and the Spark jobs it started on this thread,
-    * scoped by a job group and counted once the bus has drained.
-    */
-  private def withJobCount[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"lakespec-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet(): Unit
-    }
-    ListenerBusAccess.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "LakeSpec job count")
-    try {
-      val out = body
-      ListenerBusAccess.waitUntilEmpty(sc)
-      (out, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("post-write verify reads the whole series: a duplicate in an untouched month is caught") {
     val root = tmpDir("lake-verify")
