@@ -140,4 +140,36 @@ class ManifestCatalogSpec extends SparkSpec {
     val vanished = cat.asOf(pin).select("path").except(cat.snapshot().select("path")).count()
     assert(vanished == 0L) // appends only upserted — nothing vanished
   }
+
+  test("catalog calls run no Spark job: watermark, commits, compact, seq, snapshot collect") {
+    val cat = new ManifestCatalog(spark, tmpDir("cat"))
+    cat.addEntries(Seq(entry("p1"), entry("p2", to = 9000L)))
+    val pins = Seq(
+      "maxTimeTo" -> withJobCount(cat.maxTimeTo("binance", "BTCUSDT", "raw", timeframe = Some("1m"))),
+      "addEntries" -> withJobCount(cat.addEntries(Seq(entry("p3"), entry("p4")))),
+      "deleteEntries" -> withJobCount(cat.deleteEntries(path = Some("p3"))),
+      "compact" -> withJobCount(cat.compact()),
+      "currentSeq" -> withJobCount(cat.currentSeq()),
+      "snapshot().collect()" -> withJobCount(cat.snapshot().collect().length))
+    assert(pins.map { case (op, (_, jobs)) => op -> jobs }.filter(_._2 != 0).isEmpty,
+      s"catalog calls must run 0 Spark jobs: $pins")
+    assert(pins.last._2._1 == 3, "p1, p2, p4 live after the tombstone and compaction")
+  }
+
+  test("deleteEntries returns the row count of the tombstone segment it publishes") {
+    val root = tmpDir("cat")
+    val cat = new ManifestCatalog(spark, root)
+    cat.addEntries(Seq(entry("p1"), entry("p2"), entry("p3"), entry("p4", sym = "ETHUSDT")))
+    val seq = cat.currentSeq()
+    val n = cat.deleteEntries(symbol = Some("btcusdt"))
+    assert(cat.currentSeq() == seq + 1)
+    val segment = spark.read.schema(ManifestCatalog.logSchema)
+      .parquet(f"$root/_manifest/log/${seq + 1}%020d.parquet")
+    assert(n == 3L && segment.count() == n && segment.filter("_deleted").count() == n)
+    // nothing matches: nothing is published
+    def logFiles() = graft.core.PathWalk.list(java.nio.file.Paths.get(s"$root/_manifest/log"))(_.size)
+    val files = logFiles()
+    assert(cat.deleteEntries(symbol = Some("btcusdt")) == 0L)
+    assert(cat.currentSeq() == seq + 1 && logFiles() == files)
+  }
 }
