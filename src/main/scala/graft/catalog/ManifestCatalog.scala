@@ -1,10 +1,12 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{GenericRowWithSchema, Literal, Upper}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Cast, Descending,
+  EvalMode, GenericRowWithSchema, InterpretedOrdering, Literal, NullsLast, SortOrder, Upper}
 import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.example.data.Group
@@ -160,6 +162,16 @@ object ManifestCatalog {
     */
   private def upper(s: String): String =
     if (s == null) null else Upper(Literal(s)).eval().toString
+
+  private def utf8(s: String): UTF8String = if (s == null) null else UTF8String.fromString(s)
+
+  /** `rows` ordered as Spark's `ORDER BY order` orders them, over the
+    * sort-key row `keys` builds from each (`order` binds its columns).
+    */
+  private def sortedBy(rows: Seq[Row], order: Seq[SortOrder])(keys: Row => InternalRow): Seq[Row] = {
+    val ord = new InterpretedOrdering(order)
+    rows.map(r => (keys(r), r)).sortBy(_._1)(ord).map(_._2)
+  }
 
   /** The storage-specific atomic-publish primitive the commit protocol
     * builds on. INVARIANT the impl must provide: for a given target
@@ -406,11 +418,17 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       isUpper(r, "symbol", symbol) && is(r, "type", typ) && is(r, "path", path))
   }
 
-  /** Catalog scan with optional equality filters (SURVEY S12/P5). */
+  /** Catalog scan with optional equality filters (SURVEY S12/P5),
+    * newest first: `ORDER BY created_at DESC, path`, ordered on the
+    * driver with Spark's own ordering, so listing runs no Spark job.
+    */
   def listEntries(exchange: Option[String] = None, market: Option[String] = None,
                   symbol: Option[String] = None, `type`: Option[String] = None): DataFrame =
-    frame(select(live(), exchange, market, symbol, `type`))
-      .orderBy(col("created_at").desc, col("path"))
+    frame(sortedBy(select(live(), exchange, market, symbol, `type`), Seq(
+      SortOrder(BoundReference(0, LongType, nullable = true), Descending),
+      SortOrder(BoundReference(1, StringType, nullable = true), Ascending))) { r =>
+      InternalRow(r.getAs[java.lang.Long]("created_at"), utf8(r.getAs[String]("path")))
+    })
 
   /** Resume watermark: max(time_to) over matching entries (SURVEY A4/T1).
     * `timeframe` scopes the watermark to one series' metadata_json
@@ -431,14 +449,18 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       .maxOption
 
   /** Latest version string for a feature set, numeric-descending where
-    * possible (SURVEY W5/O5; `manifest.py:101-111` casts to int).
+    * possible (SURVEY W5/O5; `manifest.py:101-111` casts to int): the
+    * first row of `ORDER BY try_cast(version AS DOUBLE) DESC NULLS LAST,
+    * version DESC`, with the cast and the ordering Spark's own,
+    * evaluated on the driver (no Spark job).
     */
-  def latestVersion(featureSet: String): Option[String] = {
-    val r = snapshot().filter(col("type") === featureSet)
-      .orderBy(expr("try_cast(version AS DOUBLE)").desc_nulls_last, col("version").desc)
-      .select("version").limit(1).collect()
-    r.headOption.map(_.getString(0))
-  }
+  def latestVersion(featureSet: String): Option[String] =
+    sortedBy(live().filter(_.getAs[String]("type") == featureSet), Seq(
+      SortOrder(BoundReference(0, DoubleType, nullable = true), Descending, NullsLast, Nil),
+      SortOrder(BoundReference(1, StringType, nullable = true), Descending))) { r =>
+      val v = utf8(r.getAs[String]("version"))
+      InternalRow(Cast(Literal(v, StringType), DoubleType, evalMode = EvalMode.TRY).eval(), v)
+    }.headOption.map(_.getAs[String]("version"))
 
   /** Feature-set detection: any type outside the built-ins (SURVEY P6). */
   def featureEntries(): DataFrame =

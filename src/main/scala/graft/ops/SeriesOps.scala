@@ -50,33 +50,47 @@ object SeriesOps {
     * (`dl-datalake/src/dl_datalake/ingest/pipeline.py:170-204`) as one
     * distributed program. Keys partition the lag window, so no global
     * sort: at scale each series sorts independently.
+    *
+    * One pass after the window: a histogram of diffs per key (count and
+    * ts bounds per diff) is folded per key into the row count, the ts
+    * bounds and the histogram array, from which the mode (highest count,
+    * then smallest diff, null diffs excluded), gaps and overlaps are
+    * read. A key with a null value or without a non-null diff gets no
+    * row; with no keys there is always one row, all zero without a
+    * non-null diff. On input in one partition (a small
+    * [[graft.storage.LakeReader.readRange]]) it plans no exchange.
+    * Memory: a key's histogram array holds one entry per distinct diff,
+    * in one aggregation buffer — a handful for bar series, up to the
+    * key's row count for irregular ticks.
     */
   def verifyIntegrity(df: DataFrame, keys: Seq[String] = Nil): DataFrame = {
+    val k = keys.map(col)
     val w =
-      if (keys.nonEmpty) Window.partitionBy(keys.map(col): _*).orderBy(col("ts"))
+      if (keys.nonEmpty) Window.partitionBy(k: _*).orderBy(col("ts"))
       else Window.partitionBy(lit(1)).orderBy(col("ts"))
-    val diffs = df.select(keys.map(col) :+ col("ts"): _*)
+    val perKey = df.select(k :+ col("ts"): _*)
+      .filter(k.map(_.isNotNull).foldLeft(lit(true))(_ && _))
       .withColumn("diff", col("ts") - lag(col("ts"), 1).over(w))
-    // per-key mode of diff (deterministic top-1: count desc, diff asc)
-    val wMode = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("cnt").desc, col("diff"))
-    val modes = diffs.filter(col("diff").isNotNull)
-      .groupBy(keys.map(col) :+ col("diff"): _*)
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("rn", row_number().over(wMode))
-      .filter(col("rn") === 1)
-      .select(keys.map(col) :+ col("diff").as("mode_interval"): _*)
-    val joined =
-      if (keys.nonEmpty) diffs.join(modes, keys)
-      else diffs.crossJoin(broadcast(modes))
-    joined
-      .groupBy(keys.map(col): _*)
-      .agg(
-        count(lit(1)).as("n_rows"),
-        first(col("mode_interval")).as("mode_interval"),
-        count(when(col("diff") > col("mode_interval"), 1)).as("gap_count"),
-        count(when(col("diff") <= 0, 1)).as("overlap_count"),
-        min("ts").as("time_from"), max("ts").as("time_to"))
+      .groupBy(k :+ col("diff"): _*)
+      .agg(count(lit(1)).as("cnt"), min("ts").as("lo"), max("ts").as("hi"))
+      .groupBy(k: _*)
+      .agg(min("lo").as("lo"), max("hi").as("hi"),
+        collect_list(struct(col("diff"), col("cnt"))).as("hist"))
+      .withColumn("mode_interval", array_min(transform(
+        filter(col("hist"), _("diff").isNotNull),
+        e => struct(-e("cnt"), e("diff").as("diff"))))("diff"))
+    val has = col("mode_interval").isNotNull
+    // rows whose diff satisfies `p`; coalesced because Spark types a
+    // fold's result nullable, and the counts it replaces are not
+    def rows(p: Column => Column) = when(has, coalesce(aggregate(col("hist"), lit(0L),
+      (n, e) => n + when(p(e), e("cnt")).otherwise(0L)), lit(0L))).otherwise(0L)
+    (if (keys.nonEmpty) perKey.filter(has) else perKey).select(k ++ Seq(
+      rows(_ => lit(true)).as("n_rows"),
+      col("mode_interval"),
+      rows(_("diff") > col("mode_interval")).as("gap_count"),
+      rows(_("diff") <= 0).as("overlap_count"),
+      when(has, col("lo")).as("time_from"),
+      when(has, col("hi")).as("time_to")): _*)
   }
 
   /** Gap-filling row generator (SURVEY §2.10): emit the missing bucket

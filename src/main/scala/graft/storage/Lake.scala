@@ -3,6 +3,15 @@ package graft.storage
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, PartitionDirectory}
+import org.apache.spark.sql.graftglue.FooterSchemas
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
 import graft.core.Symbols
 import scala.util.chaining._
 
@@ -100,12 +109,9 @@ private[storage] object LakeIO {
     })
   }
 
-  def read(spark: SparkSession, root: String, mergeSchema: Boolean = true): DataFrame = {
-    val df = ioSession(spark).read
-      .option("mergeSchema", mergeSchema.toString).parquet(root)
-    df.withColumn("year", col("year").cast("int"))
-      .withColumn("month", col("month").cast("int"))
-  }
+  def read(spark: SparkSession, root: String, mergeSchema: Boolean = true): DataFrame =
+    withMonthInts(ioSession(spark).read
+      .option("mergeSchema", mergeSchema.toString).parquet(root))
 
   /** Read an explicit list of lake leaf files (a stats-skipping
     * survivor list), partition columns derived via `basePath` — through
@@ -113,18 +119,29 @@ private[storage] object LakeIO {
     * `period=1d` survives here too.
     */
   def readFiles(spark: SparkSession, root: String, paths: Seq[String],
-                mergeSchema: Boolean = true): DataFrame = {
-    val df = ioSession(spark).read
+                mergeSchema: Boolean = true): DataFrame =
+    withMonthInts(ioSession(spark).read
       .option("mergeSchema", mergeSchema.toString)
-      .option("basePath", root).parquet(paths: _*)
-    df.withColumn("year", col("year").cast("int"))
-      .withColumn("month", col("month").cast("int"))
-  }
+      .option("basePath", root).parquet(paths: _*))
+
+  /** The lake's partition columns, outermost first: the series key
+    * levels, then the ts month. Every writer lays files out by them.
+    */
+  val PartitionCols = Seq("exchange", "market", "symbol", "type", "period", "year", "month")
+
+  private val SeriesLevels = PartitionCols.take(5)
 
   /** The Hive-style directory of one series under `root` (sanitized key). */
   def seriesDir(root: String, k: SeriesKey): String =
-    s"$root/exchange=${k.exchange}/market=${k.market}/symbol=${k.symbol}" +
-      s"/type=${k.`type`}/period=${k.period}"
+    (root +: SeriesLevels.zip(Seq(k.exchange, k.market, k.symbol, k.`type`, k.period))
+      .map { case (name, value) => partitionSegment(name, value) }).mkString("/")
+
+  /** `name=value`, with the value escaped as Spark's partitioned write escapes it. */
+  private def partitionSegment(name: String, value: String): String =
+    s"$name=${ExternalCatalogUtils.escapePathName(value)}"
+
+  private def partitionDir(parent: Path, name: String, value: String): Path =
+    new Path(parent, partitionSegment(name, value))
 
   /** The committed data files under `dir`: non-hidden `*.parquet` with
     * no hidden (`_`/`.` staging) directory between them and `dir`.
@@ -132,10 +149,10 @@ private[storage] object LakeIO {
     * nothing, so a tree without data files is an empty series, while a
     * real series whose read failed must propagate the failure.
     */
-  def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                dir: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.Path] = {
+  def dataFiles(fs: FileSystem, dir: Path): Iterator[FileStatus] = {
     val it = fs.listFiles(dir, true)
-    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath).filter { f =>
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next(): FileStatus).filter { s =>
+      val f = s.getPath
       val name = f.getName
       // a file under a hidden (staging) directory is debris, not data
       val hiddenAncestor = Iterator.iterate(f.getParent)(_.getParent)
@@ -146,14 +163,130 @@ private[storage] object LakeIO {
     }
   }
 
+  /** `files` in path order, the order Spark's schema inference reads them in. */
+  def inPathOrder(files: IterableOnce[FileStatus]): Seq[FileStatus] =
+    files.iterator.toSeq.sortBy(_.getPath.toString)
+
+  /** The parquet footer of `f`, decoded on the driver from the file's
+    * tail, `[footer][4-byte little-endian footer length]["PAR1"]`, as
+    * `SemanticIndex.liveRows` does: well under a millisecond a file,
+    * against ~13 ms for `ParquetFileReader.open` and a Spark job for
+    * schema inference.
+    */
+  private def footer(fs: FileSystem, f: FileStatus): Footer = {
+    val in = fs.open(f.getPath)
+    try {
+      val tail = new Array[Byte](8)
+      if (f.getLen >= 12) in.readFully(f.getLen - 8, tail)
+      val n = java.nio.ByteBuffer.wrap(tail).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+      if (new String(tail, 4, 4, "US-ASCII") != "PAR1" || n <= 0 || n > f.getLen - 12)
+        throw new java.io.IOException(s"${f.getPath} is not a parquet file (no footer)")
+      val bytes = new Array[Byte](n)
+      in.readFully(f.getLen - 8 - n, bytes)
+      new Footer(f.getPath, new ParquetMetadataConverter().fromParquetMetadata(
+        org.apache.parquet.format.Util.readFileMetaData(new java.io.ByteArrayInputStream(bytes))))
+    } finally in.close()
+  }
+
+  /** The data schema of `files` (in path order) from their footers, as
+    * Spark's parquet inference gives it: the first file's, or with
+    * `mergeSchema` every file's merged in path order. No Spark job. An
+    * unreadable footer or an irreconcilable merge throws.
+    */
+  def footerSchema(spark: SparkSession, fs: FileSystem, files: Seq[FileStatus],
+                   mergeSchema: Boolean): StructType =
+    FooterSchemas.merged(ioSession(spark),
+      (if (mergeSchema) files else files.take(1)).map(footer(fs, _)))
+
+  /** A scan of exactly `files` with `dataSchema`, partition columns
+    * derived from their paths below `root`.
+    */
+  def scanFiles(spark: SparkSession, root: String, files: Seq[FileStatus],
+                dataSchema: StructType): DataFrame =
+    withMonthInts(ioSession(spark).read.schema(dataSchema).option("basePath", root)
+      .parquet(files.map(_.getPath.toString): _*))
+
+  /** How many partitions [[scanFiles]] of `files` plans: [[partitionCount]]
+    * under the lake-IO session's conf.
+    */
+  def scanPartitions(spark: SparkSession, files: Seq[FileStatus]): Int =
+    partitionCount(ioSession(spark), files)
+
+  /** The number of partitions a parquet scan of `files` plans in
+    * `session`, by `FileSourceScanExec`'s own steps, without a scan:
+    * `FilePartition.maxSplitBytes` over the files (the session's max
+    * partition bytes, open cost and minimum partition number), each file
+    * cut into splits of at most that size (parquet is splittable),
+    * largest first, packed by `FilePartition.getFilePartitions`. No file
+    * gives 0.
+    */
+  def partitionCount(session: SparkSession, files: Seq[FileStatus]): Int = {
+    val maxSplit = FilePartition.maxSplitBytes(session,
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray)))
+    val splits = files.flatMap(f => PartitionedFileUtil.splitFiles(FileStatusWithMetadata(f),
+      f.getPath, isSplitable = true, maxSplit, InternalRow.empty)).sortBy(-_.length)
+    FilePartition.getFilePartitions(session, splits, maxSplit).size
+  }
+
+  /** The frame a scan of no file with `dataSchema` would give: its
+    * nullable data columns, then the partition columns (year/month as int).
+    */
+  def emptyFrame(spark: SparkSession, dataSchema: StructType): DataFrame =
+    ioSession(spark).createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(FooterSchemas.nullable(dataSchema).fields ++ PartitionCols.map(c =>
+        StructField(c, if (SeriesLevels.contains(c)) StringType else IntegerType))))
+
+  /** The `name=` directories under `dir`: the one for `value`, or all of
+    * them when `value` is None.
+    */
+  private def partitionDirs(fs: FileSystem, dir: Path, name: String,
+                            value: Option[String]): Seq[Path] = value match {
+    case Some(v) => Seq(partitionDir(dir, name, v)).filter(fs.exists)
+    case None if fs.exists(dir) =>
+      fs.listStatus(dir).toSeq.collect {
+        case s if s.isDirectory && s.getPath.getName.startsWith(s"$name=") => s.getPath
+      }
+    case None => Nil
+  }
+
+  /** The `period=` directories of every series matching the key (values
+    * sanitized like [[SeriesKey.sanitized]]); a None level matches any
+    * value. Lists nothing outside `exchange=E`.
+    */
+  def seriesDirs(fs: FileSystem, root: String, exchange: String, market: Option[String],
+                 symbol: String, `type`: String, period: Option[String]): Seq[Path] =
+    for {
+      m <- partitionDirs(fs, partitionDir(new Path(root), "exchange", exchange), "market", market)
+      p <- partitionDirs(fs, partitionDir(partitionDir(m, "symbol", symbol), "type", `type`),
+        "period", period)
+    } yield p
+
+  /** The `year=/month=` directories under a series directory, each with
+    * its month key `year * 100 + month`; a value that is not an integer
+    * names no month.
+    */
+  def monthDirs(fs: FileSystem, series: Path): Seq[(Long, Path)] = {
+    def value(p: Path) = p.getName.drop(p.getName.indexOf('=') + 1).trim.toIntOption
+    for {
+      y <- partitionDirs(fs, series, "year", None)
+      yv <- value(y).toSeq
+      m <- partitionDirs(fs, y, "month", None)
+      mv <- value(m).toSeq
+    } yield (yv.toLong * 100L + mv, m)
+  }
+
+  private def withMonthInts(df: DataFrame): DataFrame =
+    df.withColumn("year", col("year").cast("int"))
+      .withColumn("month", col("month").cast("int"))
+
   /** Open ONE series, scoped to its own directory tree: `basePath`
-    * keeps the partition columns, but listing, schema inference
-    * (mergeSchema footer reads) and scans never leave the series dir.
+    * keeps the partition columns, but listing, footer reads and scans
+    * never leave the series dir.
     *
     * Load-bearing twice over:
-    *  - scale: a merge-write that opened the ROOT would run mergeSchema
-    *    footer reads over the ENTIRE lake on every flush — O(lake
-    *    files) per ingest chunk instead of O(series);
+    *  - scale: a merge-write that opened the ROOT would read footers
+    *    over the ENTIRE lake on every flush — O(lake files) per ingest
+    *    chunk instead of O(series);
     *  - concurrency: a sibling writer process rewriting ANOTHER series'
     *    directories mid-listing/footer-read would throw
     *    FileNotFoundException into this writer's merge read (observed
@@ -161,39 +294,28 @@ private[storage] object LakeIO {
     *    each other's files, so concurrent per-series writers only
     *    contend on the catalog's create-exclusive commit, by design.
     *
-    * Returns None if the series has no directory yet (first write).
+    * The schema comes from the series' footers on the driver
+    * ([[footerSchema]]), so opening a series runs no Spark job.
+    *
+    * Returns None if the series has no committed data file: no
+    * directory yet (first write), or a directory that holds only
+    * writer-crash debris (a writer killed mid-flush leaving staging or
+    * `_temporary` files — precisely the q81 forked-child crash shape),
+    * which is an empty series, not a permanently wedged one. A series
+    * WITH data files whose footers cannot be read or merged (say,
+    * incompatible column types across months) throws: treating it as
+    * empty would let the next merge-write take real data for a first
+    * write.
     */
   def readSeriesScoped(spark: SparkSession, root: String, k: SeriesKey,
                        mergeSchema: Boolean = true): Option[DataFrame] = {
-    val dir = seriesDir(root, k)
-    val hPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) None
-    else {
-      try {
-        val df = ioSession(spark).read
-          .option("mergeSchema", mergeSchema.toString)
-          .option("basePath", root)
-          .parquet(dir)
-        df.schema // force partition discovery NOW (fail fast, see catch)
-        Some(df.withColumn("year", col("year").cast("int"))
-          .withColumn("month", col("month").cast("int")))
-      } catch {
-        // a directory that EXISTS but holds no readable parquet footers
-        // (a writer killed mid-flush leaving only staging/_temporary
-        // debris — precisely the q81 forked-child crash shape) is an
-        // empty series, not a permanently wedged one: schema inference
-        // throws AnalysisException, and without this guard every later
-        // merge-write on the series would fail until manual cleanup.
-        // The catch is NARROW by data-file probe, not by exception type:
-        // an irreconcilable mergeSchema conflict (incompatible column
-        // types across months) is ALSO an AnalysisException, and mapping
-        // it to "empty series" would let the next merge-write treat real
-        // data as a first write — rethrow whenever data files exist
-        case e: org.apache.spark.sql.AnalysisException =>
-          if (dataFiles(fs, hPath).hasNext) throw e else None
-      }
-    }
+    val dir = new Path(seriesDir(root, k))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = if (fs.exists(dir)) inPathOrder(dataFiles(fs, dir)) else Nil
+    if (files.isEmpty) None
+    else Some(withMonthInts(ioSession(spark).read
+      .schema(footerSchema(spark, fs, files, mergeSchema))
+      .option("basePath", root).parquet(dir.toString)))
   }
 
   /** Only the `ts` column of one series, read with an explicit schema:
@@ -219,14 +341,14 @@ private[storage] object LakeIO {
 final class LakeWriter(spark: SparkSession, root: String,
                        statsColumns: Seq[String] = Nil) {
 
-  private val partCols = Seq("exchange", "market", "symbol", "type", "period", "year", "month")
+  private val partCols = LakeIO.PartitionCols
 
   private def withPartitionCols(df: DataFrame, key: SeriesKey): DataFrame = {
     val k = key.sanitized
     // UTC-arithmetic date, NOT year(timestamp_millis(ts)): the latter
     // follows spark.sql.session.timeZone, so a non-UTC session would
     // write partitions offset from the UTC months that BOTH pruning
-    // paths (LakeReader.monthBounds, TsPartitionPruning) assume, and
+    // paths (readRange's month listing, TsPartitionPruning) assume, and
     // pruned reads would silently miss month-boundary rows.
     val d = graft.core.MonthKeys.utcDate(col("ts").cast("long"))
     df.withColumn("ts", col("ts").cast("long")) // epoch-ms contract (§1.2)
@@ -413,23 +535,59 @@ final class LakeReader(spark: SparkSession, root: String) {
   private def base(mergeSchema: Boolean): DataFrame =
     LakeIO.read(spark, root, mergeSchema)
 
-  /** Range scan: partition-pruned by series key AND by year/month bounds
-    * derived from the ts range (exceeding the reference, which only
-    * filters on ts — SURVEY §4 "partition pruning"), then ts row filter,
-    * ordered by ts. Market is optional (wildcard market level, reader.py:44).
+  /** Range scan: the rows of the matched series with `ts` in
+    * `[startMs, endMs]`, ordered by ts. Market and period are optional
+    * (a wildcard level, reader.py:44).
+    *
+    * Listing scope: only the matched series' directories,
+    * `exchange=E/market=M/symbol=S/type=T/period=P`, every `market=` or
+    * `period=` directory when that level is left open, and under them
+    * only the `year=/month=` directories the ts range overlaps; the
+    * scan reads exactly those months' data files, partition columns
+    * from their paths (year/month as int).
+    *
+    * Schema: from parquet footers decoded on the driver
+    * ([[LakeIO.footerSchema]]) — the first in-range file in path order,
+    * or with `mergeSchema` every file of the matched series merged in
+    * path order. A range with no file is an empty frame with that
+    * schema (from the series' first file). A key with no data file at
+    * all throws, as [[readWhere]] does for an unknown series.
+    *
+    * Job budget: none to build the frame (Spark lists more than 32
+    * files with a job). When Spark's own split planning puts the
+    * in-range files in one scan partition ([[LakeIO.scanPartitions]];
+    * under the default confs on two or more cores, one file of at most
+    * the 4 MB open cost),
+    * the frame is that partition sorted by ts, with no exchange, so an
+    * aggregate or window over it plans no shuffle either (a resample or
+    * an integrity report collects in one job). A scan of more partitions
+    * keeps them and gets a global `orderBy`.
     */
   def readRange(exchange: String, symbol: String, `type`: String,
                 startMs: Long, endMs: Long,
                 market: Option[String] = None,
                 period: Option[String] = None,
                 mergeSchema: Boolean = false): DataFrame = {
-    var df = base(mergeSchema)
-      .filter(col("exchange") === Symbols.sanitize(exchange) &&
-        col("symbol") === Symbols.sanitize(symbol) && col("type") === `type`)
-    market.foreach(m => df = df.filter(col("market") === Symbols.sanitize(m)))
-    period.foreach(p => df = df.filter(col("period") === p))
-    df.filter(monthBounds(startMs, endMs) && col("ts").between(startMs, endMs))
-      .orderBy("ts")
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val series = LakeIO.seriesDirs(fs, root, Symbols.sanitize(exchange),
+      market.map(Symbols.sanitize), Symbols.sanitize(symbol), `type`, period)
+    val (keyLo, keyHi) = (graft.core.MonthKeys.monthKey(startMs),
+      graft.core.MonthKeys.monthKey(endMs))
+    val inRange = LakeIO.inPathOrder(series.flatMap(LakeIO.monthDirs(fs, _)).iterator
+      .collect { case (k, dir) if k >= keyLo && k <= keyHi => dir }
+      .flatMap(LakeIO.dataFiles(fs, _)))
+    lazy val all = LakeIO.inPathOrder(series.iterator.flatMap(LakeIO.dataFiles(fs, _)))
+    if (inRange.isEmpty && all.isEmpty) sys.error("readRange: unknown series " +
+      s"$exchange/${market.getOrElse("*")}/$symbol/${`type`}/${period.getOrElse("*")}")
+    val schema = LakeIO.footerSchema(spark, fs,
+      if (mergeSchema || inRange.isEmpty) all else inRange, mergeSchema)
+    if (inRange.isEmpty) LakeIO.emptyFrame(spark, schema)
+    else {
+      val df = LakeIO.scanFiles(spark, root, inRange, schema)
+        .filter(col("ts").between(startMs, endMs))
+      if (LakeIO.scanPartitions(spark, inRange) == 1) df.coalesce(1).sortWithinPartitions("ts")
+      else df.orderBy("ts")
+    }
   }
 
   /** year/month partition predicate implied by a ts range: prunes month

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   */
 final class LakeMaintenance(spark: SparkSession, root: String) {
 
-  private val partCols = Seq("exchange", "market", "symbol", "type", "period", "year", "month")
+  private val partCols = LakeIO.PartitionCols
 
   /** Compact a series' month partitions to one ts-sorted file each:
     * read → repartition on the partition key → sortWithinPartitions(ts)
@@ -41,7 +41,7 @@ final class LakeMaintenance(spark: SparkSession, root: String) {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return 0L
     val byPartition = LakeIO.dataFiles(fs, dir).flatMap { f =>
-      val month = f.getParent
+      val month = f.getPath.getParent
       val year = month.getParent
       for {
         y <- partitionValue(year, "year")

@@ -150,10 +150,34 @@ class ManifestCatalogSpec extends SparkSpec {
       "deleteEntries" -> withJobCount(cat.deleteEntries(path = Some("p3"))),
       "compact" -> withJobCount(cat.compact()),
       "currentSeq" -> withJobCount(cat.currentSeq()),
+      "listEntries().collect()" -> withJobCount(cat.listEntries().collect().length),
+      "latestVersion" -> withJobCount(cat.latestVersion("raw").size),
       "snapshot().collect()" -> withJobCount(cat.snapshot().collect().length))
     assert(pins.map { case (op, (_, jobs)) => op -> jobs }.filter(_._2 != 0).isEmpty,
       s"catalog calls must run 0 Spark jobs: $pins")
     assert(pins.last._2._1 == 3, "p1, p2, p4 live after the tombstone and compaction")
+  }
+
+  test("listEntries and latestVersion order rows as the Spark ORDER BY they replace") {
+    import org.apache.spark.sql.functions.{col, expr}
+    val cat = new ManifestCatalog(spark, tmpDir("cat"))
+    val versions = Seq("2", "10", "9", "1.5", " 7 ", "v3", "abc", "1e1", "NaN", "-0", "0", "10.0")
+    cat.addEntries(versions.zipWithIndex.map { case (v, i) =>
+      entry(s"f$i", typ = "alpha_set", version = v, created = (i % 3).toLong)
+    } ++ Seq(entry("b", created = 5L), entry("a", created = 5L), entry("é", created = 5L)))
+    val sparkOrder = cat.snapshot().orderBy(col("created_at").desc, col("path")).collect().toSeq
+    assert(cat.listEntries().collect().toSeq == sparkOrder)
+    def sparkLatest(set: String) = cat.snapshot().filter(col("type") === set)
+      .orderBy(expr("try_cast(version AS DOUBLE)").desc_nulls_last, col("version").desc)
+      .select("version").limit(1).collect().headOption.map(_.getString(0))
+    // NaN sorts above every number; without it "1e1", "10.0" and "10"
+    // tie as doubles and the string order picks "1e1"
+    cat.addEntries(versions.filterNot(_ == "NaN").zipWithIndex.map { case (v, i) =>
+      entry(s"g$i", typ = "beta_set", version = v)
+    })
+    assert(cat.latestVersion("alpha_set") == sparkLatest("alpha_set"))
+    assert(cat.latestVersion("beta_set") == sparkLatest("beta_set"))
+    assert(sparkLatest("alpha_set").contains("NaN") && sparkLatest("beta_set").contains("1e1"))
   }
 
   test("deleteEntries returns the row count of the tombstone segment it publishes") {

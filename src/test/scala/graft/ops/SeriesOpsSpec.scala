@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SeriesOpsSpec extends SparkSpec {
@@ -50,6 +51,76 @@ class SeriesOpsSpec extends SparkSpec {
     assert(rep.length == 2)
     assert(rep(0).getAs[Long]("gap_count") == 0L)
     assert(rep(1).getAs[Long]("gap_count") == 1L)
+  }
+
+  /** The window + mode self-join formulation verifyIntegrity replaced,
+    * kept as the reference its one-pass histogram is checked against.
+    */
+  private def verifyIntegrityReference(df: DataFrame, keys: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w =
+      if (keys.nonEmpty) Window.partitionBy(keys.map(col): _*).orderBy(col("ts"))
+      else Window.partitionBy(lit(1)).orderBy(col("ts"))
+    val diffs = df.select(keys.map(col) :+ col("ts"): _*)
+      .withColumn("diff", col("ts") - lag(col("ts"), 1).over(w))
+    val wMode = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("cnt").desc, col("diff"))
+    val modes = diffs.filter(col("diff").isNotNull)
+      .groupBy(keys.map(col) :+ col("diff"): _*)
+      .agg(count(lit(1)).as("cnt"))
+      .withColumn("rn", row_number().over(wMode))
+      .filter(col("rn") === 1)
+      .select(keys.map(col) :+ col("diff").as("mode_interval"): _*)
+    val joined =
+      if (keys.nonEmpty) diffs.join(modes, keys)
+      else diffs.crossJoin(broadcast(modes))
+    joined
+      .groupBy(keys.map(col): _*)
+      .agg(
+        count(lit(1)).as("n_rows"),
+        first(col("mode_interval")).as("mode_interval"),
+        count(when(col("diff") > col("mode_interval"), 1)).as("gap_count"),
+        count(when(col("diff") <= 0, 1)).as("overlap_count"),
+        min("ts").as("time_from"), max("ts").as("time_to"))
+  }
+
+  /** Seeded series per key: mostly 1m steps, with gaps (2–3 steps),
+    * duplicate ts (overlaps), step mixes that tie the mode, single-row
+    * and empty keys, a null key and the odd null ts.
+    */
+  private def randomSeries(seed: Long): DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    val rows = for {
+      k <- Seq[Option[String]](Some("A"), Some("B"), Some("C"), Some("D"), None)
+      n = rnd.nextInt(4) match { case 0 => rnd.nextInt(2); case _ => 2 + rnd.nextInt(40) }
+      tieSteps = rnd.nextBoolean()
+      ts <- Iterator.iterate(1672531200000L + rnd.nextInt(5) * 60000L) { t =>
+        val step =
+          if (tieSteps) Seq(60000L, 120000L)(rnd.nextInt(2))
+          else rnd.nextInt(10) match {
+            case 0 => 0L
+            case 1 => 60000L * (2 + rnd.nextInt(2))
+            case _ => 60000L
+          }
+        t + step
+      }.take(n).toSeq
+    } yield (k.orNull, if (rnd.nextInt(25) == 0) None else Some(ts))
+    rnd.shuffle(rows).toDF("sym", "ts").repartition(3)
+  }
+
+  test("verifyIntegrity equals the window + self-join reference on seeded series") {
+    import spark.implicits._
+    val empty = Seq.empty[(String, Long)].toDF("sym", "ts")
+    val inputs = (1L to 12L).map(randomSeries) :+ empty
+    for ((df, i) <- inputs.zipWithIndex; keys <- Seq(Seq("sym"), Nil)) {
+      val in = if (keys.isEmpty) df.filter(col("sym") === "A" || lit(i % 2 == 0)) else df
+      val got = SeriesOps.verifyIntegrity(in, keys)
+      val want = verifyIntegrityReference(in, keys)
+      assert(got.schema == want.schema, s"input $i keys $keys")
+      def sorted(d: DataFrame) = d.collect().toSeq.sortBy(r => Option(r.get(0)).map(_.toString))
+      assert(sorted(got) == sorted(want), s"input $i keys $keys")
+    }
   }
 
   test("missingSlots emits exactly the knocked-out timestamps") {

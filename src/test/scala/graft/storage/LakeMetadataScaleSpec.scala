@@ -77,8 +77,11 @@ class LakeMetadataScaleSpec extends SparkSpec {
       market = Some("SPOT"), period = Some("tick"))
 
   /** min-of-3 wall clock of a full fresh read (listing + plan + scan);
-    * each rep re-lists because `spark.read.parquet(root)` builds a new
-    * InMemoryFileIndex — exactly the ad-hoc-query cost being measured.
+    * each rep lists the series' month directories again and builds a
+    * new InMemoryFileIndex over the in-range files — exactly the
+    * ad-hoc-query cost being measured. The listing never leaves the
+    * series' directories, so it scales with the series' months and the
+    * month's files, not with the lake.
     */
   private def minLatencyMs(root: String, sym: String): Long =
     (1 to 3).map { _ =>

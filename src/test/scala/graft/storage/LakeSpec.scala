@@ -1,6 +1,7 @@
 package graft.storage
 
 import graft.SparkSpec
+import graft.ops.SeriesOps
 import org.apache.spark.sql.functions._
 
 /** Mirrors the reference's integration use cases 1/2/8
@@ -216,12 +217,142 @@ class LakeSpec extends SparkSpec {
     writer.writeOhlc(candleDf(feb), key)
     assert(filesPerMonth(root, key) == Map((2023, 1) -> 1, (2023, 2) -> 1))
 
-    // touched months 1, footer 1, existing-month checkpoint 1, write 2
-    // (one exchange), verify 2
+    // touched months 1, existing-month checkpoint 1, write 2 (one
+    // exchange), verify 2; the existing months' schema comes from their
+    // footers on the driver
     val feb2 = genCandles(12, startMs = feb(6).ts, periodMs = HourMs, seed = 8)
     val (rep, jobs) = withJobCount(writer.writeOhlc(candleDf(feb2), key))
     assert(rep == WriteReport(60L, first.head.ts, feb2.last.ts, monotonic = true, 1L))
     assert(filesPerMonth(root, key) == Map((2023, 1) -> 1, (2023, 2) -> 1))
-    assert(jobs == 7, s"merge-write ran $jobs Spark jobs, pinned at 7")
+    assert(jobs == 6, s"merge-write ran $jobs Spark jobs, pinned at 6")
+  }
+
+  private def writeTicks(root: String, key: SeriesKey, n: Int, startMs: Long): Unit = {
+    import spark.implicits._
+    val ticks = (0 until n).map(i => (startMs + i * 1000L, 100.0 + i, 0.5 * i, i % 2 == 0))
+      .toDF("ts", "price", "qty", "is_buy")
+    new LakeWriter(spark, root).writeTicks(ticks, key)
+  }
+
+  test("mixed lake: a ticks read gets the ticks columns, not the lake's first file's") {
+    // the raw series' files come first in path order (type=raw < type=ticks)
+    val root = tmpDir("lake-mixed")
+    new LakeWriter(spark, root).writeOhlc(candleDf(genCandles(30)),
+      SeriesKey("BINANCE", "SPOT", "BTC", "raw", "1m"))
+    writeTicks(root, SeriesKey("BINANCE", "SPOT", "BTC", "ticks", "tick"), 20, Jan31)
+    val reader = new LakeReader(spark, root)
+    for (df <- Seq(
+        reader.readRange("BINANCE", "BTC", "ticks", 0L, Long.MaxValue, Some("SPOT"), Some("tick")),
+        reader.readRange("BINANCE", "BTC", "ticks", 0L, Long.MaxValue))) {
+      assert(df.columns.toSeq.take(4) == Seq("ts", "price", "qty", "is_buy"), df.columns.toSeq)
+      val rows = df.select("ts", "price", "is_buy").collect()
+      assert(rows.length == 20)
+      assert(rows.map(_.getDouble(1)).toSeq == (0 until 20).map(100.0 + _))
+      assert(rows.head.getBoolean(2))
+    }
+  }
+
+  test("a range with no file is empty with the series' schema; an unknown series throws") {
+    val root = tmpDir("lake-empty")
+    new LakeWriter(spark, root).writeOhlc(candleDf(genCandles(30)),
+      SeriesKey("EX", "SPOT", "SYM", "raw", "1m"))
+    writeTicks(root, SeriesKey("EX", "SPOT", "TCK", "ticks", "tick"), 10, Jan31)
+    val reader = new LakeReader(spark, root)
+    // January ticks exist; a March range holds no file
+    val (none, jobs) = withJobCount {
+      val df = reader.readRange("EX", "TCK", "ticks", 1677628800000L, 1680307199999L)
+      (df.columns.toSeq, df.collect().length)
+    }
+    assert(none == (Seq("ts", "price", "qty", "is_buy") ++ LakeIO.PartitionCols, 0))
+    assert(jobs == 0, s"an empty range ran $jobs Spark jobs")
+    // a key with no data file at all names itself, as readWhere does
+    val e = intercept[RuntimeException](reader.readRange("EX", "NOPE", "raw", 0L, Long.MaxValue))
+    assert(e.getMessage.contains("unknown series EX/*/NOPE/raw/*"), e.getMessage)
+  }
+
+  /** The range read as before the scoped listing: the whole root,
+    * filtered by key and ts, globally ordered.
+    */
+  private def wholeRootRange(root: String, symbol: String, lo: Long, hi: Long) =
+    LakeIO.read(spark, root, mergeSchema = false)
+      .filter(col("exchange") === "EX" && col("symbol") === symbol && col("type") === "raw")
+      .filter(col("ts").between(lo, hi)).orderBy("ts")
+
+  test("a one-file range reads in 0 jobs; resample and verify over it collect in 1 each") {
+    val root = tmpDir("lake-jobs")
+    val key = SeriesKey("EX", "SPOT", "SYM", "raw", "1m")
+    // two days of 1m candles across a month boundary: two month files;
+    // the range lies in February's
+    val data = genCandles(2880, startMs = Jan31)
+    new LakeWriter(spark, root).writeOhlc(candleDf(data), key)
+    val reader = new LakeReader(spark, root)
+    val (df, readJobs) = withJobCount(
+      reader.readRange("EX", "SYM", "raw", data(1500).ts, data(2819).ts, Some("SPOT"), Some("1m")))
+    val (bars, resampleJobs) = withJobCount(SeriesOps.resampleOhlcv(df, "1h").collect())
+    val (report, verifyJobs) = withJobCount(SeriesOps.verifyIntegrity(df).collect())
+    assert(bars.length == 22)
+    assert(report.map(r => (r.getAs[Long]("n_rows"), r.getAs[Long]("gap_count"),
+      r.getAs[Long]("overlap_count"))).toSeq == Seq((1320L, 0L, 0L)))
+    assert((readJobs, resampleJobs, verifyJobs) == (0, 1, 1),
+      s"readRange/resample/verify ran $readJobs/$resampleJobs/$verifyJobs jobs, pinned at 0/1/1")
+    // the scan names only the series' in-range month file
+    val files = df.inputFiles.toSeq
+    assert(files.size == 1 &&
+      files.forall(_.contains("/symbol=SYM/type=raw/period=1m/year=2023/month=2/")), files)
+  }
+
+  test("a range Spark scans in several partitions keeps them: same rows and order either way") {
+    val root = tmpDir("lake-split")
+    val key = SeriesKey("EX", "SPOT", "SYM", "raw", "1m")
+    val writer = new LakeWriter(spark, root)
+    val data = genCandles(2880, startMs = Jan31)
+    writer.writeOhlc(candleDf(data), key)
+    // another series and a month outside the range: neither is scanned
+    writer.writeOhlc(candleDf(genCandles(50)), key.copy(symbol = "OTHER"))
+    writer.writeOhlc(candleDf(genCandles(50, startMs = 1677628800000L)), key)
+    val reader = new LakeReader(spark, root)
+    def rangeExchange(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("Exchange rangepartitioning")
+    // February alone is one small file, one scan partition; January and
+    // February are two files, which Spark's split planning keeps apart
+    for ((lo, hi, nFiles) <- Seq((data(1450).ts, data(2870).ts, 1), (data(10).ts, data(2870).ts, 2))) {
+      val df = reader.readRange("EX", "SYM", "raw", lo, hi)
+      assert(df.inputFiles.length == nFiles && df.inputFiles.forall(f =>
+        f.contains("/symbol=SYM/") && !f.contains("/month=3/")), df.inputFiles.toSeq)
+      assert(rangeExchange(df) == (nFiles > 1))
+      val before = wholeRootRange(root, "SYM", lo, hi)
+      assert(df.schema == before.schema)
+      val rows = df.collect().toSeq
+      assert(rows == before.collect().toSeq)
+      assert(rows.map(_.getAs[Long]("ts")) == data.filter(c => c.ts >= lo && c.ts <= hi).map(_.ts))
+    }
+  }
+
+  test("partitionCount is the partition count Spark's scan plans for the same files") {
+    val root = tmpDir("lake-splits")
+    val key = SeriesKey("EX", "SPOT", "SYM", "raw", "1m")
+    val writer = new LakeWriter(spark, root)
+    writer.writeOhlc(candleDf(genCandles(2880, startMs = Jan31)), key)
+    writer.writeOhlc(candleDf(genCandles(20000, startMs = 1677628800000L, seed = 3)), key)
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = LakeIO.inPathOrder(LakeIO.dataFiles(fs, new org.apache.hadoop.fs.Path(root)))
+    assert(files.size == 3)
+    val confs = Seq(
+      Map.empty[String, String],
+      Map("spark.sql.files.maxPartitionBytes" -> "4096"),
+      Map("spark.sql.files.openCostInBytes" -> "0"),
+      Map("spark.sql.files.openCostInBytes" -> "0", "spark.sql.files.minPartitionNum" -> "1"),
+      Map("spark.sql.files.openCostInBytes" -> "1024", "spark.sql.files.maxPartitionBytes" -> "65536"))
+    val counts = for (conf <- confs; subset <- Seq(files.take(1), files.drop(1), files)) yield {
+      val s = spark.newSession()
+      conf.foreach { case (k, v) => s.conf.set(k, v) }
+      val planned = s.read.option("basePath", root)
+        .parquet(subset.map(_.getPath.toString): _*).rdd.getNumPartitions
+      assert(LakeIO.partitionCount(s, subset) == planned, s"$conf over ${subset.size} files")
+      planned
+    }
+    // the confs reach both sides of the one-partition fork
+    assert(counts.contains(1) && counts.exists(_ > 1), counts)
+    assert(LakeIO.scanPartitions(spark, Nil) == 0)
   }
 }

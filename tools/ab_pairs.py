@@ -10,9 +10,16 @@ odd pairs the change, so drift on the box lands on both sides alike.
 
 Then, for each end-to-end metric of BENCHMARK.json, it prints both
 sides' median and quartiles, how many pairs the change won (a tie
-counts for neither side), and whether a gain holds: the change wins at
+counts for neither side), whether a gain holds: the change wins at
 least 9 pairs in 10 and the medians differ, in the metric's better
-direction, by more than the parent's interquartile range.
+direction, by more than the parent's interquartile range; and the
+regression verdict:
+  worse       the change's median is worse than the parent's by more
+              than the metric's bound (a fraction of the parent median);
+  unresolved  not worse, but the parent's interquartile range is wider
+              than the bound, so the runs cannot show the bound holds,
+              unless every change run beats every parent run;
+  ok          otherwise.
 
 The two files are ordinary `run.py --save` output, so
 `python3 perfbench/run.py --compare DIR/parent.jsonl DIR/change.jsonl`
@@ -45,6 +52,17 @@ def quartiles(xs):
     return tuple(statistics.quantiles(xs, n=4))
 
 
+def verdict(pa, ch, sign, bound):
+    """The regression verdict for one metric: ok, worse or unresolved."""
+    (p1, pm, p3), cm = quartiles(pa), statistics.median(ch)
+    if pm and sign * (cm - pm) / pm > bound:
+        return "worse"
+    beats_all = (max(ch) < min(pa)) if sign > 0 else (min(ch) > max(pa))
+    if pm and (p3 - p1) / abs(pm) > bound and not beats_all:
+        return "unresolved"
+    return "ok"
+
+
 def summarize(spec, parent, change):
     seeds = sorted(set(parent) & set(change))
     need = math.ceil(0.9 * len(seeds))
@@ -54,7 +72,7 @@ def summarize(spec, parent, change):
         attempted = sum(runs[s]["attempted"] for s in seeds)
         print(f"{side}: {failed} of {attempted} operations failed their checks")
     print(f"{'metric':14s} {'parent median [q1, q3]':>36s} {'change median [q1, q3]':>36s} "
-          f"{'wins':>6s} {'gap':>10s} {'p_iqr':>10s}  gain")
+          f"{'wins':>6s} {'gap':>10s} {'p_iqr':>10s}  gain  verdict")
     for m in spec["end_to_end"]:
         name, sign = m["name"], (1 if m["better"] == "lower" else -1)
         pairs = [(parent[s]["metrics"][name]["value"], change[s]["metrics"][name]["value"])
@@ -66,7 +84,8 @@ def summarize(spec, parent, change):
         holds = wins >= need and gap > p3 - p1
         print(f"{name:14s} {f'{pm:.4f} [{p1:.4f}, {p3:.4f}]':>36s} "
               f"{f'{cm:.4f} [{c1:.4f}, {c3:.4f}]':>36s} {f'{wins}/{len(seeds)}':>6s} "
-              f"{gap:10.4f} {p3 - p1:10.4f}  {'yes' if holds else 'no'}")
+              f"{gap:10.4f} {p3 - p1:10.4f}  {'yes' if holds else 'no ':4s}  "
+              f"{verdict(pa, ch, sign, m['bound'])}")
 
 
 def main():
