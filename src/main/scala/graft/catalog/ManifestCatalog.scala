@@ -16,46 +16,30 @@ import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
-import graft.core.{PathWalk, Scans}
+import graft.core.Scans
 import graft.functions.JsonGetExpr
 import graft.model.{ManifestEntry, Schemas}
-import java.io.RandomAccessFile
-import java.nio.channels.{FileChannel, FileLock}
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import graft.storage.{SeriesLease, VersionLog}
+import java.nio.file.{Files, Path, Paths}
 
 /** The lake's manifest catalog (SURVEY §7.1 #3) — one row per physical
   * data file, same columns as the reference's SQLite `manifest` table
   * (`dl-datalake/src/dl_datalake/metadata/manifest.py:22-39`) — kept as
-  * an append-only parquet log.
+  * a [[graft.storage.VersionLog]] of parquet segments under
+  * `{root}/_manifest/log/{seq:020d}.parquet`, committed by blind append.
   *
-  * Storage model: an append-only log of parquet files under
-  * `{root}/_manifest/log/`; each committed row carries a monotonically
-  * increasing `_seq` and a `_deleted` tombstone flag. A snapshot is
-  * keep-latest-`_seq` per `path` with tombstones dropped — the same
-  * upsert-by-path semantics as the reference's `add_entry`
-  * (`manifest.py:63-99`), including case normalization (upper exchange/
-  * market/symbol, `manifest.py:77-83`). `compact()` rewrites the snapshot
-  * as a single base segment so reads stay O(1 file) under many commits.
-  *
-  * Concurrency: the reference got serialized writers from SQLite's file
-  * lock (30 s busy timeout, `manifest.py:52-55`). Here the commit point
-  * is an ATOMIC CREATE-EXCLUSIVE publish: the batch is staged as one
-  * parquet file, then hard-linked into the log as `{seq}.parquet` —
-  * link(2) fails with EEXIST if the seq is taken, and the loser retries
-  * with the next seq. `_seq` is derived from the FILE NAME at read
-  * time, so claim and data publish are a single atomic operation and
-  * correctness never depends on an advisory flock (which is a no-op on
-  * object stores — there, swap the link for an if-none-match PUT; the
-  * Delta/Iceberg commit protocols are this same shape). Readers never
-  * coordinate. Two concurrent writer PROCESSES therefore produce a
-  * gapless, duplicate-free sequence (ConcurrentCommitSpec).
-  *
-  * compact() appends the snapshot as a base segment whose rows KEEP
-  * their original `_seq` (an `_seq_override` column wins over the file
-  * name), so a commit that lands concurrently with a compaction still
-  * outranks the compacted copy of the same path — compaction can never
-  * shadow a newer write. The only remaining serialized op is compact vs
-  * compact (old-file deletion), guarded best-effort by monitor+flock.
+  * Format and fold: each segment row is an entry plus a `_deleted`
+  * tombstone flag and an `_seq_override`; a row's `_seq` is its
+  * segment's seq unless the override is set. A snapshot is
+  * keep-latest-`_seq` per `path` with tombstones dropped — the
+  * reference's upsert-by-path `add_entry` (`manifest.py:63-99`),
+  * including its case normalization (upper exchange/market/symbol,
+  * `manifest.py:77-83`). The reference serialized writers with SQLite's
+  * file lock (`manifest.py:52-55`); here appends commute, so writers
+  * never lock. `compact()` appends the snapshot as one base segment
+  * whose rows keep their original `_seq` through the override, so a
+  * commit that lands during a compaction still outranks the compacted
+  * copy of its path, then deletes the segments it folded.
   *
   * Scale: every read folds the log on the driver, the way Delta replays
   * its transaction log into snapshot state, and every commit writes its
@@ -70,13 +54,6 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   * follow [[graft.core.Scans.localRows]]'s byte rule.
   */
 object ManifestCatalog {
-  private val monitors = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[catalog] def monitorFor(path: String): Object =
-    monitors.computeIfAbsent(path, _ => new Object)
-
-  /** A published segment's name; its digits are the rows' default `_seq`. */
-  private val SeqName = """^(\d{20})\.parquet$""".r
-
   /** The snapshot's columns: [[ManifestEntry]]'s, in order, all nullable. */
   private val entrySchema: StructType = StructType(
     org.apache.spark.sql.Encoders.product[ManifestEntry].schema.map(_.copy(nullable = true)))
@@ -90,12 +67,6 @@ object ManifestCatalog {
 
   private val logParquetSchema =
     new SparkToParquetSchemaConverter(org.apache.spark.sql.internal.SQLConf.get).convert(logSchema)
-
-  /** Highest seq currently published in `logDir` (0 for an empty log). */
-  private[catalog] def maxFileSeq(logDir: String): Long =
-    PathWalk.list(Paths.get(logDir)) {
-      _.map(_.getFileName.toString).collect { case SeqName(d) => d.toLong }.foldLeft(0L)(math.max)
-    }
 
   /** One segment's rows as [[logSchema]] values, columns matched by name
     * (a column the file lacks reads as null, as Spark's schema'd read does).
@@ -130,11 +101,7 @@ object ManifestCatalog {
     } finally reader.close()
   }
 
-  /** Write `rows` ([[logSchema]] values) as one snappy parquet segment
-    * and fsync it: the publish that follows binds its name, and a power
-    * loss after that must never leave a named-but-empty segment (the
-    * IndexManifest.commit discipline).
-    */
+  /** Write `rows` ([[logSchema]] values) as one snappy parquet segment. */
   private def writeSegment(file: Path, rows: Seq[Array[Any]]): Unit = {
     // a fresh conf per writer: building a writer stores the schema in it
     val w = ExampleParquetWriter.builder(new LocalOutputFile(file))
@@ -153,8 +120,6 @@ object ManifestCatalog {
       })
       w.write(g)
     } finally w.close()
-    val ch = FileChannel.open(file, StandardOpenOption.WRITE)
-    try ch.force(true) finally ch.close()
   }
 
   /** Spark's `upper`, evaluated on the driver: the filters match exactly
@@ -172,145 +137,26 @@ object ManifestCatalog {
     val ord = new InterpretedOrdering(order)
     rows.map(r => (keys(r), r)).sortBy(_._1)(ord).map(_._2)
   }
-
-  /** The storage-specific atomic-publish primitive the commit protocol
-    * builds on. INVARIANT the impl must provide: for a given target
-    * name, when N writers race, exactly ONE tryPublish returns true and
-    * the rest return false (never two winners, never zero) — the retry
-    * loop in [[publishExclusive]] supplies everything else. Impls:
-    *  - [[PosixLinkPublish]] (default): create-exclusive link(2);
-    *    correct on any POSIX filesystem, exercised cross-process by
-    *    ConcurrentCommitSpec's forked JVMs.
-    *  - An object store has neither hard links nor flock: implement
-    *    tryPublish as a conditional PUT (`If-None-Match: *` on S3/GCS)
-    *    and maxSeq as a LIST of the log prefix — the same
-    *    exactly-one-winner contract, which is also the shape of the
-    *    Delta/Iceberg commit protocols.
-    */
-  trait PublishPrimitive {
-    /** Atomically bind the staged file's content to `target`; false iff
-      * `target` already exists (another writer won that name).
-      */
-    def tryPublish(staged: java.nio.file.Path, target: java.nio.file.Path): Boolean
-    /** Highest seq currently published in `logDir` (0 for an empty log). */
-    def maxSeq(logDir: String): Long
-  }
-
-  /** POSIX impl: link(2) fails EEXIST if the name is taken — atomic
-    * create-exclusive, no locks, safe across processes.
-    */
-  object PosixLinkPublish extends PublishPrimitive {
-    override def tryPublish(staged: java.nio.file.Path, target: java.nio.file.Path): Boolean =
-      try { Files.createLink(target, staged); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    override def maxSeq(logDir: String): Long = maxFileSeq(logDir)
-  }
-
-  /** Second, link-free impl — proves the [[PublishPrimitive]] seam is
-    * portable (HDFS and local filesystems without hard-link support):
-    * the WINNER of a seq is decided by an atomic create-exclusive of a
-    * hidden claim marker (`.{seq}.parquet.claim` — O_EXCL semantics, the
-    * verdict's `Files.createFile` shape), and content then becomes
-    * visible ATOMICALLY via copy-to-hidden-stage + fsync + ATOMIC_MOVE
-    * onto the target name. The claim alone would leave readers exposed
-    * to a partially-written log segment (link(2) and S3 conditional PUT
-    * both bind complete content to the name in one step; a plain O_EXCL
-    * create + write does not) — the rename closes that gap, at the cost
-    * of one extra file copy per commit (irrelevant: commit batches are
-    * KB-sized).
-    *
-    * The claim marker is PERMANENT — it is the winner record. Deleting
-    * it after publishing re-opens the name: a lagging writer holding a
-    * stale maxSeq would re-claim the seq and its ATOMIC_MOVE would
-    * silently REPLACE the first winner's file (rename(2) overwrites) —
-    * a measured 34%-lost-writes race in this spec's forked-JVM test.
-    * One hidden empty file per commit is the cost; compact() clears
-    * them with the old log segments, safely below the monotone maxSeq.
-    * A writer crashing between claim and move leaves a claim that
-    * permanently skips one seq — harmless: later writers retry past it
-    * and the log's ranking only needs monotonicity, not density.
-    */
-  object ClaimRenamePublish extends PublishPrimitive {
-    override def tryPublish(staged: java.nio.file.Path, target: java.nio.file.Path): Boolean = {
-      val dir = target.getParent
-      val claim = dir.resolve(s".${target.getFileName}.claim")
-      try Files.createFile(claim)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => return false
-      }
-      // sole owner of `target` from here on (hidden names are invisible
-      // to Spark's file listing, so readers never see the stage)
-      val stage = dir.resolve(s".${target.getFileName}.stage")
-      Files.copy(staged, stage, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      val ch = java.nio.channels.FileChannel.open(stage, java.nio.file.StandardOpenOption.WRITE)
-      try ch.force(true) finally ch.close()
-      Files.move(stage, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      true
-    }
-    override def maxSeq(logDir: String): Long = maxFileSeq(logDir)
-  }
-
-  /** The lock-free commit point: atomically publish `part` into the
-    * log as `{seq}.parquet` at the next free seq via the storage
-    * primitive. Exactly one writer wins each seq; losers retry one
-    * higher (re-listing, so a burst of writers converges in O(burst)
-    * attempts total, not per writer). The file's content never changes
-    * during a claim retry, only its eventual name.
-    */
-  private[catalog] def publishExclusive(logDir: String, part: java.nio.file.Path,
-                                        pub: PublishPrimitive = PosixLinkPublish): Long = {
-    var seq = pub.maxSeq(logDir) + 1
-    while (!pub.tryPublish(part, Paths.get(f"$logDir/$seq%020d.parquet")))
-      seq = math.max(seq + 1, pub.maxSeq(logDir) + 1)
-    seq
-  }
 }
 
 final class ManifestCatalog(spark: SparkSession, root: String,
-                            pub: ManifestCatalog.PublishPrimitive = ManifestCatalog.PosixLinkPublish) {
+                            pub: VersionLog.PublishPrimitive = VersionLog.PosixLinkPublish) {
   import ManifestCatalog._
 
-  private val dir = s"$root/_manifest"
-  private val logDir = s"$dir/log"
-  private val lockFile = s"$dir/.lock"
+  private val dir = Paths.get(VersionLog.localPath(root), "_manifest")
+  // stages live outside the log: compact() deletes every file it listed
+  // there, and a concurrent commit's stage must survive until published
+  private val log = new VersionLog(dir.resolve("log"), "", 20, ".parquet", pub,
+    stageDir = Some(dir.resolve("tmp")))
 
-  Files.createDirectories(Paths.get(logDir))
+  Files.createDirectories(log.dir)
 
-  /** Best-effort serialization for compact-vs-compact ONLY (commit
-    * correctness does not need it): a JVM monitor per lock path
-    * (FileLock throws OverlappingFileLockException for same-process
-    * contention — it only serializes ACROSS processes), then the
-    * advisory FileLock for other driver processes sharing the lake.
-    */
-  private def withLock[T](f: => T): T =
-    ManifestCatalog.monitorFor(lockFile).synchronized {
-      val raf = new RandomAccessFile(lockFile, "rw")
-      var lock: FileLock = null
-      try { lock = raf.getChannel.lock(); f }
-      finally { if (lock != null) lock.release(); raf.close() }
-    }
-
-  /** Write `rows` as one segment on the driver, then publish it at the
-    * next free seq via [[ManifestCatalog.publishExclusive]]. Returns the
-    * claimed seq. The file's data never changes during a claim retry,
-    * only its eventual name, so a collision costs a link(2), not a
-    * rewrite.
-    */
-  private def commitBatch(rows: Seq[Array[Any]]): Long = {
-    val staged = Files.createDirectories(Paths.get(s"$dir/tmp"))
-      .resolve(s"${java.util.UUID.randomUUID}.parquet")
-    try {
-      writeSegment(staged, rows)
-      ManifestCatalog.publishExclusive(logDir, staged, pub)
-    } finally Files.deleteIfExists(staged) // a published segment is the log's own link
-  }
+  /** Write `rows` as one segment and append it to the log; returns its seq. */
+  private def commitBatch(rows: Seq[Array[Any]]): Long = log.append(writeSegment(_, rows))
 
   /** A log row: `entry`'s values, its tombstone flag, its seq override. */
   private def logRow(entry: Row, deleted: Boolean, seqOverride: java.lang.Long): Array[Any] =
     (entry.toSeq :+ deleted :+ seqOverride).toArray
-
-  /** Every file in the log directory, hidden claim markers included. */
-  private def logFiles(): Seq[Path] = PathWalk.list(Paths.get(logDir))(_.toVector)
 
   /** The catalog as of `seq`, folded from `files`' segments: per path
     * the row with the highest `_seq` — its segment's name, unless the
@@ -324,9 +170,8 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     val (deletedCol, overrideCol) = (entrySchema.length, entrySchema.length + 1)
     val latest = scala.collection.mutable.HashMap.empty[String, (Long, Array[Any])]
     val conf = new PlainParquetConfiguration()
-    for (file <- files; SeqName(d) <- Option(file.getFileName.toString);
-         vals <- readSegment(file, conf)) {
-      val s = Option(vals(overrideCol)).fold(d.toLong)(_.asInstanceOf[Long])
+    for (file <- files; fileSeq <- log.seqOf(file); vals <- readSegment(file, conf)) {
+      val s = Option(vals(overrideCol)).fold(fileSeq)(_.asInstanceOf[Long])
       val path = vals(pathCol).asInstanceOf[String]
       if (s <= seq && latest.get(path).forall(_._1 < s)) latest(path) = (s, vals)
     }
@@ -337,7 +182,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       .toSeq.sortBy(e => Option(e._2.getString(pathCol)))
   }
 
-  private def live(seq: Long = Long.MaxValue): Seq[Row] = fold(logFiles(), seq).map(_._2)
+  private def live(seq: Long = Long.MaxValue): Seq[Row] = fold(log.files, seq).map(_._2)
 
   private def frame(rows: Seq[Row]): DataFrame = Scans.localRows(spark, rows.toArray, entrySchema)
 
@@ -383,7 +228,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * append-only log (the reference's version-rollback surface,
     * `dl-datalake/tests/integration/test_11_versioning.py`; the
     * Delta/Iceberg snapshot-read shape). Because every commit is
-    * totally ordered by [[ManifestCatalog.publishExclusive]] and rows
+    * totally ordered by the log's blind append and rows
     * rank by their ORIGINAL `_seq` even after compaction, `asOf(s)` is
     * exactly the snapshot a reader would have seen the instant commit
     * `s` published: later appends are invisible, and a pinned seq gives
@@ -402,7 +247,7 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   /** Highest published sequence visible right now — the pin for
     * [[asOf]]. 0 for an empty log.
     */
-  def currentSeq(): Long = pub.maxSeq(logDir)
+  def currentSeq(): Long = log.current
 
   /** The entries matching every given filter: exchange, market and
     * symbol case-insensitively (through Spark's `upper`), type and path
@@ -467,16 +312,18 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     snapshot().filter(!col("type").isin(Schemas.builtinTypes.toSeq.map(lit): _*))
 
   /** Rewrite the log as one compacted base segment (small-file control —
-    * the reference's aspirational `daily_offload_flow` done for real).
+    * the reference's aspirational `daily_offload_flow` done for real),
+    * under the `_manifest` dir lease that serializes compactions across
+    * threads and processes; commits never take it.
     *
     * Crash-safe by construction: the snapshot is APPENDED first, as a
     * base segment whose rows copy the latest rows exactly (same content,
-    * same original `_seq`), and only then are the pre-existing log files
+    * same original `_seq`), and only then are the files it folded
     * deleted. A crash at any point leaves a log whose snapshot() is
     * unchanged; re-running compact() converges.
     */
-  def compact(): Unit = withLock {
-    val old = logFiles()
+  def compact(): Unit = SeriesLease.withDirLease(dir.toString) {
+    val old = log.files
     // keep-latest per path WITH each row's original _seq: the compacted
     // base claims a new file seq, but its rows rank as of when they were
     // first committed — a write landing mid-compaction still wins.

@@ -161,7 +161,7 @@ object Dedup {
     org.apache.spark.sql.types.StructField("hs",
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))))
 
-  import graft.storage.{IndexFile, IndexManifest}
+  import graft.storage.{IndexFile, IndexManifest, VersionLog}
 
   private def lshMetaOf(text: String): (Int, Int, Int) = {
     def field(k: String): Int =
@@ -213,7 +213,7 @@ object Dedup {
     val uuid = java.util.UUID.randomUUID().toString
     val rel = s"files/$uuid"
     df.write.parquet(s"$root/$rel")
-    val local = if (root.startsWith("file:")) root.stripPrefix("file:") else root
+    val local = VersionLog.localPath(root)
     Option(new java.io.File(s"$local/$rel").listFiles()).toSeq.flatten
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(f => IndexFile(sub, -1, s"$rel/${f.getName}", f.length()))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import scala.jdk.CollectionConverters._
 
 import graft.queries.Embeddings.{dot, norm}
-import graft.storage.{IndexFile, IndexManifest}
+import graft.storage.{IndexFile, IndexManifest, VersionLog}
 
 /** Persisted INCREMENTAL semantic dedup — the q69/q93 ingest pattern
   * (persisted LSH band index / bloom artifact) applied to embeddings,
@@ -83,7 +83,7 @@ import graft.storage.{IndexFile, IndexManifest}
   * [[graft.storage.SeriesLease.withDirLeaseHandle]] (heartbeated,
   * ownership-checked at each commit point), AND every commit is a
   * manifest CAS at the seq the writer read — a leasing violation dies
-  * as a loud [[graft.storage.IndexManifest.ConcurrentCommitException]]
+  * as a loud [[graft.storage.VersionLog.ConcurrentCommitException]]
   * instead of a lost update. Dry-run ingests and all reads are
   * lease-free pure functions of a pinned manifest state; the only
   * operation that can invalidate a pinned read is [[vacuum]] (physical
@@ -156,9 +156,6 @@ object SemanticIndex {
 
   // ---- manifest-backed storage layer ----
 
-  private def localRoot(root: String): String =
-    if (root.startsWith("file:")) root.stripPrefix("file:") else root
-
   /** Write `df` (must carry an int partition column named by `byCol`)
     * into a fresh per-writer uuid dir as one file set per cluster —
     * `pc=N` dirs keep one cluster per file so manifest pruning stays
@@ -173,7 +170,7 @@ object SemanticIndex {
     val rel = s"files/$uuid"
     df.withColumn("pc", col(byCol)).write.partitionBy("pc")
       .parquet(s"$root/$rel")
-    val d = new java.io.File(s"${localRoot(root)}/$rel")
+    val d = new java.io.File(s"${VersionLog.localPath(root)}/$rel")
     Option(d.listFiles()).toSeq.flatten
       .filter(x => x.isDirectory && x.getName.startsWith("pc="))
       .flatMap { cd =>
@@ -188,7 +185,7 @@ object SemanticIndex {
     val uuid = java.util.UUID.randomUUID().toString
     val rel = s"files/$uuid"
     df.write.parquet(s"$root/$rel")
-    val d = new java.io.File(s"${localRoot(root)}/$rel")
+    val d = new java.io.File(s"${VersionLog.localPath(root)}/$rel")
     Option(d.listFiles()).toSeq.flatten
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(f => IndexFile(sub, -1, s"$rel/${f.getName}", f.length()))
@@ -240,7 +237,7 @@ object SemanticIndex {
     st.files.filter(f => f.sub == sub && clusters(f.cluster))
       .groupMapReduce(_.cluster) { f =>
         // the parquet tail: [footer][4-byte little-endian footer length]["PAR1"]
-        val in = new java.io.RandomAccessFile(s"${localRoot(root)}/${f.path}", "r")
+        val in = new java.io.RandomAccessFile(s"${VersionLog.localPath(root)}/${f.path}", "r")
         try {
           in.seek(in.length() - 8)
           val footer = new Array[Byte](Integer.reverseBytes(in.readInt()))

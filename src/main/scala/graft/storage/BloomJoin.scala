@@ -85,14 +85,12 @@ object BloomJoin {
   // re-published. Per ingest cycle the cost is O(new batch) plus one
   // fixed-size artifact write — the corpus is never rescanned.
   //
-  // Versioning: `bloom.{seq}.bin`, published create-exclusive via
-  // link(2) (the catalog's PosixLinkPublish shape — exactly one winner
-  // per seq, readers always see complete bytes, never a partial write);
-  // readers take the highest seq. Single incremental writer per artifact
-  // by contract (same as the LSH index); concurrent publishers are safe
-  // (losers retry one seq higher) but each must union FROM the seq it
-  // read, so serialize ingest cycles through the job registry/lease like
-  // any other series.
+  // Versioning: a [[VersionLog]] of `bloom.{seq:06d}.bin` versions,
+  // committed by blind append; readers take the highest seq. Single
+  // incremental writer per artifact by contract (same as the LSH index):
+  // concurrent publishers each win a distinct seq, but each must union
+  // FROM the seq it read, so serialize ingest cycles through the job
+  // registry/lease like any other series.
   //
   // Union compatibility: BloomFilter union requires identical bit/hash
   // geometry, which `create(expectedItems, fpp)` derives from its
@@ -101,54 +99,21 @@ object BloomJoin {
   // make the filters unmergeable; the artifact keeps its geometry for
   // life, like the band params in `Dedup.initLshIndex`).
 
-  private def bloomName(seq: Long) = f"bloom.$seq%06d.bin"
-  private val BloomRe = """bloom\.(\d+)\.bin""".r
+  private def versions(root: String): VersionLog =
+    new VersionLog(java.nio.file.Paths.get(VersionLog.localPath(root)), "bloom.", 6, ".bin")
 
-  /** Publish `bytes` as the next version under `root`; returns the seq
-    * it won. Atomic: stage to a hidden temp, fsync, link(2) onto the
-    * versioned name (EEXIST ⇒ another writer took that seq ⇒ retry one
-    * higher).
-    */
-  def saveVersion(root: String, bytes: Array[Byte]): Long = {
-    val dir = java.nio.file.Paths.get(root)
-    java.nio.file.Files.createDirectories(dir)
-    val staged = java.nio.file.Files.createTempFile(dir, ".bloom_stage", ".tmp")
-    try {
-      java.nio.file.Files.write(staged, bytes)
-      val ch = java.nio.channels.FileChannel.open(staged,
-        java.nio.file.StandardOpenOption.WRITE)
-      try ch.force(true) finally ch.close()
-      var seq = latestSeq(root).getOrElse(0L) + 1
-      while (true) {
-        try {
-          java.nio.file.Files.createLink(dir.resolve(bloomName(seq)), staged)
-          return seq
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => seq += 1
-        }
-      }
-      seq
-    } finally java.nio.file.Files.deleteIfExists(staged): Unit
-  }
-
-  private def latestSeq(root: String): Option[Long] = {
-    val dir = java.nio.file.Paths.get(root)
-    if (!java.nio.file.Files.isDirectory(dir)) None
-    else graft.core.PathWalk.list(dir)(_.flatMap(p =>
-      p.getFileName.toString match {
-        case BloomRe(s) => Some(s.toLong)
-        case _ => None
-      }).maxOption)
-  }
+  /** Publish `bytes` as the next version under `root`; returns its seq. */
+  def saveVersion(root: String, bytes: Array[Byte]): Long =
+    versions(root).append(java.nio.file.Files.write(_, bytes))
 
   /** Latest published version under `root`, broadcast for probing. */
   def loadLatest(spark: org.apache.spark.sql.SparkSession,
-                 root: String): Option[(Long, Broadcast[Array[Byte]])] =
-    latestSeq(root).map { seq =>
-      val bytes = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(root).resolve(bloomName(seq)))
-      seq -> spark.sparkContext.broadcast(bytes)
+                 root: String): Option[(Long, Broadcast[Array[Byte]])] = {
+    val log = versions(root)
+    Some(log.current).filter(_ > 0).map { seq =>
+      seq -> spark.sparkContext.broadcast(java.nio.file.Files.readAllBytes(log.path(seq)))
     }
+  }
 
   /** Bitwise union of two serialized filters (throws on geometry
     * mismatch — see the sizing note above).

@@ -20,53 +20,33 @@ final case class IndexFile(sub: String, cluster: Int, path: String, bytes: Long)
 final case class IndexState(seq: Long, metaJson: String, files: Seq[IndexFile])
 
 /** Versioned manifest commits for the persisted incremental indexes
-  * (VERDICT r16 next-round #1) — the Delta/Iceberg commit shape over
-  * [[graft.catalog.ManifestCatalog.PublishPrimitive]]'s atomic-publish
-  * seam, replacing the POSIX rename/park-and-swap protocol the
-  * semantic and LSH band indexes used through round 16.
+  * (VERDICT r16 next-round #1): a [[VersionLog]] of JSON-line versions
+  * under `{root}/_versions/{seq:020d}.json`, committed by CAS.
   *
   * Layout under an index `root`:
-  *   - `_versions/{seq}.json` — the append-only version log. Each file
-  *     is one COMMIT: JSON lines of file adds/removes, optionally a new
-  *     meta document, optionally flagged as a checkpoint (a full live
-  *     snapshot, so folds never replay the whole log).
+  *   - `_versions/` — each version is one COMMIT: JSON lines of file
+  *     adds/removes, optionally a new meta document, optionally flagged
+  *     as a checkpoint (a full live snapshot, so folds never replay the
+  *     whole log).
   *   - `files/<uuid>/...` — commit payloads (parquet), written by each
   *     writer into its own fresh uuid dir BEFORE publishing. A file is
   *     live iff the folded log says so; everything else under `files/`
   *     is an orphan (a crashed writer's unpublished payload) that
   *     [[vacuum]] reaps.
   *
-  * Why this beats renames at 100 TB:
-  *   - **Atomic multi-table commits.** One publish makes a batch's index
-  *     rows visible, swaps the affected clusters' label files, and (for
-  *     a retrain) replaces centroids + meta — all in a single atomic
-  *     step. The old protocol's labels-first write order, its
-  *     mid-commit "zero kept representatives" transient, and the
-  *     park-and-swap crash windows do not exist here: a crash before
-  *     the publish leaves nothing visible, a crash after it leaves
-  *     everything visible.
-  *   - **No rename races.** Readers fold the log at a pinned seq and
-  *     plan over exactly those files; maintenance never moves a file a
-  *     reader could be holding (compaction/retrain only ADD files and
-  *     flip the manifest). The only operation that can invalidate a
-  *     pinned read is [[vacuum]], which physically deletes — schedule
-  *     it like any maintenance.
-  *   - **Object-store-safe.** The commit point is the same
-  *     exactly-one-winner publish as the catalog's (link(2) locally, an
-  *     `If-None-Match` conditional PUT on S3/GCS behind the same
-  *     [[graft.catalog.ManifestCatalog.PublishPrimitive]] trait); no
-  *     rename atomicity, no O_EXCL-create lock files on the data path.
-  *   - **Time travel for free.** `state(asOf = Some(seq))` is exactly
-  *     the live set the instant commit `seq` published (the q71 shape,
-  *     now on the indexes).
+  * One publish makes a batch's index rows visible, swaps the affected
+  * clusters' label files and (for a retrain) replaces centroids and
+  * meta, all at once: a crash before it leaves nothing visible, a crash
+  * after it everything. Readers fold the log at a pinned seq and plan
+  * over exactly those files; maintenance only ADDS files and commits, so
+  * the one operation that can invalidate a pinned read is [[vacuum]],
+  * which deletes. `state(asOf = Some(seq))` is the live set the instant
+  * commit `seq` published (the q71 shape, on the indexes).
   *
   * Concurrency: committing writers serialize through the index root's
-  * [[SeriesLease]] exactly as before — but every commit here is ALSO a
-  * compare-and-swap: it publishes at exactly `expectedSeq + 1` and
-  * throws [[IndexManifest.ConcurrentCommitException]] if that seq is
-  * taken. Under correct leasing the CAS never fires; a leasing bug
-  * (stolen lease, operator unlock) becomes a loud abort instead of a
-  * lost update. Readers never coordinate.
+  * [[SeriesLease]], and every commit is ALSO a CAS at the writer's base
+  * seq, so a leasing fault (stolen lease, operator unlock) surfaces as a
+  * [[VersionLog.ConcurrentCommitException]] instead of a lost update.
   *
   * Scale bound: the folded state is one entry per live FILE — at 100 TB
   * / 256 MB files that is ~400 k entries, a few tens of MB of JSON —
@@ -76,51 +56,15 @@ final case class IndexState(seq: Long, metaJson: String, files: Seq[IndexFile])
   */
 object IndexManifest {
 
-  /** The CAS lost: another writer published at the expected seq. Under
-    * the dir-lease discipline this indicates a leasing violation — the
-    * caller must abort, re-read, and re-derive, never blind-retry.
-    */
-  final class ConcurrentCommitException(msg: String) extends IllegalStateException(msg)
-
   private val mapper = new ObjectMapper()
-  private val SeqName = """^(\d{20})\.json$""".r
 
-  /** `file:` scheme or scheme-less → local path (the [[SeriesLease]]
-    * rule); other schemes need the PublishPrimitive ported first.
-    */
-  private def localRoot(root: String): String = {
-    val scheme = new java.net.URI(root).getScheme
-    if (scheme == null || scheme == "file") {
-      if (root.startsWith("file:")) root.stripPrefix("file:") else root
-    } else throw new UnsupportedOperationException(
-      s"IndexManifest is implemented over the POSIX link publish; got scheme " +
-        s"'$scheme' in $root — port PublishPrimitive (conditional PUT) for object stores")
-  }
+  private def log(root: String): VersionLog =
+    new VersionLog(Paths.get(VersionLog.localPath(root), "_versions"), "", 20, ".json")
 
-  private def versionsDir(root: String): Path =
-    Paths.get(localRoot(root), "_versions")
-
-  def exists(root: String): Boolean =
-    Files.isDirectory(versionsDir(root)) && currentSeq(root) > 0L
+  def exists(root: String): Boolean = currentSeq(root) > 0L
 
   /** Highest published seq (0 for an absent/empty log). */
-  def currentSeq(root: String): Long = {
-    val dir = versionsDir(root)
-    if (!Files.isDirectory(dir)) return 0L
-    val s = Files.list(dir)
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .collect { case SeqName(d) => d.toLong }.foldLeft(0L)(math.max)
-    finally s.close()
-  }
-
-  private def listSeqs(root: String): Seq[Long] = {
-    val dir = versionsDir(root)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    val s = Files.list(dir)
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .collect { case SeqName(d) => d.toLong }.toSeq.sorted
-    finally s.close()
-  }
+  def currentSeq(root: String): Long = log(root).current
 
   private final case class Line(kind: String, file: Option[IndexFile],
                                 add: Boolean, meta: Option[String])
@@ -151,12 +95,12 @@ object IndexManifest {
     */
   def state(root: String, asOf: Option[Long] = None): IndexState = {
     val pin = asOf.getOrElse(Long.MaxValue)
-    val seqs = listSeqs(root).filter(_ <= pin)
+    val versions = log(root)
+    val seqs = versions.seqs.filter(_ <= pin)
     if (seqs.isEmpty)
       throw new IllegalStateException(
         s"no index manifest at $root" + asOf.map(s => s" as of seq $s").getOrElse("") +
           " (not an index root, or the pin predates init / postdates nothing)")
-    val dir = versionsDir(root)
     // newest checkpoint ≤ pin: parse BACKWARD and stop at the first
     // flagged version, so a checkpointed index folds O(deltas since
     // checkpoint) files — never O(commit history)
@@ -164,7 +108,7 @@ object IndexManifest {
     var i = seqs.length - 1
     var foundCkpt = false
     while (i >= 0 && !foundCkpt) {
-      val parsed = parseLines(dir.resolve(f"${seqs(i)}%020d.json"))
+      val parsed = parseLines(versions.path(seqs(i)))
       replay ::= seqs(i) -> parsed
       foundCkpt = parsed._1
       i -= 1
@@ -206,37 +150,15 @@ object IndexManifest {
 
   /** The commit point: publish one version containing `removes` then
     * `adds` (and optionally a replacement meta document) at EXACTLY
-    * `expectedSeq + 1` — a CAS against the state the writer derived its
-    * commit from. Returns the published seq. Atomicity comes from the
-    * catalog's [[graft.catalog.ManifestCatalog.PosixLinkPublish]]
-    * primitive: content binds to the seq name in one step, so readers
-    * never see a partial commit.
+    * `expectedSeq + 1` (default: the current seq + 1), a CAS against the
+    * state the writer derived its commit from. Returns the published seq.
     */
   def commit(root: String, adds: Seq[IndexFile], removes: Seq[IndexFile] = Seq.empty,
              metaJson: Option[String] = None, expectedSeq: Long = -1L,
              checkpoint: Boolean = false): Long = {
-    val expected = if (expectedSeq >= 0) expectedSeq else currentSeq(root)
-    val dir = versionsDir(root)
-    Files.createDirectories(dir)
-    val staged = dir.resolve(s".tmp-${java.util.UUID.randomUUID()}")
-    Files.write(staged, render(adds, removes, metaJson, checkpoint))
-    // fsync BEFORE the link binds the name: a power loss after publish
-    // must never leave a named-but-empty version (the BloomJoin/
-    // ClaimRenamePublish discipline)
-    val ch = java.nio.channels.FileChannel.open(staged,
-      java.nio.file.StandardOpenOption.WRITE)
-    try ch.force(true) finally ch.close()
-    val seq = expected + 1
-    val target = dir.resolve(f"$seq%020d.json")
-    val won =
-      try graft.catalog.ManifestCatalog.PosixLinkPublish.tryPublish(staged, target)
-      finally Files.deleteIfExists(staged)
-    if (!won)
-      throw new ConcurrentCommitException(
-        s"index manifest CAS lost at $root: seq $seq already published — the writer's " +
-          "base state (seq " + expected + ") is stale; with the dir lease held this " +
-          "indicates a leasing violation. Abort, re-read, re-derive.")
-    seq
+    val versions = log(root)
+    val bytes = render(adds, removes, metaJson, checkpoint)
+    versions.cas(if (expectedSeq >= 0) expectedSeq else versions.current)(Files.write(_, bytes))
   }
 
   /** Publish a checkpoint: the full live state re-stated as one version,
@@ -285,20 +207,20 @@ object IndexManifest {
   def vacuum(root: String, retain: Int): (Long, Long) = {
     require(retain >= 0, s"retain must be >= 0, got $retain")
     val ckptSeq = checkpoint(root)
-    val local = localRoot(root)
-    val dir = versionsDir(root)
-    val seqs = listSeqs(root)
+    val local = VersionLog.localPath(root)
+    val versions = log(root)
+    val seqs = versions.seqs
     val cut = math.max(1L, ckptSeq - retain)
     val base =
       if (retain == 0) ckptSeq
       else seqs.filter(_ <= cut).reverse
-        .find(s => parseLines(dir.resolve(f"$s%020d.json"))._1)
+        .find(s => parseLines(versions.path(s))._1)
         .getOrElse(seqs.head)
     val keep = scala.collection.mutable.Set.empty[Path]
     state(root, asOf = Some(base)).files
       .foreach(f => keep += Paths.get(local, f.path).normalize())
     seqs.filter(_ > base).foreach { s =>
-      parseLines(dir.resolve(f"$s%020d.json"))._2.foreach {
+      parseLines(versions.path(s))._2.foreach {
         case Line("file", Some(f), true, _) =>
           keep += Paths.get(local, f.path).normalize()
         case _ => ()
@@ -323,7 +245,7 @@ object IndexManifest {
       } finally all.close()
     }
     val logsReaped = seqs.count { s =>
-      s < base && Files.deleteIfExists(dir.resolve(f"$s%020d.json"))
+      s < base && Files.deleteIfExists(versions.path(s))
     }.toLong
     (dataReaped, logsReaped)
   }

@@ -114,15 +114,16 @@ private[storage] object LakeIO {
       .option("mergeSchema", mergeSchema.toString).parquet(root))
 
   /** Read an explicit list of lake leaf files (a stats-skipping
-    * survivor list), partition columns derived via `basePath` — through
-    * the same inference-off session as every other lake read, so
-    * `period=1d` survives here too.
+    * survivor list): [[scanFiles]] with the schema of their footers in
+    * path order ([[footerSchema]]), so building the frame runs no Spark
+    * job.
     */
   def readFiles(spark: SparkSession, root: String, paths: Seq[String],
-                mergeSchema: Boolean = true): DataFrame =
-    withMonthInts(ioSession(spark).read
-      .option("mergeSchema", mergeSchema.toString)
-      .option("basePath", root).parquet(paths: _*))
+                mergeSchema: Boolean = true): DataFrame = {
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = paths.map(p => fs.getFileStatus(new Path(p)))
+    scanFiles(spark, root, files, footerSchema(spark, fs, inPathOrder(files), mergeSchema))
+  }
 
   /** The lake's partition columns, outermost first: the series key
     * levels, then the ts month. Every writer lays files out by them.

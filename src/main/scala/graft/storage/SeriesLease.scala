@@ -22,7 +22,7 @@ import java.nio.file.attribute.FileTime
   *
   * Mechanics: one `<root>/_locks/<sha256(seriesDir)>.lease` file per
   * series, acquired by atomic create-exclusive (`Files.createFile`,
-  * O_EXCL — the same primitive as the catalog's ClaimRenamePublish) and
+  * O_EXCL — the same primitive as [[VersionLog.ClaimRenamePublish]]) and
   * released by ownership-checked delete. The `_locks` directory is
   * underscore-prefixed, so Spark's partition discovery never sees it.
   *
@@ -46,7 +46,8 @@ import java.nio.file.attribute.FileTime
   *
   * Scope: filesystems where `java.nio` sees POSIX semantics — local
   * disk and NFS-style mounts (the `file:` scheme or scheme-less roots).
-  * Any other scheme (hdfs://, s3a://…) is rejected loudly at acquire:
+  * Any other scheme (hdfs://, s3a://…) is rejected loudly at acquire
+  * ([[VersionLog.localPath]]):
   * HDFS would need this object re-implemented over the Hadoop
   * FileSystem API and an object store needs conditional-put or an
   * external lock service — both swap in behind the same `withLease`
@@ -86,20 +87,7 @@ object SeriesLease {
     val digest = java.security.MessageDigest.getInstance("SHA-256")
       .digest(LakeIO.seriesDir(root, k).getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
-    Paths.get(localPath(root), "_locks", s"$digest.lease")
-  }
-
-  /** `file:` scheme or scheme-less → local path; anything else is out
-    * of this implementation's scope (class doc) and must fail loudly
-    * rather than mis-resolve `hdfs://host/x` into a relative local dir.
-    */
-  private def localPath(root: String): String = {
-    val scheme = new java.net.URI(root).getScheme
-    if (scheme == null || scheme == "file") {
-      if (root.startsWith("file:")) root.stripPrefix("file:") else root
-    } else throw new UnsupportedOperationException(
-      s"SeriesLease requires a POSIX filesystem (file: or scheme-less root); " +
-        s"got scheme '$scheme' in $root — plug a $scheme-native lock behind withLease")
+    Paths.get(VersionLog.localPath(root), "_locks", s"$digest.lease")
   }
 
   /** Run `f` holding the series' lease. Blocks (50 ms poll) until the
@@ -139,7 +127,7 @@ object SeriesLease {
     */
   def withDirLeaseHandle[T](dir: String, staleMs: Long = 600000L,
                             timeoutMs: Long = 300000L)(f: Handle => T): T = {
-    val p = Paths.get(localPath(dir)).toAbsolutePath.normalize()
+    val p = Paths.get(VersionLog.localPath(dir)).toAbsolutePath.normalize()
     val digest = java.security.MessageDigest.getInstance("SHA-256")
       .digest(p.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val parent = Option(p.getParent).getOrElse(

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 /** The catalog's driver fold against the Spark plans it replaced, over
   * logs written the way earlier releases wrote them: every segment a
-  * `coalesce(1)` Spark write published through `publishExclusive`.
+  * `coalesce(1)` Spark write published by the log's blind append.
   *
   *  - snapshot() and every asOf(s) equal the keep-latest `row_number`
   *    window evaluated by Spark over the raw log (the oracle lives only
@@ -37,7 +37,7 @@ class CatalogFoldSpec extends SparkSpec {
       val n = p.getFileName.toString
       n.startsWith("part-") && n.endsWith(".parquet")
     }.get)
-    val seq = ManifestCatalog.publishExclusive(logDir, part)
+    val seq = new graft.storage.VersionLog(Paths.get(logDir), "", 20, ".parquet").publish(part)
     graft.core.PathWalk.deleteRecursively(staging)
     seq
   }

@@ -2,6 +2,7 @@ package graft.catalog
 
 import graft.SparkSpec
 import graft.model.ManifestEntry
+import java.nio.file.{Files, Paths}
 
 /** Mirrors `dl-datalake/tests/metadata/test_manifest.py` +
   * `tests/integration/test_03_metadata.py` semantics.
@@ -195,5 +196,35 @@ class ManifestCatalogSpec extends SparkSpec {
     val files = logFiles()
     assert(cat.deleteEntries(symbol = Some("btcusdt")) == 0L)
     assert(cat.currentSeq() == seq + 1 && logFiles() == files)
+  }
+
+  test("a file: root commits under its own path; a non-local root fails by name") {
+    val dir = tmpDir("catfile")
+    val cat = new ManifestCatalog(spark, s"file:$dir")
+    cat.addEntry(entry("p1"))
+    assert(Files.exists(Paths.get(dir, "_manifest", "log", "00000000000000000001.parquet")))
+    assert(!Files.exists(Paths.get(s"file:$dir")), "a relative file: directory was created")
+    assert(new ManifestCatalog(spark, dir).snapshot().collect().map(_.getAs[String]("path")).toSeq == Seq("p1"))
+    val e = intercept[UnsupportedOperationException](new ManifestCatalog(spark, "s3://bucket/lake"))
+    assert(e.getMessage.contains("scheme 's3'"), e.getMessage)
+  }
+
+  test("two threads compact while a third commits: the serial snapshot, no lost file") {
+    val root = tmpDir("catcompact")
+    val cat = new ManifestCatalog(spark, root)
+    def commits(c: ManifestCatalog, from: Int, to: Int): Unit =
+      (from to to).foreach(i => c.addEntry(entry(s"p${i % 25}", to = 3000L + i)))
+    commits(cat, 1, 20)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def thread(body: => Unit) = new Thread(() => try body catch { case t: Throwable => errors.add(t): Unit })
+    val threads = Seq(thread(commits(cat, 21, 60))) ++
+      (1 to 2).map(_ => thread((1 to 5).foreach(_ => new ManifestCatalog(spark, root).compact())))
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errors.isEmpty, errors.toString)
+    val serial = new ManifestCatalog(spark, tmpDir("catserial"))
+    commits(serial, 1, 60)
+    assert(cat.snapshot().collect().toSeq == serial.snapshot().collect().toSeq)
+    cat.compact()
+    assert(cat.snapshot().collect().toSeq == serial.snapshot().collect().toSeq)
   }
 }

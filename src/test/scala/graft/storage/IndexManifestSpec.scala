@@ -48,7 +48,7 @@ class IndexManifestSpec extends SparkSpec {
     // two writers derive from seq 1; the second publish must die
     IndexManifest.commit(root, adds = Seq(f("index", 2, "files/b/f.parquet")),
       expectedSeq = 1)
-    val e = intercept[IndexManifest.ConcurrentCommitException] {
+    val e = intercept[VersionLog.ConcurrentCommitException] {
       IndexManifest.commit(root, adds = Seq(f("index", 3, "files/c/f.parquet")),
         expectedSeq = 1)
     }
@@ -159,6 +159,39 @@ class IndexManifestSpec extends SparkSpec {
     intercept[Exception](IndexManifest.state(root, asOf = Some(5L)))
     assert(IndexManifest.state(root).files.length == 4,
       "the live set must survive the full vacuum")
+  }
+
+  test("golden: a fixed commit, checkpoint and vacuum sequence writes these exact version bytes") {
+    val root = tmpDir("idxman_golden")
+    val dir = Paths.get(root, "_versions")
+    def versions(): Map[String, String] = graft.core.PathWalk.list(dir)(_.map { p =>
+      p.getFileName.toString -> new String(Files.readAllBytes(p), "UTF-8")
+    }.toMap)
+    val meta = "{\"k\":8,\"tau\":0.35,\"name\":\"é\t\"}" // a real tab, escaped as \t
+    val metaLine = """{"k":"meta","json":"{\"k\":8,\"tau\":0.35,\"name\":\"é\t\"}"}""" + "\n"
+    val a = """{"k":"file","sub":"index","cluster":3,"path":"files/u1/pc=3/a.parquet","bytes":120,"add":true}""" + "\n"
+    val aGone = """{"k":"file","sub":"index","cluster":3,"path":"files/u1/pc=3/a.parquet","bytes":120,"add":false}""" + "\n"
+    val b = """{"k":"file","sub":"labels","cluster":-1,"path":"files/u2/b.parquet","bytes":7,"add":true}""" + "\n"
+    val c = """{"k":"file","sub":"index","cluster":0,"path":"files/u2/pc=0/c.parquet","bytes":64,"add":true}""" + "\n"
+    val ckpt = """{"k":"checkpoint"}""" + "\n"
+    touch(root, "files/u1/pc=3/a.parquet")
+    touch(root, "files/u2/b.parquet")
+    touch(root, "files/u2/pc=0/c.parquet")
+
+    assert(IndexManifest.commit(root, adds = Seq(f("index", 3, "files/u1/pc=3/a.parquet", 120L)),
+      metaJson = Some(meta), expectedSeq = 0) == 1)
+    assert(IndexManifest.commit(root,
+      adds = Seq(f("labels", -1, "files/u2/b.parquet", 7L), f("index", 0, "files/u2/pc=0/c.parquet", 64L)),
+      removes = Seq(f("index", 3, "files/u1/pc=3/a.parquet", 120L)), expectedSeq = 1) == 2)
+    assert(IndexManifest.checkpoint(root) == 3)
+    assert(versions() == Map(
+      "00000000000000000001.json" -> (metaLine + a),
+      "00000000000000000002.json" -> (aGone + b + c),
+      "00000000000000000003.json" -> (ckpt + metaLine + b + c)))
+
+    assert(IndexManifest.vacuum(root) == ((1L, 3L)))
+    assert(versions() == Map("00000000000000000004.json" -> (ckpt + metaLine + b + c)))
+    assert(!Files.exists(Paths.get(root, "files/u1")))
   }
 
   test("meta text round-trips through the JSON-line encoding verbatim") {

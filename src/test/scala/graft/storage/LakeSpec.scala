@@ -355,4 +355,30 @@ class LakeSpec extends SparkSpec {
     assert(counts.contains(1) && counts.exists(_ > 1), counts)
     assert(LakeIO.scanPartitions(spark, Nil) == 0)
   }
+
+  test("readFiles builds its frame in 0 jobs, with the schema and rows of Spark's inferred read") {
+    val root = tmpDir("lake-files")
+    val key = SeriesKey("EX", "SPOT", "SYM", "raw", "1m")
+    val writer = new LakeWriter(spark, root)
+    // January without, February with an extra column
+    writer.writeOhlc(candleDf(genCandles(30)), key)
+    writer.writeOhlc(candleDf(genCandles(30, startMs = 1675209600000L)).withColumn("trades", lit(7L)), key)
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a survivor list need not come in path order
+    val paths = LakeIO.inPathOrder(LakeIO.dataFiles(fs, new org.apache.hadoop.fs.Path(root)))
+      .map(_.getPath.toString).reverse
+    assert(paths.size == 2)
+    val inferring = spark.newSession()
+    inferring.conf.set(LakeIO.InferenceConf, "false")
+    for (merge <- Seq(true, false)) {
+      val (df, jobs) = withJobCount(LakeIO.readFiles(spark, root, paths, merge))
+      assert(jobs == 0, s"readFiles(mergeSchema = $merge) ran $jobs Spark jobs")
+      val before = inferring.read.option("mergeSchema", merge.toString).option("basePath", root)
+        .parquet(paths: _*)
+        .withColumn("year", col("year").cast("int")).withColumn("month", col("month").cast("int"))
+      assert(df.schema == before.schema)
+      assert(df.columns.contains("trades") == merge)
+      assert(df.orderBy("ts").collect().toSeq == before.orderBy("ts").collect().toSeq)
+    }
+  }
 }
