@@ -282,9 +282,6 @@ object VectorFunctions {
   /** ‖a‖₂ = sqrt(fdot(a, a)). */
   def fnorm(a: Column): Column = sqrt(c(FloatVecDot(e(a), e(a))))
 
-  /** cos(a, b) = fdot / (fnorm·fnorm). */
-  def fcosine(a: Column, b: Column): Column = fdot(a, b) / (fnorm(a) * fnorm(b))
-
   /** Coarse-quantizer assignment against a broadcast (ids, centroids,
     * norms) triple — ids must be ascending, norms pre-guarded (0 → 1.0).
     */

@@ -40,10 +40,12 @@ object Dedup {
     * into bands of rowsPerBand → equi-join docs sharing any band key →
     * distinct candidate pairs → exact Jaccard on candidates only.
     *
-    * Scale shape: explode is numBands rows/doc; the join shuffles on
-    * (band index, band key); hot buckets are bounded because identical
-    * band keys imply near-identical signatures. Verification re-joins
-    * the (small) candidate set against per-doc shingle sets.
+    * Scale shape: explode is numBands rows/doc; the candidates are a
+    * [[PairJoin.self]] on (band index, band key), pinned and hinted as
+    * that doc explains, with the band keys unsplit (one block). The sigs
+    * checkpoint is byte-tiny, which is exactly the case the pin is for.
+    * Verification re-joins the (small) candidate set against per-doc
+    * shingle sets.
     */
   def minhashLsh(docs: DataFrame, shingleLen: Int = 3, numPerms: Int = 16,
                  bands: Int = 8, idCol: String = "doc_id",
@@ -54,22 +56,11 @@ object Dedup {
     val hashSets = lshHashSets(hb)
     val sigs = lshBandRows(hb)
 
-    // Explicit repartition by the band key on both sides: the sigs
-    // checkpoint is byte-tiny, so AQE would otherwise broadcast one side
-    // and run the whole band-bucket pair emission on the checkpoint's
-    // 1-2 scan partitions (the measured simhashPairs pathology — see
-    // the repartition comment there; explicit numPartitions also keeps
-    // AQE from byte-coalescing CPU-heavy partitions).
-    val para = docs.sparkSession.sparkContext.defaultParallelism
-    val a = sigs.select(col("doc_id").as("doc_a"), col("band"), col("key"))
-      .repartition(para, col("band"), col("key"))
-    val b = sigs.select(col("doc_id").as("doc_b"), col("band"), col("key"))
-      .repartition(para, col("band"), col("key"))
-    // shuffle_hash for the same reason as simhashPairs: co-partitioned
-    // sides, and AQE's broadcast conversion would add a driver collect
-    // + re-broadcast on top of the explicit exchange already paid
-    val candidates = a.hint("shuffle_hash").join(b, Seq("band", "key"))
-      .filter(col("doc_a") < col("doc_b"))
+    // band keys stay unsplit (one block everywhere): N identical docs
+    // share every band key, so a hot key is still one join group that
+    // emits N²/2 candidates before the dropDuplicates
+    val candidates = PairJoin.self(sigs.select(col("doc_id").as("doc"), col("band"), col("key")),
+        Seq("band", "key"), "doc", blocked = false)
       .select("doc_a", "doc_b")
       .dropDuplicates("doc_a", "doc_b")
 
@@ -277,13 +268,19 @@ object Dedup {
     * lease AND the manifest CAS; an id must still mean the same document
     * everywhere.
     *
-    * Scale shape: per batch the work is O(|batch| band rows) shuffled
-    * against the index's (band,key) table — the index side is an
-    * equi-join probe, never rewritten (commits only add files). Both
-    * join sides pin their exchange (explicit numPartitions on the full
-    * band key) for the measured byte-based-planner pathology: a
-    * byte-tiny new batch would otherwise broadcast and serialize the
-    * bucket-pair evaluation onto the index scan's partitioning.
+    * Scale shape: the work per batch grows with the index, not only
+    * with the batch. The band join's b-side is `idxBands ∪ newBands`,
+    * repartitioned on every ingest, so every indexed band row is read
+    * and shuffled each time; the committing anti-join reads every
+    * indexed doc id, and the Jaccard verification joins the candidates
+    * against every indexed hash set. Commits only add files,
+    * so the index on disk is never rewritten, but it is re-shuffled per
+    * batch (measured: a 16× index cost 34× the shuffle bytes; probing
+    * the index in place is ROADMAP item 2). Both join sides pin their
+    * exchange (explicit numPartitions on the full band key) for the
+    * measured byte-based-planner pathology ([[PairJoin]]): a byte-tiny
+    * new batch would otherwise broadcast and serialize the bucket-pair
+    * evaluation onto the index scan's partitioning.
     */
   def minhashLshIncremental(newDocs: DataFrame, root: String,
                             append: Boolean = true,
@@ -336,7 +333,7 @@ object Dedup {
       .union(newBands.withColumn("is_new", lit(true)))
       .select(col("doc_id").as("doc_b"), col("band"), col("key"), col("is_new"))
       .repartition(para, col("band"), col("key"))
-    // shuffle_hash: same co-partitioned-sides rationale as minhashLsh
+    // shuffle_hash: the co-partitioned-sides rationale of PairJoin
     val candidates = a.hint("shuffle_hash").join(b, Seq("band", "key"))
       .filter(col("doc_a") =!= col("doc_b"))
       // new-vs-new appears in both orientations — keep one; new-vs-index
@@ -445,55 +442,15 @@ object Dedup {
       s"simhashPairs: 4 byte-bands are exact only for maxHamming <= 3, got $maxHamming")
     // tiny (id + 1 long) and feeds a self-join → materialize once
     val fp = simhash(docs, idCol, textCol).pipe(graft.core.Checkpoints.stable)
-    val banded = fp.select(col("doc_id"), col("simhash"),
+    val banded = fp.select(col("doc_id").as("doc"), col("simhash").as("fp"),
       posexplode(array((0 until 4).map(i =>
         shiftright(col("simhash"), i * 8) % 256): _*)).as(Seq("band", "key")))
-    // Block-decomposed self-join for hot buckets: a (band,key) bucket
-    // is ONE key group to the join — a saturated fingerprint region (a
-    // dense corpus can put ~25% of all docs into one 8-bit band value)
-    // makes that group a single task evaluating |bucket|²/2 pairs
-    // serially with the whole side buffered in memory. Each doc is
-    // chunked by id into k(bucket) blocks and the join key extended to
-    // (band, key, blockA, blockB): a hot bucket becomes k(k+1)/2
-    // independently-scheduled key groups — exact same pair set, k²-way
-    // parallel, per-task memory bounded by blockSize. k is ADAPTIVE
-    // (ceil(|bucket|/blockSize), capped): the bucket-count aggregate is
-    // tiny (≤ 4·256 rows here, ≤ bands·2^bits in general) and comes
-    // back as a broadcast, so cold buckets get k=1 — zero replication,
-    // zero overhead — and only saturated buckets pay the split.
-    val blockSize = 1024
-    val maxBlocks = 16
-    val counts = banded.groupBy("band", "key")
-      .agg(count(lit(1)).as("bucket_n"))
-    val bk = banded.join(broadcast(counts), Seq("band", "key"))
-      .withColumn("k",
-        least(lit(maxBlocks), ceil(col("bucket_n") / blockSize)).cast("int"))
-    // Pin the join's parallelism to the cluster, not to the input's
-    // partition count: both sides are explicitly repartitioned by the
-    // FULL join key. Without this, a corpus whose fingerprint table is
-    // broadcast-small lets AQE pick a broadcast join whose probe side
-    // inherits the few partitions of the tiny fp scan — the whole
-    // bucket²-pair evaluation then runs on 1-2 cores no matter how hot
-    // the buckets are (measured at sf1: 40 s wall, 1.6-core average,
-    // while 10× the data ran FASTER because it crossed the broadcast
-    // threshold into a shuffled join). An explicit numPartitions is
-    // exempt from AQE partition coalescing, which would otherwise
-    // re-merge these CPU-heavy-but-byte-light partitions; with both
-    // sides co-partitioned the join itself adds no further exchange.
-    val para = docs.sparkSession.sparkContext.defaultParallelism
-    val joinKey = Seq(col("band"), col("key"), col("ci"), col("cj"))
-    val a = bk
-      .withColumn("ci", pmod(col("doc_id"), col("k")).cast("int"))
-      .withColumn("cj", explode(sequence(col("ci"), col("k") - 1)))
-      .select(col("doc_id").as("doc_a"), col("simhash").as("fp_a"),
-        col("band"), col("key"), col("ci"), col("cj"))
-      .repartition(para, joinKey: _*)
-    val b = bk
-      .withColumn("cj", pmod(col("doc_id"), col("k")).cast("int"))
-      .withColumn("ci", explode(sequence(lit(0), col("cj"))))
-      .select(col("doc_id").as("doc_b"), col("simhash").as("fp_b"),
-        col("band"), col("key"), col("ci"), col("cj"))
-      .repartition(para, joinKey: _*)
+    // A saturated fingerprint region (a dense corpus can put ~25% of all
+    // docs into one 8-bit band value) is a hot (band, key) group, so the
+    // pair join is blocked per bucket (PairJoin). Its bucket-count
+    // aggregate is tiny at any corpus size (≤ 4·256 rows here,
+    // ≤ bands·2^bits in general), so it is broadcast back.
+    //
     // Both dedup decisions happen MAP-SIDE on the join output (fp_a and
     // fp_b are already in the row), so the pair stream needs no further
     // shuffle at all:
@@ -511,18 +468,7 @@ object Dedup {
       col("band") > i &&
         (shiftright(col("fp_a"), i * 8) % 256 === shiftright(col("fp_b"), i * 8) % 256)
     }.reduce(_ || _)
-    // shuffle_hash: both sides are already co-partitioned on the full
-    // join key by the explicit repartitions above, so a shuffled-hash
-    // join reads them in place with ZERO further data movement. Without
-    // the hint AQE converts to broadcast when one side looks small —
-    // paying the a-side exchange AND a driver collect + re-broadcast on
-    // top of it (measured in the r18 before-plan). The hint never
-    // changes the pair set, only the algorithm.
-    a.hint("shuffle_hash").join(b, Seq("band", "key", "ci", "cj"))
-      // same-block groups see both orientations (dedup by id order);
-      // cross-block groups see exactly one orientation (keep it even
-      // when doc_a > doc_b — least/greatest below normalizes)
-      .filter(col("ci") =!= col("cj") || col("doc_a") < col("doc_b"))
+    PairJoin.self(banded, Seq("band", "key"), "doc", blocked = true, broadcastCounts = true)
       .withColumn("hamming", TextHash.hamming(col("fp_a"), col("fp_b")))
       .filter(col("hamming") <= maxHamming && !earlierBandMatches)
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),

@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.queries.Embeddings.{dot, norm}
+import graft.queries.Embeddings.norm
 
 /** Semantic deduplication (the SemDeDup recipe, Abbas et al. 2023,
   * arXiv:2303.09540): cluster the corpus with a cheap coarse quantizer,
@@ -16,11 +16,9 @@ import graft.queries.Embeddings.{dot, norm}
   *   - [[IvfSearch.trainCentroids]]/[[IvfSearch.buildIndex]] — the
   *     deterministic (md5-seeded, integer-quantized Lloyd) k-means that
   *     q49 already replays in DuckDB;
-  *   - a within-cluster block-decomposed pair join — the
-  *     [[SimilaritySearch.cosinePairsLsh]] shape with the IVF cluster
-  *     as the blocking key, so per-task memory stays bounded by
-  *     `blockSize` vectors and a hot cluster fans out to k(k+1)/2
-  *     independently-scheduled key groups instead of one quadratic task;
+  *   - a within-cluster [[PairJoin.self]] with the IVF cluster as the
+  *     group, so a hot cluster fans out to independently scheduled
+  *     blocks instead of one quadratic task;
   *   - [[Dedup.blockConfinedComponents]] — a single-shuffle in-task
   *     union-find per IVF cluster (edges are cluster-confined by the
   *     pair join's key, so per-cluster components ARE the global
@@ -52,17 +50,16 @@ object SemanticDedup {
     math.max(8L, (n + targetClusterSize - 1) / targetClusterSize).toInt
 
   /** High-cosine pairs within each cluster of an assigned index
-    * (`vec_id`, `embedding`, `cluster`): block-decomposed self-join,
-    * ids normalized ascending.
+    * (`vec_id`, `embedding`, `cluster`): a [[PairJoin.self]] with the
+    * cluster as the group, ids normalized ascending.
     *
     * `probesCol`: for a MULTI-PROBE index (each vector exploded into
     * its nProbe clusters, carrying its full probe set in this column),
     * a pair sharing several probe clusters would surface — and pay its
     * dot product — once PER shared cluster. Passing the probes column
-    * enables the canonical rule: emit the pair only in
-    * `MIN(probes_a ∩ probes_b)`, applied BEFORE the cosine, so every
-    * candidate pair is evaluated exactly once (measured ~2× at sf10,
-    * where near-duplicates overwhelmingly share both probes). The
+    * enables the [[canonicalProbe]] rule, applied BEFORE the cosine, so
+    * every candidate pair is evaluated exactly once (measured ~2× at
+    * sf10, where near-duplicates overwhelmingly share both probes). The
     * canonical cluster is a probe cluster of BOTH sides, so edges stay
     * block-confined for the downstream component plan. The multi-probe
     * output also carries `crosses` — whether the pair's RANK-1 clusters
@@ -73,38 +70,15 @@ object SemanticDedup {
   def semanticPairs(index: DataFrame, tau: Double,
                     blockSize: Int = 1024, maxBlocks: Int = 16,
                     probesCol: Option[String] = None): DataFrame = {
-    val probeCols = probesCol.map(c => col(c).as("probes")).toSeq
     val base = index.select(Seq(col("cluster"), col("vec_id").as("id"),
-      col("embedding").as("emb"), norm(col("embedding")).as("nrm")) ++ probeCols: _*)
-    val counts = base.groupBy("cluster").agg(count(lit(1)).as("cluster_n"))
-    val bk = base.join(counts, Seq("cluster"))
-      .withColumn("k",
-        least(lit(maxBlocks), ceil(col("cluster_n") / blockSize)).cast("int"))
-    val para = index.sparkSession.sparkContext.defaultParallelism
-    val joinKey = Seq(col("cluster"), col("ci"), col("cj"))
-    def side(suffix: String, extra: DataFrame => DataFrame) = {
-      val pc = probesCol.map(_ => col("probes").as(s"probes_$suffix")).toSeq
-      extra(bk).select(Seq(col("cluster"), col("ci"), col("cj"),
-        col("id").as(s"id_$suffix"), col("emb").as(s"emb_$suffix"),
-        col("nrm").as(s"norm_$suffix")) ++ pc: _*)
-        .repartition(para, joinKey: _*)
-    }
-    val a = side("a", _.withColumn("ci", pmod(col("id"), col("k")).cast("int"))
-      .withColumn("cj", explode(sequence(col("ci"), col("k") - 1))))
-    val b = side("b", _.withColumn("cj", pmod(col("id"), col("k")).cast("int"))
-      .withColumn("ci", explode(sequence(lit(0), col("cj")))))
-    // shuffle_hash: both sides are co-partitioned on the full join key
-    // (see Dedup.simhashPairs) — without the hint AQE converts to
-    // broadcast and pays a driver collect + re-broadcast on top of the
-    // exchanges already paid
-    val joined = a.hint("shuffle_hash").join(b, Seq("cluster", "ci", "cj"))
-      .filter(col("ci") =!= col("cj") || col("id_a") < col("id_b"))
+      col("embedding").as("emb"), norm(col("embedding")).as("norm")) ++
+      probesCol.map(c => col(c).as("probes")): _*)
+    val joined = PairJoin.self(base, Seq("cluster"), "id", blocked = true,
+      blockSize = blockSize, maxBlocks = maxBlocks)
     // canonical-cluster filter FIRST (cheap 2-element array intersect),
     // so redundant pair surfaces never reach the dot product
-    val canon = probesCol.fold(joined)(_ => joined.filter(
-      array_min(array_intersect(col("probes_a"), col("probes_b"))) === col("cluster")))
-    val kept = canon
-      .withColumn("sim", dot(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b")))
+    val kept = probesCol.fold(joined)(_ => joined.filter(canonicalProbe))
+      .withColumn("sim", SimilaritySearch.pairCosine)
       .filter(col("sim") >= tau)
     val out = Seq(col("cluster"), least(col("id_a"), col("id_b")).as("id_a"),
       greatest(col("id_a"), col("id_b")).as("id_b"), col("sim")) ++
@@ -114,6 +88,13 @@ object SemanticDedup {
     // key, and downstream component-finding exploits exactly that
     kept.select(out: _*)
   }
+
+  /** The canonical multi-probe rule on a pair row: keep the pair only in
+    * its `cluster` = MIN(probes_a ∩ probes_b), the one cluster of all
+    * the pair's shared probe clusters that emits it.
+    */
+  private[llm] val canonicalProbe: Column =
+    array_min(array_intersect(col("probes_a"), col("probes_b"))) === col("cluster")
 
   /** Full pipeline: every corpus vector annotated with its IVF cluster
     * and whether semantic dedup keeps it (singletons and duplicate-group

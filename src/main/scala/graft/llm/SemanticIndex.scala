@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import scala.jdk.CollectionConverters._
 
-import graft.queries.Embeddings.{dot, norm}
+import graft.queries.Embeddings.norm
 import graft.storage.{IndexFile, IndexManifest, VersionLog}
 
 /** Persisted INCREMENTAL semantic dedup — the q69/q93 ingest pattern
@@ -266,20 +266,6 @@ object SemanticIndex {
   private def observedRows(m: org.apache.spark.sql.Row): Map[Int, Long] =
     m.getAs[scala.collection.Map[Int, Long]]("rows").toMap
 
-  /** The pair join's `cluster` → block-count column: ceil(rows /
-    * blockSize) blocks, capped at `maxBlocks`, for every cluster over
-    * `blockSize` rows; any other cluster is one block. Only split
-    * clusters enter the plan (a map literal of them), so the common
-    * all-one-block case plans a plain `lit(1)`.
-    */
-  private def blockCount(rows: Map[Int, Long], blockSize: Int, maxBlocks: Int): Column = {
-    val split = rows.collect { case (c, n) if n > blockSize =>
-      c -> math.min(maxBlocks.toLong, (n + blockSize - 1) / blockSize).toInt
-    }
-    if (split.isEmpty) lit(1)
-    else coalesce(try_element_at(typedLit(split), col("cluster")), lit(1))
-  }
-
   private def plus(a: Map[Int, Long], b: Map[Int, Long]): Map[Int, Long] =
     b.foldLeft(a) { case (acc, (c, n)) => acc.updated(c, acc.getOrElse(c, 0L) + n) }
 
@@ -343,46 +329,33 @@ object SemanticIndex {
 
   /** New τ-edges a batch introduces: new-vs-existing and new-vs-new,
     * within the batch's AFFECTED clusters only, each pair exactly once
-    * (ids normalized ascending). Block-decomposed like
-    * [[SemanticDedup.semanticPairs]] — the all-rows side is split into
-    * ceil(n/blockSize) hash blocks (bounding any single join group) and
-    * each new row replicates across them, so a hot cluster fans out to
-    * independently-scheduled groups; the new side is batch-sized, so
-    * Catalyst broadcasts it when small (the ideal plan: the existing
-    * partitions are scanned in place, no corpus shuffle).
-    *
-    * Exactness of the once-each rule: an existing b-row lives in
-    * exactly one block and the a-side is new-only, so new-vs-existing
-    * surfaces once; new-vs-new surfaces in both orientations and the
-    * `is_new && id_a < id_b` filter keeps one. The rule holds for ANY
-    * per-cluster block count ≥ 1, so the counts are driver-side inputs,
-    * not a Spark aggregate: `clusterRows` is rows per cluster over
-    * existing ∪ assigned (ingest reads it from footers and an observed
-    * metric), a cluster over `blockSize` rows splits into
-    * ceil(rows / blockSize) blocks (at most `maxBlocks`), and a cluster
-    * absent from the map is one block. Wrong counts cost balance, never
-    * pairs.
+    * (ids normalized ascending): a [[PairJoin.newVsAll]] with the cluster
+    * as the group. Its once-each rule holds for ANY per-cluster block
+    * count, so the counts are driver-side inputs, not a Spark aggregate:
+    * `clusterRows` is rows per cluster over existing ∪ assigned (ingest
+    * reads it from footers and an observed metric), and a cluster absent
+    * from the map is one block. The fan-out: each batch row replicates
+    * across its cluster's blocks, so a hot cluster costs batch × blocks
+    * rows on the small side, never a copy of the existing rows.
     */
   def newPairs(assigned: DataFrame, existing: DataFrame, tau: Double,
                clusterRows: Map[Int, Long] = Map.empty,
-               blockSize: Int = 1024, maxBlocks: Int = 16): DataFrame = {
-    def prep(df: DataFrame, isNew: Boolean) =
-      df.select(col("cluster"), col("vec_id").as("id"),
-        col("embedding").as("emb"), norm(col("embedding")).as("nrm"),
-        lit(isNew).as("is_new"))
-    val nblk = blockCount(clusterRows, blockSize, maxBlocks)
-    val b = prep(existing, isNew = false).unionByName(prep(assigned, isNew = true))
-      .withColumn("blk", pmod(col("id"), nblk).cast("int"))
-      .select(col("cluster"), col("blk"), col("id").as("id_b"),
-        col("emb").as("emb_b"), col("nrm").as("nrm_b"), col("is_new"))
-    val a = prep(assigned, isNew = true)
-      .withColumn("blk", explode(sequence(lit(0), nblk - 1)))
-      .select(col("cluster"), col("blk"), col("id").as("id_a"),
-        col("emb").as("emb_a"), col("nrm").as("nrm_a"))
-    a.join(b, Seq("cluster", "blk"))
-      .filter(col("id_a") =!= col("id_b"))
-      .filter(!col("is_new") || col("id_a") < col("id_b"))
-      .withColumn("sim", dot(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")))
+               blockSize: Int = 1024, maxBlocks: Int = 16): DataFrame =
+    edges(assigned, existing, tau, clusterRows, blockSize, maxBlocks, multiProbe = false)
+
+  /** [[newPairs]] and [[newPairsMultiProbe]]: the multi-probe form
+    * carries `probes` and keeps each pair in its canonical cluster only.
+    */
+  private def edges(assigned: DataFrame, existing: DataFrame, tau: Double,
+                    clusterRows: Map[Int, Long], blockSize: Int, maxBlocks: Int,
+                    multiProbe: Boolean): DataFrame = {
+    def prep(df: DataFrame) =
+      df.select(Seq(col("cluster"), col("vec_id").as("id"), col("embedding").as("emb"),
+        norm(col("embedding")).as("norm")) ++ (if (multiProbe) Seq(col("probes")) else Nil): _*)
+    val pairs = PairJoin.newVsAll(prep(assigned), prep(existing), "cluster", "id",
+      clusterRows, blockSize, maxBlocks)
+    (if (multiProbe) pairs.filter(SemanticDedup.canonicalProbe) else pairs)
+      .withColumn("sim", SimilaritySearch.pairCosine)
       .filter(col("sim") >= tau)
       .select(col("cluster"), least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"), col("sim"))
@@ -638,48 +611,20 @@ object SemanticIndex {
   }
 
   /** New τ-edges a multi-probe batch introduces, each pair exactly once:
-    * the [[newPairs]] block decomposition, with the canonical-cluster
-    * rule of [[SemanticDedup.semanticPairs]] — a pair sharing probe
-    * clusters {A,B} surfaces in both partitions and is kept only in
-    * MIN(probes_a ∩ probes_b), filtered BEFORE the dot product so
+    * [[newPairs]] with the canonical-cluster rule of
+    * [[SemanticDedup.semanticPairs]], filtered BEFORE the dot product so
     * redundant surfaces never pay the arithmetic. Exactness: a
-    * new-vs-existing pair surfaces once per shared cluster (the
-    * existing row sits in one block, the new side replicates across
-    * blocks), new-vs-new in both orientations (`is_new && id_a < id_b`
-    * keeps one), and the canonical filter keeps exactly one cluster;
-    * every shared cluster is a probe of the NEW vector, hence affected,
-    * hence generated — so the union over batches is the monolithic
-    * multi-probe pair set, each edge discovered in the batch where its
-    * second member arrives. `clusterRows` counts probe rows per cluster
-    * and sets the block split exactly as in [[newPairs]].
+    * new-vs-existing pair surfaces once per shared cluster and the
+    * canonical filter keeps exactly one; every shared cluster is a probe
+    * of the NEW vector, hence affected, hence generated — so the union
+    * over batches is the monolithic multi-probe pair set, each edge
+    * discovered in the batch where its second member arrives.
+    * `clusterRows` counts probe rows per cluster.
     */
   def newPairsMultiProbe(assigned: DataFrame, existing: DataFrame, tau: Double,
                          clusterRows: Map[Int, Long] = Map.empty,
-                         blockSize: Int = 1024, maxBlocks: Int = 16): DataFrame = {
-    def prep(df: DataFrame, isNew: Boolean) =
-      df.select(col("cluster"), col("vec_id").as("id"),
-        col("embedding").as("emb"), norm(col("embedding")).as("nrm"),
-        col("probes"), lit(isNew).as("is_new"))
-    val nblk = blockCount(clusterRows, blockSize, maxBlocks)
-    val b = prep(existing, isNew = false).unionByName(prep(assigned, isNew = true))
-      .withColumn("blk", pmod(col("id"), nblk).cast("int"))
-      .select(col("cluster"), col("blk"), col("id").as("id_b"),
-        col("emb").as("emb_b"), col("nrm").as("nrm_b"),
-        col("probes").as("probes_b"), col("is_new"))
-    val a = prep(assigned, isNew = true)
-      .withColumn("blk", explode(sequence(lit(0), nblk - 1)))
-      .select(col("cluster"), col("blk"), col("id").as("id_a"),
-        col("emb").as("emb_a"), col("nrm").as("nrm_a"),
-        col("probes").as("probes_a"))
-    a.join(b, Seq("cluster", "blk"))
-      .filter(col("id_a") =!= col("id_b"))
-      .filter(!col("is_new") || col("id_a") < col("id_b"))
-      .filter(array_min(array_intersect(col("probes_a"), col("probes_b"))) === col("cluster"))
-      .withColumn("sim", dot(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("sim") >= tau)
-      .select(col("cluster"), least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"), col("sim"))
-  }
+                         blockSize: Int = 1024, maxBlocks: Int = 16): DataFrame =
+    edges(assigned, existing, tau, clusterRows, blockSize, maxBlocks, multiProbe = true)
 
   /** Global per-vector decisions from rank-1 rows + local star labels:
     * the read-time quotient solve (see [[ingestMultiProbe]]). Kept =

@@ -145,32 +145,18 @@ object SimilaritySearch {
     val b = corpus.select(col(idCol).as("id_b"), col(embCol).as("emb_b"),
       norm(col(embCol)).as("norm_b"))
     a.crossJoin(b).filter(col("id_a") < col("id_b"))
-      .withColumn("sim", dot(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b")))
+      .withColumn("sim", pairCosine)
       .filter(col("sim") >= threshold)
       .select("id_a", "id_b", "sim")
   }
 
-  /** LSH-bucketed near-duplicate pairs: same-bucket candidates only.
-    *
-    * Block-decomposed self-join (same shape as Dedup.simhashPairs): a
-    * bucket is ONE key group to the join, so a dense embedding region —
-    * or simply planes too small for the corpus — would make a single
-    * task evaluate |bucket|²/2 dot products serially with one whole
-    * side buffered. Each vector is chunked by id into k(bucket) blocks
-    * and the join key extended to (bucket, blockA, blockB): a hot
-    * bucket becomes k(k+1)/2 independently-scheduled key groups — the
-    * exact same pair set, k²-way parallel, per-task memory bounded by
-    * blockSize vectors. k is ADAPTIVE (ceil(|bucket|/blockSize), capped
-    * at maxBlocks): the per-bucket histogram is ≤ min(2^planes, N/1)
-    * rows of (long, long) — with [[adaptivePlanes]] that's ~N/1024
-    * rows, broadcastable at any realistic corpus — so cold buckets get
-    * k=1 (zero replication, zero overhead) and only hot buckets pay
-    * the split.
-    *
-    * Cross-block key groups see exactly one orientation (lower block on
-    * the a-side), so ids are normalized with least/greatest at the end;
-    * `sim` is orientation-independent bit-for-bit (elementwise products
-    * commute, summation order is the dimension order either way).
+  /** LSH-bucketed near-duplicate pairs: same-bucket candidates only, a
+    * [[PairJoin.self]] with the bucket as the group. A dense embedding
+    * region, or simply planes too small for the corpus, makes a hot
+    * bucket; with [[adaptivePlanes]] the per-bucket histogram is ~N/1024
+    * rows. `sim` is orientation-independent bit-for-bit (elementwise
+    * products commute, summation order is the dimension order either
+    * way), so normalizing the ids with least/greatest keeps it exact.
     */
   def cosinePairsLsh(corpus: DataFrame, threshold: Double,
                      planes: Int = 8, dim: Int = 64,
@@ -187,51 +173,20 @@ object SimilaritySearch {
     val bucketed = graft.core.Checkpoints.stable(
       bucketize(corpus, planes, dim, embCol)
         .select(col("bucket"), col(idCol).as("id"), col(embCol).as("emb"),
-          norm(col(embCol)).as("nrm")))
-    // counts join is NOT hinted: with adaptivePlanes the histogram is
-    // ~N/targetBucket rows — broadcastable at test scale (AQE will pick
-    // that on its own) but a multi-GB forced broadcast at 10^11 vectors.
-    // Un-hinted, the planner degrades to a shuffle join keyed on bucket,
-    // which the repartition below pays for anyway.
-    val counts = bucketed.groupBy("bucket").agg(count(lit(1)).as("bucket_n"))
-    val bk = bucketed.join(counts, Seq("bucket"))
-      .withColumn("k",
-        least(lit(maxBlocks), ceil(col("bucket_n") / blockSize)).cast("int"))
-    // Explicit repartition by the full join key on both sides: pins the
-    // pair-evaluation parallelism to the cluster even when one side is
-    // broadcast-small (otherwise the probe inherits the corpus scan's
-    // few partitions and the bucket² work serializes — see
-    // Dedup.simhashPairs for the measured pathology), and the explicit
-    // numPartitions keeps AQE from byte-coalescing these CPU-heavy
-    // partitions.
-    val para = corpus.sparkSession.sparkContext.defaultParallelism
-    val joinKey = Seq(col("bucket"), col("ci"), col("cj"))
-    val a = bk
-      .withColumn("ci", pmod(col("id"), col("k")).cast("int"))
-      .withColumn("cj", explode(sequence(col("ci"), col("k") - 1)))
-      .select(col("bucket"), col("ci"), col("cj"),
-        col("id").as("id_a"), col("emb").as("emb_a"), col("nrm").as("norm_a"))
-      .repartition(para, joinKey: _*)
-    val b = bk
-      .withColumn("cj", pmod(col("id"), col("k")).cast("int"))
-      .withColumn("ci", explode(sequence(lit(0), col("cj"))))
-      .select(col("bucket"), col("ci"), col("cj"),
-        col("id").as("id_b"), col("emb").as("emb_b"), col("nrm").as("norm_b"))
-      .repartition(para, joinKey: _*)
-    // shuffle_hash: both sides are co-partitioned on the full join key
-    // by the repartitions above — a shuffled-hash join reads them in
-    // place; without the hint AQE converts to broadcast and pays a
-    // driver collect + re-broadcast ON TOP of the already-paid exchange
-    // (see Dedup.simhashPairs). Same pair set, cheaper algorithm.
-    a.hint("shuffle_hash").join(b, Seq("bucket", "ci", "cj"))
-      // same-block groups see both orientations (dedup by id order);
-      // cross-block groups see exactly one — keep it and normalize below
-      .filter(col("ci") =!= col("cj") || col("id_a") < col("id_b"))
-      .withColumn("sim", dot(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b")))
+          norm(col(embCol)).as("norm")))
+    PairJoin.self(bucketed, Seq("bucket"), "id", blocked = true,
+      blockSize = blockSize, maxBlocks = maxBlocks)
+      .withColumn("sim", pairCosine)
       .filter(col("sim") >= threshold)
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"), col("sim"))
   }
+
+  /** Cosine of a pair row's `emb_a`/`emb_b` over their precomputed
+    * `norm_a`/`norm_b`: the score of every embedding pair join.
+    */
+  private[llm] val pairCosine: Column =
+    dot(col("emb_a"), col("emb_b")) / (col("norm_a") * col("norm_b"))
 
   /** Planes that keep the EXPECTED bucket population near `targetBucket`
     * under a uniform-sign model: ceil(log2(n / targetBucket)), floored

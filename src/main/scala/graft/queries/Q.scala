@@ -27,6 +27,4 @@ final case class Q(
 object Q {
   def apply(name: String, sql: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, run, Some(sql))
-  def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None)
 }

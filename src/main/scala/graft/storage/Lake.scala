@@ -533,9 +533,6 @@ private object LakeWriter {
 /** Pruned reads over the lake (SURVEY §7.1 #4: S1/P1/O1, S10/O2, U2). */
 final class LakeReader(spark: SparkSession, root: String) {
 
-  private def base(mergeSchema: Boolean): DataFrame =
-    LakeIO.read(spark, root, mergeSchema)
-
   /** Range scan: the rows of the matched series with `ts` in
     * `[startMs, endMs]`, ordered by ts. Market and period are optional
     * (a wildcard level, reader.py:44).
@@ -687,8 +684,4 @@ final class LakeReader(spark: SparkSession, root: String) {
   /** Stable pagination (S10/O2): global order by ts, offset/limit. */
   def page(df: DataFrame, offset: Int, limit: Int): DataFrame =
     df.orderBy("ts").offset(offset).limit(limit)
-
-  /** Distinct symbols present in the lake (S13/A7/U4). */
-  def listSymbols(): DataFrame =
-    base(mergeSchema = false).select("symbol").distinct().orderBy("symbol")
 }

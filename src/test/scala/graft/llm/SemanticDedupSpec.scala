@@ -181,6 +181,35 @@ class SemanticDedupSpec extends SparkSpec {
       "fixture must contain at least one pair sharing both probe clusters")
   }
 
+  test("semanticPairs: saturated cluster (> blockSize rows) matches the unchunked pair set") {
+    // 300 positive multiples of one vector in one cluster: every pair is
+    // a τ-pair. With blockSize=64 the cluster splits into 5 blocks (15
+    // key groups); the pair set must equal the unchunked join's
+    // (blockSize larger than the corpus ⇒ one block). The multi-probe
+    // form puts every vector in both clusters 0 and 1, so the canonical
+    // rule must keep each pair once, in cluster 0, blocked or not.
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val base = Array.fill(8)(rnd.nextGaussian().toFloat)
+    val vectors = (0 until 300).map(i => (i.toLong, base.map(_ * (1f + i / 1000f)).toSeq))
+    val rank1 = vectors.map { case (id, v) => (id, v, 0) }.toDF("vec_id", "embedding", "cluster")
+    val multi = vectors.flatMap { case (id, v) => Seq(0, 1).map(c => (id, v, c, Seq(0, 1))) }
+      .toDF("vec_id", "embedding", "cluster", "probes")
+    for ((index, probes) <- Seq(rank1 -> None, multi -> Some("probes"))) {
+      def pairs(blockSize: Int) = SemanticDedup.semanticPairs(index, 0.99,
+          blockSize = blockSize, probesCol = probes)
+        .select("cluster", "id_a", "id_b").collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+      val unchunked = pairs(1 << 20)
+      val chunked = pairs(64)
+      assert(unchunked.length == 300 * 299 / 2 && unchunked.forall(_._1 == 0),
+        s"probes=$probes: one cluster at sim~1 must yield every pair once, in cluster 0")
+      assert(chunked.length == unchunked.length && chunked.toSet == unchunked.toSet,
+        s"probes=$probes: block decomposition changed the pair set: " +
+          s"chunked=${chunked.length} unchunked=${unchunked.length}")
+    }
+  }
+
   test("TopNCosine/ArgmaxCosine NaN contract: NaN scores skipped, result truncated to real ids") {
     // ADVICE r13: a NaN score must never emit a fabricated centroid id
     // (the slot default 0). Three centroids with ids 7/8/9 — id 0 does

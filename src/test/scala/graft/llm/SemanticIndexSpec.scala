@@ -778,5 +778,10 @@ class SemanticIndexSpec extends SparkSpec {
         greatest(col("a"), col("b")).as("id_b")))
     assert(exact.nonEmpty, "fixture premise: the batch has τ-pairs")
     assert(got == exact, s"blocked pair join ${got.size} != exact τ-pairs ${exact.size}")
+    // wrong counts cost balance, never pairs: without counts the
+    // cluster is one block, and the pair set is the same
+    val oneBlock = pairSet(
+      SemanticIndex.newPairs(assigned, existing, tau, Map.empty).select("cluster", "id_a", "id_b"))
+    assert(oneBlock == got, s"one-block pair join ${oneBlock.size} != blocked ${got.size}")
   }
 }

@@ -3,7 +3,11 @@ package graft.plans
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusAccess
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.{InputAdapter, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
@@ -135,5 +139,83 @@ class NewOpPlanSpec extends SparkSpec {
       assert(!p.toLowerCase.contains("correlated"),
         s"$q: correlated subquery survived to execution:\n${p.take(2000)}")
     }
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  test("self-join pair operators: pairs come from a shuffled hash join of two pinned exchanges, in pinned jobs") {
+    // Both sides of the pair join are repartitioned to the cluster's
+    // parallelism on the full join key and the join is hinted
+    // shuffle_hash, so the pair emission is a ShuffledHashJoin reading
+    // two REPARTITION_BY_NUM exchanges in place: never a broadcast
+    // input, at any corpus size. The job counts pin that no exchange
+    // moved.
+    val sf = "/root/testdata/sf0.001"
+    val docs = graft.Tables.documents(spark, sf)
+    val emb = graft.Tables.embeddings(spark, sf)
+    val index = graft.core.Checkpoints.stable(graft.llm.IvfSearch.buildIndexMultiProbe(
+      emb.select("vec_id", "embedding"), graft.llm.IvfSearch.trainCentroids(emb, k = 8, iters = 1)))
+    val para = spark.sparkContext.defaultParallelism
+    def pinned(p: SparkPlan): Boolean = p match {
+      case i: InputAdapter => pinned(i.child)
+      case s: ShuffleQueryStageExec => pinned(s.plan)
+      case r: ReusedExchangeExec => pinned(r.child)
+      case e: ShuffleExchangeExec =>
+        e.shuffleOrigin == REPARTITION_BY_NUM && e.outputPartitioning.numPartitions == para
+      case _ => false
+    }
+    def has(p: SparkPlan, c: String) = p.output.exists(_.name == c)
+    val ops = Seq[(String, () => org.apache.spark.sql.DataFrame, String, Int)](
+      ("minhashLsh", () => graft.llm.Dedup.minhashLsh(docs), "doc", 6),
+      ("simhashPairs", () => graft.llm.Dedup.simhashPairs(docs), "doc", 6),
+      ("cosinePairsLsh", () => graft.llm.SimilaritySearch.cosinePairsLsh(emb, 0.2), "id", 6),
+      ("semanticPairs", () => graft.llm.SemanticDedup.semanticPairs(index, 0.35), "id", 5),
+      ("semanticPairs(probes)", () => graft.llm.SemanticDedup.semanticPairs(
+        index, 0.35, probesCol = Some("probes")), "id", 5))
+    ops.foreach { case (name, build, id, jobsPin) =>
+      val (df, jobs) = withJobCount { val df = build(); df.collect(); df }
+      val plan = df.queryExecution.executedPlan
+      // the pair join: one side carries the a-ids only, the other the b-ids only
+      val pairJoins = Plans.collect(plan) {
+        case j: BaseJoinExec if has(j.left, s"${id}_a") && !has(j.left, s"${id}_b") &&
+          has(j.right, s"${id}_b") && !has(j.right, s"${id}_a") => j
+      }
+      assert(pairJoins.length == 1, s"$name: expected one pair join:\n$plan")
+      assert(pairJoins.head.isInstanceOf[ShuffledHashJoinExec],
+        s"$name: the pair join is not a ShuffledHashJoin:\n$plan")
+      assert(pairJoins.head.children.forall(pinned),
+        s"$name: a pair-join input is not a $para-way repartition exchange:\n$plan")
+      assert(jobs == jobsPin, s"$name ran $jobs Spark jobs, pinned at $jobsPin")
+    }
+  }
+
+  test("simhashPairs: the bucket counts broadcast even above the static broadcast threshold") {
+    // The (band, key) histogram has at most 4·256 rows at any corpus
+    // size, but the static planner sizes an aggregate by its input. A
+    // 1-byte static threshold, with AQE's left at 10 MB, stands for a
+    // corpus above the threshold: an un-hinted count join would then
+    // shuffle the banded rows on (band, key) before AQE switched it to
+    // a broadcast.
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), "1")
+    spark.conf.set(keys(1), "10485760")
+    try {
+      val df = graft.llm.Dedup.simhashPairs(graft.Tables.documents(spark, "/root/testdata/sf0.001"))
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val countJoins = Plans.collect(plan) {
+        case j: BaseJoinExec if j.leftKeys.flatMap(_.references.map(_.name)) == Seq("band", "key") => j
+      }
+      assert(countJoins.nonEmpty, s"no count join on (band, key):\n$plan")
+      countJoins.foreach {
+        case j: BroadcastHashJoinExec =>
+          val streamed = if (j.buildSide == BuildRight) j.left else j.right
+          assert(Plans.collect(streamed) { case e: Exchange => e }.isEmpty,
+            s"the banded rows are shuffled into the count join:\n$plan")
+        case j => fail(s"the count join is not a broadcast:\n$j\n$plan")
+      }
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 }
