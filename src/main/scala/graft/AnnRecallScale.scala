@@ -23,27 +23,12 @@ import org.apache.spark.sql.functions._
   *
   * recall@k = |approx ∩ exact| / |exact| over (q_id, n_id) pairs,
   * pooled across queries. Ties broken by n_id on BOTH sides, so the
-  * comparison is exact, not fuzzy.
-  *
-  * Usage: graft.AnnRecallScale <sfDir> [topK=10] [nQueries=100]
+  * comparison is exact, not fuzzy. Runs as `graft.Harness ann-recall`.
   */
 object AnnRecallScale {
-  def main(args: Array[String]): Unit = {
-    if (Bench.reexecWithParallelGC("graft.AnnRecallScale", args)) return
-    val sfDir = args(0)
+  private[graft] def run(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val topK = if (args.length > 1) args(1).toInt else 10
     val nQueries = if (args.length > 2) args(2).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", Bench.autoShufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.files.maxPartitionBytes", Bench.autoSplitBytes(sfDir))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     val corpus = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding")).cache()
     val n = corpus.count()
@@ -123,6 +108,5 @@ object AnnRecallScale {
       println(f"[ann-recall] serve(persisted) nProbe=$nProbe: " +
         f"recall@$topK=$recall%.4f wall=$sec%.1f s warm=$warmSec%.1f s")
     }
-    spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Relaunch the current main in a child JVM with `-XX:+UseParallelGC`
@@ -79,35 +78,13 @@ object Bench {
   def main(args: Array[String]): Unit = {
     if (reexecWithParallelGC("graft.Bench", args)) return
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // comma-separated query names: time only those (iteration aid; the
     // driver never sets it, so its artifact is always the full suite)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
     def selected = if (only.isEmpty) SparkEntry.queries
                    else SparkEntry.queries.filter { case (n, _) => only(n) }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", autoShufflePartitions(sfDir, cpus.toInt))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local[32] at sub-GB scale: the default 128 MB split starves
-      // parallelism — a single-file 116 MB table becomes ONE scan task
-      // and a per-row kernel (JSON parse, shingling) runs 1-threaded
-      .config("spark.sql.files.maxPartitionBytes", autoSplitBytes(sfDir))
-      // defense in depth against block-manager pressure from 124 query
-      // executions in one JVM: periodic GC lets the ContextCleaner drop
-      // unreferenced shuffle/broadcast/RDD state even between freeAll calls
-      .config("spark.cleaner.periodicGC.interval", "1min")
-    // experiment hook: ';'-separated k=v spark confs, applied LAST so
-    // they override the defaults above (e.g. SPARK_GRAFT_CONF=
-    // "spark.sql.adaptive.enabled=false;spark.sql.shuffle.partitions=8")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("=")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
+    val spark = core.Sessions.builder(core.Sessions.cpus(32), sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // free-space premise (stated up front, not discovered at query 40):
     // big-SF suites need scratch of the same order as the input — warn

@@ -9,7 +9,7 @@ import org.apache.spark.sql.expressions.Window
 /** Partitioned-lake bench (r9-verdict task 4): every suite bench table
   * is a FLAT parquet file, but the 100 TB design center is a
   * Hive-partitioned lake where month-directory pruning carries the read
-  * path. This main series-ifies `events` into the lake layout
+  * path. This harness series-ifies `events` into the lake layout
   * (`exchange=/market=/symbol=/type=/period=/year=/month=`, one series
   * per event_type, the 30-day stream stretched ×24 to ~24 month
   * partitions), then benches the four event-query shapes
@@ -19,17 +19,18 @@ import org.apache.spark.sql.expressions.Window
   *  - FULL: whole-lake scan (the flat-table regime);
   *  - PRUNED: a one-month ts window, with ONLY the `ts BETWEEN`
   *    predicate in the query — the [[graft.plans.TsPartitionPruning]]
-  *    optimizer rule (registered via spark.sql.extensions) must derive
-  *    the year/month partition predicates itself, exactly as it would
-  *    on a cluster.
+  *    optimizer rule (registered via spark.sql.extensions by
+  *    [[Harness]]) must derive the year/month partition predicates
+  *    itself, exactly as it would on a cluster.
   *
   * For each pruned query the files-read count is pulled from the
   * executed FileSourceScan and ASSERTED ≤ the target months' file count
   * (a pruning regression fails the run, it doesn't just slow it).
   * Prints one JSON line; recorded in BASELINE.md.
   *
-  * Usage: graft.BenchPartitioned [sfDir] (or SPARK_GRAFT_SF_DIR;
-  * lake cached at SPARK_GRAFT_LAKE_DIR or /root/sfgen/lake_<name>).
+  * Args (`graft.Harness bench-partitioned`): [sfDir] (or
+  * SPARK_GRAFT_SF_DIR; lake cached at SPARK_GRAFT_LAKE_DIR or
+  * /root/sfgen/lake_<name>).
   */
 object BenchPartitioned {
 
@@ -68,25 +69,9 @@ object BenchPartitioned {
   /** Executed-plan file count of the lake scan (AQE-unwrapped). */
   private def filesRead(df: DataFrame): Long = graft.core.PlanInspect.filesRead(df)
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+  private[graft] def run(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val lakeRoot = sys.env.getOrElse("SPARK_GRAFT_LAKE_DIR",
       s"/root/sfgen/lake_${Paths.get(sfDir).getFileName}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the rule under test: ts-range → year/month partition predicates
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", Bench.autoSplitBytes(sfDir))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     if (!Files.exists(Paths.get(s"$lakeRoot/_SUCCESS"))) {
       println(s"[benchpart] building lake at $lakeRoot from $sfDir")
       buildLake(spark, sfDir, lakeRoot)
@@ -177,6 +162,5 @@ object BenchPartitioned {
     }.mkString(",")
     println(s"""{"queries":{$json},"sf":"$sfDir","lake_files":$totalFiles,""" +
       s""""month_files":$monthDirFiles,"metric":"partitioned_lake","unit":"sec"}""")
-    spark.stop()
   }
 }

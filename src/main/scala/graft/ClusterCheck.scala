@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * this host, so task closures, Expression trees, and broadcasts must
   * genuinely cross process boundaries.
   *
-  * This main runs a serialization-sensitive query subset against
-  * `SPARK_GRAFT_MASTER` (default a 2-process cluster) and prints one
-  * JSON line of order-independent result digests;
+  * `graft.Harness cluster-check` runs a serialization-sensitive query
+  * subset against `SPARK_GRAFT_MASTER` (default a 2-process cluster)
+  * and prints one JSON line of order-independent result digests;
   * `ClusterParitySpec` runs it twice — local[4] vs local-cluster —
   * and asserts digest equality per query. A digest mismatch or a
   * child crash (TaskNotSerializable, ClassNotFound on an executor,
@@ -111,17 +111,13 @@ object ClusterCheck {
     (r.getLong(0), r.getString(1))
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+  /** The session's harness-specific values: the master, 8 shuffle
+    * partitions, and for a multi-process master the executors' classpath
+    * and JDK17 opens.
+    */
+  private[graft] def tune(b: SparkSession.Builder): SparkSession.Builder = {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,2,1536]")
-    val names = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(subset)
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-
-    val b = core.Sessions.configure(
-      SparkSession.builder().master(master).appName("graft-cluster-check"),
-      shufflePartitions = 8)
+    b.master(master).config("spark.sql.shuffle.partitions", 8)
     if (master.startsWith("local-cluster")) {
       // executors are separate JVMs: they need the graft classes (same
       // host, so the driver's classpath resolves) and the JDK17 opens
@@ -139,22 +135,27 @@ object ClusterCheck {
       b.config("spark.executor.extraJavaOptions",
         graft.queries.MultiWriterChild.jdk17AddOpens.mkString(" "))
     }
-    val spark = b.getOrCreate()
+    b
+  }
+
+  private[graft] def run(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     spark.sparkContext.setLogLevel("ERROR")
-    try {
-      val results = names.map { name =>
-        val t0 = System.nanoTime()
-        val (rows, d) = digest(SparkEntry.queries(name)(spark, sfDir))
-        val sec = math.rint((System.nanoTime() - t0) / 1e6) / 1e3
-        System.err.println(s"[cluster-check] $name rows=$rows digest=$d ($sec s)")
-        s""""$name":{"rows":$rows,"digest":"$d","sec":$sec}"""
-      }
-      // executor liveness cross-check: a multi-process master that fell
-      // back to driver-only execution would make the parity vacuous
-      val execs = spark.sparkContext.statusTracker.getExecutorInfos.length
-      println(s"""{"master":"$master","sf":"$sfDir","executors":$execs,""" +
-        s""""results":{${results.mkString(",")}}}""")
-      System.out.flush()
-    } finally spark.stop()
+    val names = sys.env.get("SPARK_GRAFT_QUERIES")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(subset)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    val results = names.map { name =>
+      val t0 = System.nanoTime()
+      val (rows, d) = digest(SparkEntry.queries(name)(spark, sfDir))
+      val sec = math.rint((System.nanoTime() - t0) / 1e6) / 1e3
+      System.err.println(s"[cluster-check] $name rows=$rows digest=$d ($sec s)")
+      s""""$name":{"rows":$rows,"digest":"$d","sec":$sec}"""
+    }
+    // executor liveness cross-check: a multi-process master that fell
+    // back to driver-only execution would make the parity vacuous
+    val execs = spark.sparkContext.statusTracker.getExecutorInfos.length
+    println(s"""{"master":"${spark.sparkContext.master}","sf":"$sfDir","executors":$execs,""" +
+      s""""results":{${results.mkString(",")}}}""")
+    System.out.flush()
   }
 }

@@ -2,74 +2,22 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Single-query profiler: run one SparkEntry query at a scale dir,
-  * print cold + warm wall time and (optionally) the final executed
-  * plan. The fast feedback loop for chasing a per-query scale
-  * regression that Bench (all 67, warmup pass included) is too
-  * coarse for.
-  *
-  * Usage: graft.RunOne <sfDir> <queryName> [--explain] [--runs N]
+/** Single-query profiler (`graft.Harness run-one`): run one
+  * SparkEntry query at a scale dir, print cold + warm wall time and
+  * (optionally) the final executed plan. The fast feedback loop for
+  * chasing a per-query scale regression that Bench (all 102, warmup
+  * pass included) is too coarse for. Runs on the suite's session: a
+  * decade-scale isolated run must see Bench's input-sized shuffle
+  * partitions, not a cpu-pinned count (the r14 q43-sf100 lesson — 32
+  * reduce partitions for a 74.5 G-pair shuffle wedged for 24+ min).
   */
 object RunOne {
-  def main(args: Array[String]): Unit = {
-    // same collector shim as Bench: isolated runs stay same-config as
-    // the suite (allocation-bound — see Bench.reexecWithParallelGC)
-    if (Bench.reexecWithParallelGC("graft.RunOne", args)) return
-    val sfDir = args(0)
+  private[graft] def run(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val name = args(1)
     val explain = args.contains("--explain")
     val runs = args.sliding(2).collectFirst {
       case Array("--runs", n) => n.toInt }.getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same input-sized auto-scaling as Bench: a decade-scale isolated
-      // run must see the SUITE's config, not a cpu-pinned one (the r14
-      // q43-sf100 lesson — 32 reduce partitions for a 74.5 G-pair
-      // shuffle wedged for 24+ min until manually overridden)
-      .config("spark.sql.shuffle.partitions",
-        Bench.autoShufflePartitions(sfDir, cpus.toInt))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", Bench.autoSplitBytes(sfDir))
-    // same experiment hook as Bench
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("=")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (name == "--floor") {
-      // decompose the per-query fixed floor: steady-state wall for (a) a
-      // no-data action (pure plan+schedule+collect), (b) a one-shuffle
-      // agg over in-memory range, (c) a parquet scan+agg — each the
-      // minimal query of its plan class
-      def time(label: String)(f: => Unit): Unit = {
-        (1 to 3).foreach(_ => f) // warm: JIT + codegen cache
-        val t0 = System.nanoTime()
-        val n = 10
-        (1 to n).foreach(_ => f)
-        println(f"[floor] $label: ${(System.nanoTime() - t0) / 1e6 / n}%.1f ms/op")
-      }
-      // split the floor into its layers: a raw RDD job isolates
-      // scheduler+collect; a REUSED DataFrame isolates re-execution
-      // without fresh analysis; the fresh-DF forms add per-query
-      // planning (analysis + optimization + codegen-cache lookup)
-      val sc = spark.sparkContext
-      time("raw RDD job (1 partition)") { sc.parallelize(Seq(1), 1).count(): Unit }
-      val reused = spark.sql("SELECT 1")
-      time("select-1 REUSED df (no re-analysis)") { reused.count(): Unit }
-      time("select-1 (no data)") { spark.sql("SELECT 1").count(): Unit }
-      time("range-1M map agg (no shuffle)") {
-        spark.range(1000000).selectExpr("sum(id)").count(): Unit }
-      time("range-1M groupBy agg (one shuffle)") {
-        spark.range(1000000).selectExpr("id % 13 k", "id v")
-          .groupBy("k").sum("v").count(): Unit }
-      time("parquet scan+agg (nation)") {
-        spark.read.parquet(s"$sfDir/nation.parquet").groupBy("n_regionkey").count().count(): Unit }
-      spark.stop(); return
-    }
+    if (name == "--floor") return floor(spark, sfDir)
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
     var lastDf: org.apache.spark.sql.DataFrame = null
@@ -91,6 +39,36 @@ object RunOne {
       println(lastDf.queryExecution.executedPlan.toString)
       graft.core.Checkpoints.freeAll()
     }
-    spark.stop()
+  }
+
+  /** Decompose the per-query fixed floor: steady-state wall for (a) a
+    * no-data action (pure plan+schedule+collect), (b) a one-shuffle agg
+    * over an in-memory range, (c) a parquet scan+agg — each the minimal
+    * query of its plan class.
+    */
+  private def floor(spark: SparkSession, sfDir: String): Unit = {
+    def time(label: String)(f: => Unit): Unit = {
+      (1 to 3).foreach(_ => f) // warm: JIT + codegen cache
+      val t0 = System.nanoTime()
+      val n = 10
+      (1 to n).foreach(_ => f)
+      println(f"[floor] $label: ${(System.nanoTime() - t0) / 1e6 / n}%.1f ms/op")
+    }
+    // split the floor into its layers: a raw RDD job isolates
+    // scheduler+collect; a REUSED DataFrame isolates re-execution
+    // without fresh analysis; the fresh-DF forms add per-query
+    // planning (analysis + optimization + codegen-cache lookup)
+    val sc = spark.sparkContext
+    time("raw RDD job (1 partition)") { sc.parallelize(Seq(1), 1).count(): Unit }
+    val reused = spark.sql("SELECT 1")
+    time("select-1 REUSED df (no re-analysis)") { reused.count(): Unit }
+    time("select-1 (no data)") { spark.sql("SELECT 1").count(): Unit }
+    time("range-1M map agg (no shuffle)") {
+      spark.range(1000000).selectExpr("sum(id)").count(): Unit }
+    time("range-1M groupBy agg (one shuffle)") {
+      spark.range(1000000).selectExpr("id % 13 k", "id v")
+        .groupBy("k").sum("v").count(): Unit }
+    time("parquet scan+agg (nation)") {
+      spark.read.parquet(s"$sfDir/nation.parquet").groupBy("n_regionkey").count().count(): Unit }
   }
 }

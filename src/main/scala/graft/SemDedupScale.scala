@@ -7,29 +7,15 @@ import org.apache.spark.sql.functions._
   * PRODUCTION corpus-adaptive cluster count — the knob the q95 gate
   * pins to K=8 so its recursive-CTE oracle can replay. With adaptive K
   * the quadratic term Σ|cluster|² is ~n·targetClusterSize (linear in
-  * the corpus); with K pinned it is n²/K — this main measures both on
-  * the same data so the difference is recorded evidence, not a claim.
-  *
-  * Usage: graft.SemDedupScale <sfDir> [k|"auto"] [runs]
-  * Prints wall time, cluster count, and kept/dropped counts per run.
+  * the corpus); with K pinned it is n²/K — `graft.Harness
+  * sem-dedup-scale` measures both on the same data so the difference is
+  * recorded evidence, not a claim. Prints wall time, cluster count, and
+  * kept/dropped counts per run.
   */
 object SemDedupScale {
-  def main(args: Array[String]): Unit = {
-    // same collector shim as Bench/RunOne/SemIndexScale (see the r16
-    // 14.5× G1-churn measurement in SemIndexScale)
-    if (Bench.reexecWithParallelGC("graft.SemDedupScale", args)) return
-    val sfDir = args(0)
+  private[graft] def run(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val kArg = if (args.length > 1) args(1) else "auto"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val corpus = Tables.embeddings(spark, sfDir)
     val n = corpus.count()
     val k = if (kArg == "auto") llm.SemanticDedup.adaptiveK(n) else kArg.toInt
@@ -42,6 +28,5 @@ object SemDedupScale {
       println(f"[semdedup-scale] run $i: $sec%.2f s, total=${r.getLong(0)} dropped=${r.get(1)}")
       core.Checkpoints.freeAll()
     }
-    spark.stop()
   }
 }

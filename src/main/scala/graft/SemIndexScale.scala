@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * retraining at a maintenance window resets cluster sizes exactly
   * like q70's compaction resets small-files growth.
   *
-  * Usage: graft.SemIndexScale <sfDir> [batches] [root] [nProbe] —
+  * `graft.Harness sem-index-scale <sfDir> [batches] [root] [nProbe]`
   * prints k, per-cycle wall seconds, the final kept/dropped tally, and
   * two marginal-cycle probes (uniform vs concentrated batch). A `root`
   * argument persists the index there (and SKIPS the build when it
@@ -31,24 +31,9 @@ import org.apache.spark.sql.functions._
   * surfaces), the law stays linear.
   */
 object SemIndexScale {
-  def main(args: Array[String]): Unit = {
-    // same collector shim as Bench/RunOne — measured r16: the nProbe=2
-    // sf100 cycle 1 ran 663 s under default G1 vs 45.8 s under
-    // ParallelGC (14.5× — the q43 heap-churn pathology, not the plan)
-    if (Bench.reexecWithParallelGC("graft.SemIndexScale", args)) return
-    val sfDir = args(0)
+  private[graft] def run(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val batches = if (args.length > 1) args(1).toInt else 8
     val nProbe = if (args.length > 3) args(3).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", Bench.autoShufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.files.maxPartitionBytes", Bench.autoSplitBytes(sfDir))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val corpus = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val n = corpus.count()
@@ -113,6 +98,5 @@ object SemIndexScale {
     println(f"[semindex-scale] marginal single-cluster batch (dry-run): " +
       f"${(System.nanoTime() - tc) / 1e9}%.2f s ($rowsC affected-cluster rows)")
     core.Checkpoints.freeAll()
-    spark.stop()
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, Time
   * column exists — dl-datalake `storage/writer.py:162-164`; physical encoding
   * drifts with the writer): parquet TIMESTAMP(NANOS) arrives as a LONG of
   * epoch-nanoseconds via `spark.sql.legacy.parquet.nanosAsLong` (set once
-  * at session build — [[graft.core.Sessions.configure]]), while
+  * at session build — [[graft.core.Sessions.settings]]), while
   * TIMESTAMP(MICROS)/TIMESTAMP_NTZ (pandas-written) arrives as a timestamp
   * type. [[events]] normalizes both to the same canonical LONG epoch-ns
   * column so downstream µs arithmetic ([[nsToUs]]) is encoding-independent.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,19 +8,7 @@ object Verify {
     // optional trailing query names: dump only those (spot-checks at big
     // SFs where dumping every declared query is prohibitive). No names = all.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", Bench.autoShufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.ts is parquet TIMESTAMP(NANOS): read as LONG epoch-ns
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // sub-GB single-file inputs need small splits for local parallelism
-      // (see Bench.autoSplitBytes) — harness-local, not a library default
-      .config("spark.sql.files.maxPartitionBytes", Bench.autoSplitBytes(sfDir))
-      .getOrCreate()
+    val spark = core.Sessions.builder(core.Sessions.cpus(4), sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // 4 queries in flight: Spark schedules concurrent jobs fine, and the

@@ -37,7 +37,7 @@ import graft.storage.{LakeReader, LakeWriter, SeriesKey}
 object Main {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Main <lakeRoot> <command> [args...]")
-    val spark = Sessions.local(appName = s"graft-${args(1)}")
+    val spark = Sessions.builder(Runtime.getRuntime.availableProcessors).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, args) finally spark.stop()
   }

@@ -231,7 +231,10 @@ object IvfSearch {
                 catalog: Option[graft.catalog.ManifestCatalog] = None): String = {
     val dir = s"$root/ivf/$name/$version"
     centroids.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    index.write.mode("overwrite").partitionBy("cluster").parquet(s"$dir/index")
+    // static: a re-save replaces every cluster dir, also those the new
+    // index no longer has, whatever the session's overwrite mode
+    index.write.mode("overwrite").option("partitionOverwriteMode", "static")
+      .partitionBy("cluster").parquet(s"$dir/index")
     catalog.foreach(_.addEntry(graft.model.ManifestEntry(
       exchange = "", market = "", symbol = "", path = dir, `type` = name,
       time_from = 0L, time_to = 0L, version = version, checksum = "",

@@ -22,8 +22,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * the range are never listed or opened.
   *
   * Injected via [[GraftExtensions]]:
-  * `spark.sql.extensions=graft.plans.GraftExtensions`, or
-  * `Sessions.localWithExtensions`.
+  * `spark.sql.extensions=graft.plans.GraftExtensions` (as
+  * `graft.Harness bench-partitioned` sets it), or
+  * `Sessions.builder(cores).withExtensions(new GraftExtensions)`.
   */
 object TsPartitionPruning extends Rule[LogicalPlan] {
 

@@ -15,11 +15,11 @@ import graft.storage.{LakeReader, LakeWriter, SeriesKey}
   * §4): until now both month-pruning paths — the storage reader's
   * derived year/month bounds (`LakeReader.readRange`) and the
   * `TsPartitionPruning` optimizer rule — were spec- and bench-verified
-  * only (PushdownSpec, graft.BenchPartitioned). These two gates put each
-  * path under the driver's DuckDB hash-compare AND pin, inside the
-  * query itself, that the executed scan opened no more files than the
-  * target months hold — so a pruning regression is a red CORRECTNESS
-  * row, not a silent slowdown.
+  * only (PushdownSpec, `graft.Harness bench-partitioned`). These two
+  * gates put each path under the driver's DuckDB hash-compare AND pin,
+  * inside the query itself, that the executed scan opened no more files
+  * than the target months hold — so a pruning regression is a red
+  * CORRECTNESS row, not a silent slowdown.
   *
   * The reference DOCUMENTS date-dir pruning but never implements it
   * (`dl-datalake/src/dl_datalake/storage/reader.py:41-48` filters rows

@@ -37,8 +37,7 @@ object MultiWriterChild {
 
   def main(args: Array[String]): Unit = {
     val Array(lake, feedDir, symbol, endMs, reportPath, page, flush) = args
-    val s = graft.core.Sessions.local(cores = 4, shufflePartitions = Some(4),
-      appName = s"graft-mw-$symbol")
+    val s = graft.core.Sessions.builder(4).getOrCreate()
     try {
       val cat = new graft.catalog.ManifestCatalog(s, lake)
       val loader = new graft.ingest.IncrementalLoader(s,

@@ -33,7 +33,7 @@ class ClusterParitySpec extends AnyFunSuite {
       .orElse(Some("/opt/spark"))
       .filter(h => Files.exists(Paths.get(h, "bin", "spark-class")))
 
-  /** Runs ClusterCheck in a child JVM; returns (executors, per-query
+  /** Runs `graft.Harness cluster-check` in a child JVM; returns (executors, per-query
     * (rows, digest)).
     */
   private def runChild(master: String, home: Option[String],
@@ -44,7 +44,7 @@ class ClusterParitySpec extends AnyFunSuite {
     val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
     val cmd = Seq(javaBin) ++ graft.queries.MultiWriterChild.jdk17AddOpens ++ Seq(
       "-Xmx3g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", sys.props("java.class.path"), "graft.ClusterCheck")
+      "-cp", sys.props("java.class.path"), "graft.Harness", "cluster-check")
     val pb = new ProcessBuilder(cmd.asJava)
     pb.environment().put("SPARK_GRAFT_MASTER", master)
     pb.environment().put("SPARK_GRAFT_SF_DIR", sf)

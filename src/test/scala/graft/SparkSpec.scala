@@ -76,7 +76,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = Sessions.local(cores = 4, appName = "graft-test")
+    val s = Sessions.builder(4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -16,9 +16,7 @@ class SqlFunctionsSpec extends SparkSpec {
     val base = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = Sessions.configure(
-      SparkSession.builder().master("local[4]")
-        .withExtensions(new GraftExtensions), 4).getOrCreate()
+    val s2 = Sessions.builder(4).withExtensions(new GraftExtensions).getOrCreate()
     try f(s2) finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

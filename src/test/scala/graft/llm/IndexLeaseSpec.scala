@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
 object SemIndexRaceChild {
   def main(args: Array[String]): Unit = {
     val Array(root, dataDir, which, reportPath) = args
-    val s = graft.core.Sessions.local(cores = 4, shufflePartitions = Some(4),
-      appName = s"graft-semidx-race-$which")
+    val s = graft.core.Sessions.builder(4).getOrCreate()
     try {
       val corpus = graft.Tables.embeddings(s, dataDir)
         .select(col("vec_id"), col("embedding"))

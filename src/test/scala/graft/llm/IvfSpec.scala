@@ -81,4 +81,27 @@ class IvfSpec extends SparkSpec {
     // and it is discoverable like any versioned artifact
     assert(cat.latestVersion("doc_ann").contains("1"))
   }
+
+  test("re-saving a version with fewer clusters replaces the whole index") {
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select("vec_id", "embedding").cache()
+    val root = java.nio.file.Files.createTempDirectory("ivfresave").toString
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Int)] =
+      df.select("vec_id", "cluster").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    def save(k: Int): Set[(Long, Int)] = {
+      val centroids = IvfSearch.trainCentroids(emb, k = k, iters = 1)
+      val index = graft.core.Checkpoints.stable(IvfSearch.buildIndex(emb, centroids))
+      IvfSearch.saveIndex(root, "doc_ann", "1", centroids, index)
+      rows(index)
+    }
+    val wide = save(8)
+    assert(wide.map(_._2).size > 2, "premise: the first save has more clusters than the second")
+    val narrow = save(2)
+    // the partitioned overwrite must not leave the first save's other
+    // cluster=N directories behind, whatever the session's overwrite mode
+    val loaded = rows(IvfSearch.loadIndex(spark, root, "doc_ann", "1").index)
+    val replaced = loaded == narrow
+    assert(replaced, s"loadIndex holds ${loaded.size} rows in clusters " +
+      s"${loaded.map(_._2).toSeq.distinct.sorted}; the k = 2 save wrote ${narrow.size}")
+  }
 }

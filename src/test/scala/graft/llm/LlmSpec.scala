@@ -132,20 +132,28 @@ class LlmSpec extends SparkSpec {
   }
 
   test("simhashPairs: saturated bucket (> blockSize docs) matches the unchunked pair set") {
-    // 2500 docs drawn from 3 templates ⇒ every band bucket is hot and
-    // the adaptive block decomposition (blockSize=1024) engages with
-    // k>1; tails are mutated so hamming varies. Oracle: brute-force
-    // O(N²) pairs from the same fingerprints.
-    import org.apache.spark.sql.functions._
-    val base = Seq("alpha beta gamma delta", "alpha beta gamma zeta", "omega psi chi phi")
-    val corpus = docs((0 until 2500).map(i =>
-      (i.toLong, base(i % 3) + " tail" + (i % 7))): _*)
+    // 1100 docs whose band-0 byte is equal: one (band 0, key) bucket over
+    // blockSize = 1024 rows, so the pair join splits it into k = 2 blocks.
+    // Every true pair matches in band 0, its first matching band, so it is
+    // emitted from that bucket as a same-block or a cross-block pair. The
+    // other 24 bits are spread (three distinct tokens a doc), so few pairs
+    // are near-dups. Oracle: brute-force O(N²) pairs from the fingerprints.
+    val generated = spark.range(300000).select(col("id").as("doc_id"),
+      concat_ws(" ", concat(lit("t"), col("id")), concat(lit("u"), col("id") * 7919 % 1000003),
+        concat(lit("v"), col("id") * 104729 % 999983)).as("text"))
+    val band0 = Dedup.simhash(generated).select(col("doc_id"), (col("simhash") % 256).as("key"))
+    val hot = band0.groupBy("key").count().orderBy(desc("count"), col("key")).head()
+    assert(hot.getLong(1) >= 1100, s"premise: no band-0 bucket of 1100 docs ($hot)")
+    val corpus = docs(generated.join(band0.filter(col("key") === hot.getLong(0)), "doc_id")
+      .orderBy("doc_id").limit(1100).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq: _*)
     val fp = Dedup.simhash(corpus).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = (for {
       x <- fp.keys; y <- fp.keys if x < y
       h = java.lang.Long.bitCount(fp(x) ^ fp(y)) if h <= 3
     } yield (x, y, h.toLong)).toSet
+    assert(expected.nonEmpty, "premise: the bucket holds true pairs")
     val got = Dedup.simhashPairs(corpus).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).longValue)).toSet
     assert(got.size == expected.size && got == expected,

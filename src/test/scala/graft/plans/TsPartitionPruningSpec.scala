@@ -19,9 +19,7 @@ class TsPartitionPruningSpec extends SparkSpec {
     val base = spark // force shared context init
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = Sessions.configure(
-      SparkSession.builder().master("local[4]")
-        .withExtensions(new GraftExtensions), 4).getOrCreate()
+    val s2 = Sessions.builder(4).withExtensions(new GraftExtensions).getOrCreate()
     try {
       val root = tmpDir("lake")
       val writer = new LakeWriter(s2, root)
@@ -56,9 +54,7 @@ class TsPartitionPruningSpec extends SparkSpec {
     val base = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = Sessions.configure(
-      SparkSession.builder().master("local[4]")
-        .withExtensions(new GraftExtensions), 4).getOrCreate()
+    val s2 = Sessions.builder(4).withExtensions(new GraftExtensions).getOrCreate()
     try {
       import s2.implicits._
       // fiscal calendar: year/month are ts-month + 6 — a UTC-derived
@@ -93,9 +89,7 @@ class TsPartitionPruningSpec extends SparkSpec {
     val base = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = Sessions.configure(
-      SparkSession.builder().master("local[4]")
-        .withExtensions(new GraftExtensions), 4).getOrCreate()
+    val s2 = Sessions.builder(4).withExtensions(new GraftExtensions).getOrCreate()
     try {
       val root = tmpDir("lake")
       import s2.implicits._

@@ -18,8 +18,7 @@ import org.apache.spark.sql.streaming.Trigger
 object SemIndexMaintenanceChild {
   def main(args: Array[String]): Unit = {
     val Array(root, reportPath) = args
-    val s = graft.core.Sessions.local(cores = 4, shufflePartitions = Some(4),
-      appName = "graft-semidx-maint")
+    val s = graft.core.Sessions.builder(4).getOrCreate()
     try {
       val (b, a) = SemanticIndex.compact(s, root)
       SemanticIndex.retrain(s, root)

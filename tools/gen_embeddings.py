@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Embeddings-only slice of gen_sf.py (identical recipe, seed, and schema)
-for the ANN recall-law harness (graft.AnnRecallScale): sf10 = 200 k and
+for the ANN recall-law harness (graft.Harness ann-recall): sf10 = 200 k and
 sf100 = 2 M vectors without paying for the 600 M-row lineitem the full
 generator would also build at those scales.
 
